@@ -76,7 +76,7 @@ object EmbedDedupDiag {
       val (survivors, ccSec) = timed {
         val pairs = Similarity.embedNearDupPairs(big, "vec_id", "embedding", threshold = 0.45)
         Dedup.ccNearDedupRowsFromLabels(big, "vec_id",
-          Dedup.connectedComponentsStar(pairs)).count()
+          Dedup.connectedComponents(pairs)).count()
       }
       println(
         s"""{"replicas":$r,"n":$n,"rung":$d,"n_bands":$bands,""" +

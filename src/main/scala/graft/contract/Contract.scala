@@ -1862,16 +1862,16 @@ object Contract {
     ),
     Q(
       "q81_neardup_cc_star",
-      // q48's component survivor policy computed by LARGE-STAR/SMALL-STAR
-      // contraction (O(log n) rounds vs label propagation's O(diameter)) —
-      // same labels, same survivors, certified by q48's own recursive-CTE
-      // oracle
+      // q48's component survivor policy spelled through precomputed labels
+      // (`connectedComponents`, large-star/small-star contraction) and
+      // `ccNearDedupRowsFromLabels` — same survivors, certified by q48's
+      // own recursive-CTE oracle
       (s, d) => {
         import graft.operators.Dedup
         val docs  = Tables.documents(s, d)
         val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.8)
         Dedup
-          .ccNearDedupRowsFromLabels(docs, "doc_id", Dedup.connectedComponentsStar(pairs))
+          .ccNearDedupRowsFromLabels(docs, "doc_id", Dedup.connectedComponents(pairs))
           .select(col("doc_id"), col("lang"), col("source"))
       },
       Some(OracleSql.q48)
@@ -2106,9 +2106,9 @@ object Contract {
       // cliff at 20k→40k vectors), so this entry certifies exactly what a
       // user calling the API with defaults gets; the oracle replays the
       // ladder pick from COUNT(*). The pinned-width diagnostic twin is
-      // q174. The star CC's size-gated driver fallback handles the (tiny)
-      // mined graph; at corpus scale the distributed log-round contraction
-      // takes over.
+      // q174. connectedComponents' size-gated driver fallback handles the
+      // (tiny) mined graph; at corpus scale the distributed log-round
+      // contraction takes over.
       (s, d) => {
         import graft.operators.{Dedup, Similarity}
         val emb = Tables.embeddings(s, d)
@@ -2117,7 +2117,7 @@ object Contract {
         Dedup
           .ccNearDedupRowsFromLabels(
             emb, "vec_id",
-            Dedup.connectedComponentsStar(pairs))
+            Dedup.connectedComponents(pairs))
           .select(col("vec_id"))
       },
       Some(OracleSql.q91)
@@ -2916,7 +2916,7 @@ object Contract {
     Q(
       "q123_leakfree_split",
       // Leakage-free train/val/test assignment (Splits.leakFreeSplit):
-      // near-dup components (q32's exact pair graph -> label-prop CC)
+      // near-dup components (q32's exact pair graph -> connected components)
       // hash as a UNIT via their minimum-id representative, so no
       // near-duplicate pair ever straddles a split boundary. Oracle
       // replays the closure with a recursive CTE + the same hash rule.
@@ -3984,22 +3984,8 @@ object Contract {
         val pa  = s"$scratchRoot/ivf_merge_base_q168_$tok"
         val pb  = s"$scratchRoot/ivf_merge_other_q168_$tok"
         val pm  = s"$scratchRoot/ivf_merge_out_q168_$tok"
-        // r16 (guide §2.6 — overlap independent jobs): the two shard
-        // builds are independent write pipelines to disjoint paths; run
-        // them concurrently so the second build's stages back-fill the
-        // cores the first one's sequential write/commit steps leave idle.
-        // Results are unaffected — the merge below starts after both.
-        locally {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val wa = Future(
-            Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), pa, ncells = 8))
-          val wb = Future(
-            Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 =!= 0), pb, ncells = 5))
-          Await.result(wa, Duration.Inf)
-          Await.result(wb, Duration.Inf)
-        }
+        Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), pa, ncells = 8)
+        Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 =!= 0), pb, ncells = 5)
         Similarity.mergeIvfIndexes(s, pa, pb, pm)
         Similarity
           .searchIvfIndex(s, pm, emb.filter(col("vec_id") < 10), k = 5, nprobe = 8)
@@ -4200,7 +4186,7 @@ object Contract {
         Dedup
           .ccNearDedupRowsFromLabels(
             emb, "vec_id",
-            Dedup.connectedComponentsStar(pairs))
+            Dedup.connectedComponents(pairs))
           .select(col("vec_id"))
       },
       Some(OracleSql.q174)

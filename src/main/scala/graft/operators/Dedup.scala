@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.TextAnalysis
 import graft.functions.TextAnalysis.P
@@ -529,105 +530,11 @@ object Dedup {
       threshold: Double = 0.8): DataFrame =
     survivors(docs, idCol, jaccardPairs(docs, idCol, textCol, n, threshold))
 
-  /** Minimum-label CONNECTED COMPONENTS over an undirected pair graph:
-    * iterative label propagation — label(x) := min(label(x), min of
-    * neighbors' labels) — run to fixpoint (bounded by `maxIters`, converges
-    * in O(component diameter) rounds; corpus near-dup components are
-    * shallow). Each round is one edge-join + min-aggregate, shuffle volume
-    * ~ |edges|; every round's labels are eagerly localCheckpoint'd so the
-    * iterated plan stays flat (no exponential lineage) and the storage is
-    * GC-reclaimed. The O(log n) large-star/small-star variant is the drop-in
-    * evolution if diameters ever grow past tens.
-    *
-    * Output: (id, label) for every node appearing in `pairs`, label = the
-    * component's minimum id.
-    */
-  def connectedComponents(
-      pairs: DataFrame,
-      idA: String = "id_a",
-      idB: String = "id_b",
-      maxIters: Int = 25,
-      smallGraphThreshold: Long = 1L << 17): DataFrame = {
-    val edges = pairs
-      .select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .localCheckpoint(true) // reused every round: materialize once
-    // Size-gated driver fallback (r16 — the connectedComponentsStar posture
-    // extended to the propagation variant): a mined near-dup pair graph is
-    // tiny relative to its corpus, and below the threshold the iterative
-    // rounds (each an eager checkpoint + a convergence probe job) are pure
-    // per-job overhead. Union-find with path compression over the collected
-    // SYMMETRIC edge list (<= threshold rows of bounded driver memory)
-    // produces the identical min-label components; after symmetrization
-    // every node — including self-pair nodes — appears as an edge source,
-    // so labels cover exactly the node set the loop would emit.
-    if (edges.count() <= smallGraphThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ss = pairs.sparkSession
-      import ss.implicits._
-      return driverUnionFind(es).toSeq.toDF("id", "label")
-    }
-    var labels = edges
-      .select(col("src").as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    var iter      = 0
-    var converged = false
-    while (iter < maxIters && !converged) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("dlabel")).as("nmin"))
-      // change detection rides the SAME join (old label is right there) —
-      // the checkpoint materializes once and feeds both the convergence
-      // probe and the next round, replacing the former second join
-      val nextLabel = least(col("label"), coalesce(col("nmin"), col("label")))
-      val next = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"), nextLabel.as("label"), (nextLabel =!= col("label")).as("__chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("__chg")).limit(1).count()
-      labels = next.drop("__chg")
-      converged = changed == 0L
-      iter += 1
-    }
-    // silent partial labels would mean silently-wrong dedup downstream
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds — a component's " +
-          s"diameter exceeds maxIters; raise maxIters (rounds needed = max component diameter)")
-    labels
-  }
-
-  /** Driver-side union-find (path compression, min-id roots) over a
-    * collected edge list — the size-gated small-graph fallback shared by
-    * both connected-components variants. Returns (id -> component min)
-    * for every endpoint id appearing in `es`.
-    */
-  private def driverUnionFind(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x0: Long): Long = {
-      var x = x0
-      while (parent.getOrElse(x, x) != x) x = parent.getOrElse(x, x)
-      var y = x0
-      while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = x; y = n }
-      x
-    }
-    es.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    es.flatMap { case (a, b) => Seq(a, b) }.distinct.map(id => (id, find(id))).toSeq
-  }
-
-  /** Minimum-label connected components by LARGE-STAR / SMALL-STAR
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the O(log n)-round evolution of `connectedComponents`' label
-    * propagation, for graphs whose component DIAMETER is large (chains of
-    * near-dup docs): label propagation needs diameter rounds, star
-    * contraction collapses a path of length 2^r in r rounds.
+  /** Minimum-label CONNECTED COMPONENTS over an undirected pair graph by
+    * LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014): a path of length 2^r
+    * collapses in r rounds, so the round count grows with log(n), not with
+    * the component diameter (chains of near-dup docs need no special case).
     *
     *  - large-star: every node's larger neighbors re-attach to its minimum
     *    (min over N(u) and u itself);
@@ -635,29 +542,47 @@ object Dedup {
     *    minimum — together they monotonically contract each component onto
     *    its minimum id (a star), the fixpoint.
     *
-    * Each half-round is one aggregation + one join, shuffle ~ |edges|,
-    * checkpointed flat like the propagation loop. Output contract matches
-    * `connectedComponents`: (id, label) for every node in `pairs`, label =
-    * component minimum (roots label themselves).
+    * Each round is a few aggregations + joins, shuffle ~ |edges|,
+    * checkpointed flat; the fixpoint test is an edge checksum (count, sum of
+    * a per-edge hash), one aggregate job per round. A mined near-dup graph
+    * is usually tiny relative to its corpus (edges ∝ duplicate pairs, not
+    * documents), so below `smallGraphThreshold` the rounds are skipped for
+    * a driver union-find (`driverUnionFind`) that yields the identical
+    * labels.
+    *
+    * Id contract: `idA` and `idB` must be integral (Byte/Short/Int/Long);
+    * both are cast to long, so labels are always long. Any other type
+    * raises IllegalArgumentException before a Spark job runs.
+    *
+    * `smallGraphThreshold` is compared with the number of DISTINCT
+    * (idA, idB) rows after the cast, self-pairs included — exactly the rows
+    * the driver fallback collects. The gate is one aggregate job, and its
+    * result doubles as the distributed rounds' first fixpoint checksum, so
+    * neither side runs a separate count(); 0 forces the distributed rounds
+    * on any non-empty graph.
+    *
+    * Output: (id, label) for every node appearing in `pairs`, label = the
+    * component's minimum id. Throws IllegalStateException if the rounds do
+    * not reach the fixpoint within `maxIters` (~log2(n) are needed).
     */
-  def connectedComponentsStar(
+  def connectedComponents(
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIters: Int = 20,
+      maxIters: Int = 25,
       smallGraphThreshold: Long = 1L << 17): DataFrame = {
+    Seq(idA, idB).foreach { c =>
+      val t = pairs.select(col(c)).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"connectedComponents: id column '$c' must be integral (Byte/Short/Int/Long), got $t")
+    }
     // materialize the PAIR PROJECTION once, up front: nodes and edges both
     // derive from it, and without the cut each would re-execute the whole
-    // upstream miner (the LSH pipeline behind q91 ran 3x here — twice for
-    // the nodes union, once for edges). nodes itself stays lazy: single
-    // consumer, plain shuffle join, nothing to share.
+    // upstream miner (the LSH pipeline behind q91 ran 3x here)
     val raw = pairs
-      .select(col(idA).as("u"), col(idB).as("v"))
-      .localCheckpoint(true)
-    val nodes = raw
-      .select(col("u").as("id"))
-      .union(raw.select(col("v").as("id")))
+      .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
       .distinct()
+      .localCheckpoint(true)
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym
@@ -666,7 +591,7 @@ object Dedup {
         .select(col("u"), least(col("u"), col("mv")).as("m"))
       // no distinct here: duplicates are bounded (≤2x the symmetric edge
       // list) and the half-round that always follows ends in a distinct —
-      // one fewer shuffle per iteration
+      // one fewer shuffle per iteration. Self-pairs drop here (v > u).
       sym
         .join(mins, "u")
         .filter(col("v") > col("u"))
@@ -691,27 +616,14 @@ object Dedup {
         coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(P))), lit(0L)).as("h")).head()
       (r.getLong(0), r.getLong(1))
     }
-    var edges = raw
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-    var last = sig(edges)
-    // Size-gated driver fallback (the LocalRelation trick): a mined
-    // near-dup graph is usually TINY relative to its corpus — edges ∝
-    // duplicate pairs, not documents — and below the threshold the
-    // distributed rounds are pure per-job overhead. Union-find with path
-    // compression on the driver produces the identical min-label
-    // components in microseconds; bounded by `smallGraphThreshold` edges
-    // of driver memory. Above the threshold (or with threshold 0, as the
-    // log-round convergence tests force) the O(log n) star rounds run.
+    var last = sig(raw)
     if (last._1 <= smallGraphThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = raw.collect().map(r => (r.getLong(0), r.getLong(1)))
       val ss = pairs.sparkSession
       import ss.implicits._
-      return nodes
-        .join(driverUnionFind(es).toDF("id", "label"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+      return driverUnionFind(es).toDF("id", "label")
     }
+    var edges     = raw
     var iter      = 0
     var converged = false
     while (iter < maxIters && !converged) {
@@ -721,13 +633,38 @@ object Dedup {
       last = now
       iter += 1
     }
+    // silent partial labels would mean silently-wrong dedup downstream
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIters rounds (needs ~log2(n))")
-    // fixpoint is a star: (u -> component min) for non-roots; roots self-label
-    nodes
+        s"connectedComponents did not converge in $maxIters rounds (needs ~log2(n))")
+    // fixpoint is a star: (u -> component min) for non-roots; roots and
+    // self-pair-only nodes label themselves
+    raw.select(col("u").as("id"))
+      .union(raw.select(col("v").as("id")))
+      .distinct()
       .join(edges.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+  }
+
+  /** Driver-side union-find (path compression, min-id roots) over a
+    * collected edge list — `connectedComponents`' size-gated small-graph
+    * fallback. Returns (id -> component min) for every endpoint id
+    * appearing in `es`.
+    */
+  private def driverUnionFind(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.getOrElse(x, x) != x) x = parent.getOrElse(x, x)
+      var y = x0
+      while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = x; y = n }
+      x
+    }
+    es.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    es.flatMap { case (a, b) => Seq(a, b) }.distinct.map(id => (id, find(id))).toSeq
   }
 
   /** Near-dedup with the CONNECTED-COMPONENTS survivor policy: one survivor
@@ -736,17 +673,15 @@ object Dedup {
     * shapes like edges (1,3),(2,3) only: greedy keeps {1,2} (3 is the larger
     * id of every pair), components keep {1} (all three are one component).
     *
-    * NOTE: computing components is iterative — constructing the result runs
-    * Spark jobs (one join+agg round per propagation step), like the k-means
-    * refinement does.
+    * NOTE: computing components runs Spark jobs while the result is
+    * constructed (see `connectedComponents`), like the k-means refinement
+    * does.
     */
   def ccNearDedupRows(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
     ccNearDedupRowsFromLabels(docs, idCol, connectedComponents(pairs))
 
-  /** The same survivor cut from precomputed component labels — lets the
-    * caller pick the label algorithm (`connectedComponents` for shallow
-    * graphs, `connectedComponentsStar` for long chains) or reuse labels
-    * across several downstream cuts.
+  /** The same survivor cut from precomputed `connectedComponents` labels —
+    * lets the caller reuse one labelling across several downstream cuts.
     */
   def ccNearDedupRowsFromLabels(docs: DataFrame, idCol: String, labels: DataFrame): DataFrame = {
     val drops = labels

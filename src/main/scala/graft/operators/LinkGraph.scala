@@ -29,17 +29,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: each round is one join of edges to the score table on the
   * EDGE SOURCE (shuffle ∝ |edges|) and one partial-agg shuffle on the edge
-  * destination — the same O(iters × |edges|) posture as `Dedup`'s label
-  * propagation. r16: rounds compose LAZILY — the recurrence references the
+  * destination — O(iters × |edges|), the cost of any synchronous graph
+  * recurrence. r16: rounds compose LAZILY — the recurrence references the
   * previous round's frame exactly ONCE (the node list is a loop-invariant
   * checkpointed frame, not a re-projection of the score frame), so the plan
   * grows linearly and the whole loop executes as ONE job; lineage is
-  * truncated by an eager localCheckpoint every `ckptEvery` rounds (and at
-  * loop end). The former per-round eager checkpoint cost one driver job
-  * barrier + block materialization per round and bought nothing at any
-  * scale (measured: the barrier latency, not the compute, dominated the
-  * iterative family's bench cells). Node count never materializes on the
-  * driver.
+  * truncated by an eager localCheckpoint every `CkptEvery` rounds and at
+  * loop end (`lazyRounds`). The former per-round eager checkpoint cost one
+  * driver job barrier + block materialization per round and bought nothing
+  * at any scale (measured: the barrier latency, not the compute, dominated
+  * the iterative family's bench cells). Node count never materializes on
+  * the driver.
   */
 object LinkGraph {
 
@@ -56,22 +56,10 @@ object LinkGraph {
     * crawl-frontier / trusted-domain prioritization signal (TrustRank).
     * Same integer recurrence, so the unrolled oracle stays exact.
     *
-    * `prePartition` picks the loop-invariant edge frame's materialization:
-    * - false (default): eager localCheckpoint. Right when the node-score
-    *   frame fits the broadcast threshold — AQE turns every iteration's
-    *   e⋈scores join into a runtime broadcast and the edge frame streams
-    *   straight from its checkpoint blocks, no per-round exchange at all.
-    * - true: hash-repartition on src + persist. The 1000-executor posture
-    *   for graphs whose NODE frame is itself too big to broadcast: a
-    *   cached plan keeps its HashPartitioning visible to
-    *   EnsureRequirements (a checkpointed LogicalRDD reports
-    *   UnknownPartitioning under AQE), so each iteration's SMJ shuffles
-    *   only the node-sized scores frame — the edge frame, the dominant
-    *   cost, is shuffled exactly once up front. Loop-invariant + plain
-    *   shuffle-join consumers = the sanctioned persist case (no lineage
-    *   cut needed, no broadcast-consumer deadlock precondition).
-    * Both paths compute the identical integer recurrence
-    * (LinkGraphSpec certifies equality).
+    * The loop-invariant edge frame is an eager localCheckpoint: when the
+    * node-score frame fits the broadcast threshold, AQE turns every
+    * iteration's e⋈scores join into a runtime broadcast and the edge frame
+    * streams straight from its checkpoint blocks, no per-round exchange.
     */
   def propagate(
       edges: DataFrame,
@@ -80,24 +68,15 @@ object LinkGraph {
       iters: Int,
       dampingPct: Int = 85,
       scale: Long = 1000000000L,
-      seed: Option[Column] = None,
-      prePartition: Boolean = false,
-      ckptEvery: Int = 8): DataFrame = {
+      seed: Option[Column] = None): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
     // long-sum headroom: total mass is ~|nodes|*scale and a single hub can
     // receive a large share of it; keep |nodes|*scale under 2^62
-    val eProj = edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e =
-      if (prePartition)
-        eProj.repartition(col("src"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else eProj.localCheckpoint(true) // reused every round: materialize once
-    // derived from e: under prePartition the groupBy is shuffle-free and
-    // deg comes out co-partitioned on src for the fold-in join below
+      .localCheckpoint(true) // reused every round: materialize once
     val deg0 = e.groupBy("src").agg(count(lit(1)).as("__deg"))
     // r15 optimization: fold the loop-INVARIANT degree onto the edge frame
     // ONCE (one co-partitioned/hash-keyed join at setup) instead of
@@ -106,15 +85,9 @@ object LinkGraph {
     // e⋈deg is a row-preserving widening). Cost: +8 bytes per edge in the
     // materialized frame; the former separate deg materialization goes
     // away, so setup job count is unchanged.
-    val eDeg =
-      if (prePartition)
-        e.join(deg0, Seq("src"))
-          .select(col("src"), col("dst"), col("__deg"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else
-        e.join(deg0, Seq("src"))
-          .select(col("src"), col("dst"), col("__deg"))
-          .localCheckpoint(true)
+    val eDeg = e.join(deg0, Seq("src"))
+      .select(col("src"), col("dst"), col("__deg"))
+      .localCheckpoint(true)
     val base = (100L - dampingPct) * scale / 100L
     // per-node restart mass / initial charge: uniform, or seed-gated
     val baseCol  = seed.map(p => when(p, lit(base)).otherwise(lit(0L))).getOrElse(lit(base))
@@ -128,32 +101,18 @@ object LinkGraph {
       .union(e.select(col("dst").as("id")))
       .distinct()
       .localCheckpoint(true)
-    var scores    = nodes.select(col("id"), scoreCol.as("score"))
-    var iter      = 0
-    var sinceCkpt = 0
-    while (iter < iters) {
+    lazyRounds(nodes.select(col("id"), scoreCol.as("score")), iters) { scores =>
       val inMass = eDeg
         .join(scores.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), expr("score div __deg").as("__c"))
         .groupBy("id")
         .agg(sum(col("__c")).as("__m"))
-      scores = nodes
+      nodes
         .join(inMass, Seq("id"), "left")
         .select(col("id"),
           (baseCol + expr(s"$dampingPct * coalesce(__m, 0L) div 100"))
             .as("score"))
-      iter += 1
-      sinceCkpt += 1
-      if (sinceCkpt >= ckptEvery && iter < iters) {
-        scores = scores.localCheckpoint(true) // truncate lineage, keep going
-        sinceCkpt = 0
-      }
     }
-    scores = scores.localCheckpoint(true) // materialize the final round
-    // scores is materialized (eager checkpoint) — the cached edge frame is
-    // no longer reachable from the returned plan
-    if (prePartition) { eDeg.unpersist(false); e.unpersist(false) }
-    scores
   }
 
   /** HITS hub/authority scores (Kleinberg) — the bipartite companion to
@@ -174,39 +133,21 @@ object LinkGraph {
     * Per half-round: one shuffle join + one partial-agg on edges, a one-
     * row max broadcast, checkpointed flat. Output: id, hub, auth — both
     * in [0, scale], max node = scale.
-    *
-    * `prePartition` (see `propagate` for the full rationale): false =
-    * eager checkpoint, the local/broadcastable-node-frame path; true =
-    * the 1000-executor posture — the loop joins e on src (hub half) AND
-    * on dst (auth half), so carry the edge frame CACHED BOTH WAYS (space
-    * for shuffle, the right trade when the loop re-reads it 2×iters
-    * times); each half-round then shuffles only the node-sized score
-    * frame.
     */
   def hits(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      scale: Long = 1000000L,
-      prePartition: Boolean = false): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1, s"scale must be positive, got $scale")
-    val eProj = edges
+    val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val eSrc =
-      if (prePartition)
-        eProj.repartition(col("src"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else eProj.localCheckpoint(true)
-    val eDst =
-      if (prePartition)
-        eSrc.repartition(col("dst"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else eSrc
-    val nodes = eSrc
+      .localCheckpoint(true)
+    val nodes = e
       .select(col("src").as("id"))
-      .union(eSrc.select(col("dst").as("id")))
+      .union(e.select(col("dst").as("id")))
       .distinct()
       .localCheckpoint(true)
     // r15 optimization (half the eager jobs per half-round): checkpoint the
@@ -233,21 +174,18 @@ object LinkGraph {
     var auth = nodes.select(col("id"), lit(scale).as("auth"))
     var iter = 0
     while (iter < iters) {
-      val ar = eSrc
+      val ar = e
         .join(hub.select(col("id").as("src"), col("hub").as("__h")), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("__h")).as("__ar"))
       auth = norm(ar, "__ar", "auth")
-      val hr = eDst
+      val hr = e
         .join(auth.select(col("id").as("dst"), col("auth").as("__a")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(sum(col("__a")).as("__hr"))
       hub = norm(hr, "__hr", "hub")
       iter += 1
     }
-    // hub/auth are materialized (eager checkpoints) — the cached edge
-    // frames are no longer reachable from the returned plan
-    if (prePartition) { eDst.unpersist(false); eSrc.unpersist(false) }
     nodes.join(hub, Seq("id")).join(auth, Seq("id"))
   }
 
@@ -274,6 +212,10 @@ object LinkGraph {
     * `clust_x1e6 = (2 * tri * scale) div (deg * (deg - 1))` — all operands
     * non-negative longs, so Spark `div` mirrors DuckDB `//` exactly; nodes
     * with deg < 2 report 0.
+    *
+    * The result is materialized before returning (eager localCheckpoint,
+    * the `propagate` posture) so the cached oriented frame is released
+    * inside the call instead of staying pinned in the session's cache.
     */
   def triangles(
       edges: DataFrame,
@@ -351,7 +293,7 @@ object LinkGraph {
       .select(explode(array(col("ta"), col("tb"), col("tc"))).as("id"))
       .groupBy("id")
       .agg(count(lit(1)).as("tri"))
-    deg
+    val out = deg
       .join(perNode, Seq("id"), "left")
       .select(
         col("id"),
@@ -360,6 +302,9 @@ object LinkGraph {
         when(col("deg") >= 2,
           expr(s"(2 * coalesce(tri, 0L) * ${scale}L) div (deg * (deg - 1L))"))
           .otherwise(lit(0L)).as("clust_x1e6"))
+      .localCheckpoint(true)
+    oriented.unpersist(false)
+    out
   }
 
   /** Synchronous label propagation — community detection for corpus
@@ -389,9 +334,7 @@ object LinkGraph {
     * label frame is node-sized, the edge frame is checkpointed once up
     * front) + one (node, label) partial agg + one node partial agg.
     * iters·3 bounded shuffles total, the inherent cost of any synchronous
-    * graph recurrence (the `propagate` posture). `prePartition` = the
-    * 1000-executor trade: persist the edge frame pre-hashed on src so
-    * each round shuffles only the node-sized label frame.
+    * graph recurrence (the `propagate` posture).
     *
     * Output: id, label (the community representative after `iters`
     * rounds).
@@ -400,46 +343,47 @@ object LinkGraph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iters: Int,
-      prePartition: Boolean = false,
-      ckptEvery: Int = 8): DataFrame = {
+      iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
     val dir = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val symProj = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
-    val e =
-      if (prePartition)
-        symProj.repartition(col("src"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else symProj.localCheckpoint(true) // reused every round
+    val e = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
+      .localCheckpoint(true) // reused every round
     // after symmetrization every node appears as a src. r16: each round
     // references the previous round's frame exactly once (the e-join), so
-    // rounds compose LAZILY and the loop executes as one job; lineage is
-    // truncated every `ckptEvery` rounds (the `propagate` posture — the
+    // rounds compose lazily (`lazyRounds`, the `propagate` posture — the
     // former per-round eager checkpoint was pure driver-barrier latency).
-    var labels = e.select(col("src").as("id")).distinct()
+    val labels = e.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    var iter      = 0
-    var sinceCkpt = 0
-    while (iter < iters) {
-      labels = e
-        .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
+    lazyRounds(labels, iters) { prev =>
+      e.join(prev.select(col("id").as("src"), col("label")), Seq("src"))
         .groupBy(col("dst").as("id"), col("label"))
         .agg(count(lit(1)).as("__v"))
         .groupBy(col("id"))
         .agg(min(struct((-col("__v")).as("nv"), col("label").as("l"))).as("__w"))
         .select(col("id"), col("__w.l").as("label"))
-      iter += 1
-      sinceCkpt += 1
-      if (sinceCkpt >= ckptEvery && iter < iters) {
-        labels = labels.localCheckpoint(true)
-        sinceCkpt = 0
-      }
     }
-    labels = labels.localCheckpoint(true) // materialize the final round
-    if (prePartition) e.unpersist(false)
-    labels
+  }
+
+  /** Rounds between lineage cuts in `lazyRounds`. */
+  private val CkptEvery = 8
+
+  /** The loop posture of `propagate` and `labelPropagation`: apply `step`
+    * `iters` times, composing rounds lazily (each round references the
+    * previous frame exactly once, so the plan grows linearly and runs as
+    * one job), truncate lineage with an eager localCheckpoint every
+    * `CkptEvery` rounds, and materialize the final round. Fixed-round
+    * recurrences only: the cut points never change the integers.
+    */
+  private def lazyRounds(init: DataFrame, iters: Int)(step: DataFrame => DataFrame): DataFrame = {
+    var cur  = init
+    var iter = 0
+    while (iter < iters) {
+      cur = step(cur)
+      iter += 1
+      if (iter % CkptEvery == 0 && iter < iters) cur = cur.localCheckpoint(true)
+    }
+    cur.localCheckpoint(true)
   }
 }

@@ -71,28 +71,25 @@ class CheckpointSharingStressSpec extends AnyFunSuite with TimeLimits {
     }
   }
 
-  test("20x prePartition graph loops (persist + unpersist per call) never hang or leak cache") {
-    // the round-10 persist posture is a DIFFERENT sharing mechanism from
-    // the eager checkpoints this spec was built for: a lazy cached frame
-    // whose first materializer may be any of the loop's join threads.
-    // persist uses block-level locks (no RDDCheckpointData$ class lock),
-    // so this must be hang-free — loop it like the checkpoint shapes to
-    // keep that property pinned, and assert the per-call unpersist keeps
-    // the cache from accumulating across calls.
+  test("20x triangles (persist + unpersist per call) never hang or leak cache") {
+    // `triangles` caches its oriented edge frame — a DIFFERENT sharing
+    // mechanism from the eager checkpoints this spec was built for: a
+    // cached frame read by the wedge join's three legs. persist uses
+    // block-level locks (no RDDCheckpointData$ class lock), so this must
+    // be hang-free — loop it like the checkpoint shapes to keep that
+    // property pinned, and assert the per-call unpersist keeps the cache
+    // from accumulating across calls.
     failAfter(Span(10, Minutes)) {
       import spark.implicits._
       (1 to 20).foreach { i =>
         val edges = (1L to 120L).map(k => (k % (17 + i), (k * 7) % 23 + 1)).toDF("src", "dst")
-        val pr = LinkGraph.propagate(edges, "src", "dst", 2, prePartition = true)
-        assert(pr.count() > 0L)
-        val h = LinkGraph.hits(edges, "src", "dst", 2, prePartition = true)
-        assert(h.count() > 0L)
+        assert(LinkGraph.triangles(edges, "src", "dst").count() > 0L)
       }
       // count only the operator's persist() frames: localCheckpoint blocks
       // also show up in getPersistentRDDs but are reclaimed lazily by the
       // ContextCleaner on GC, not by the operator — they are not a leak.
       // unpersist(false) is async; poll until the removals drain (a real
-      // leak stays flat at ~4 per call = 80+, lag clears in seconds).
+      // leak stays flat at 1 per call = 20, lag clears in seconds).
       def operatorPersists(): Int = spark.sparkContext.getPersistentRDDs
         .values.count(r => !r.toString.contains("localCheckpoint"))
       val deadline = System.nanoTime() + 30L * 1000000000L

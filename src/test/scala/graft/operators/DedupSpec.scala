@@ -189,41 +189,47 @@ class DedupSpec extends AnyFunSuite {
     assert(gotSurvivors === allDocs -- expectDrops)
   }
 
-  test("connectedComponentsStar == label propagation; collapses a 64-chain within log rounds") {
+  test("connectedComponents collapses a 64-chain within log rounds; distributed == driver fallback") {
     import spark.implicits._
-    // star fixture from the propagation test
-    val pairs = Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-
-    // a 64-node PATH: diameter 63 — label propagation at maxIters=20 cannot
-    // finish, star contraction collapses it in ~log2(64) rounds
-    // (smallGraphThreshold = 0 forces the DISTRIBUTED rounds — the
-    // convergence claim is about them, not the driver fallback)
+    // a 64-node PATH: diameter 63 — star contraction collapses it in
+    // ~log2(64) rounds (smallGraphThreshold = 0 forces the DISTRIBUTED
+    // rounds — the convergence claim is about them, not the driver fallback)
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponentsStar(chain, maxIters = 10, smallGraphThreshold = 0)
+    val got = Dedup.connectedComponents(chain, maxIters = 10, smallGraphThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to 64L).map(_ -> 1L).toMap)
 
-    // random graph: DISTRIBUTED propagation (threshold 0 forces the loop —
-    // r16 gave connectedComponents the star variant's size-gated driver
-    // fallback, so the default path below the threshold is union-find),
-    // the driver fallback of each variant, and the distributed star all
-    // produce identical labels
+    // random graph with a self-pair-only node (99): the distributed rounds
+    // and the driver union-find give identical labels
     val rnd = new scala.util.Random(13)
     val edges = (1 to 120).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
+      .filter { case (a, b) => a != b } :+ ((99L, 99L))
     val df   = edges.toDF("id_a", "id_b")
-    val prop = Dedup.connectedComponents(df, smallGraphThreshold = 0)
+    val dist = Dedup.connectedComponents(df, smallGraphThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val propDrv = Dedup.connectedComponents(df)
+    val drv  = Dedup.connectedComponents(df)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.connectedComponentsStar(df, smallGraphThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val drv = Dedup.connectedComponentsStar(df)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dist === prop && drv === prop && propDrv === prop)
+    assert(dist === drv)
+    assert(dist(99L) === 99L)
+    assert(dist.keySet === edges.flatMap { case (a, b) => Seq(a, b) }.toSet)
+  }
+
+  test("connectedComponents id contract: int ids label like long ids; string ids are rejected") {
+    import spark.implicits._
+    val longs = Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    val ints  = longs.select(col("id_a").cast("int"), col("id_b").cast("int"))
+    def labels(df: org.apache.spark.sql.DataFrame, threshold: Long) =
+      Dedup.connectedComponents(df, smallGraphThreshold = threshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Seq(0L, 1L << 17).foreach { t =>
+      assert(labels(ints, t) === labels(longs, t), s"smallGraphThreshold=$t")
+    }
+    // rows that fail if ever computed: the type check must fire before
+    // any Spark job runs
+    val strs = spark.range(1).select(
+      lit("a").as("id_a"), raise_error(lit("pairs were evaluated")).cast("string").as("id_b"))
+    val e = intercept[IllegalArgumentException](Dedup.connectedComponents(strs))
+    assert(e.getMessage.contains("'id_a'") && e.getMessage.contains("StringType"), e.getMessage)
   }
 
   test("simHashWidePairs: 62-bit pigeonhole mining == brute force; buckets finer than 16-bit") {

@@ -29,6 +29,21 @@ class LinkGraphSpec extends AnyFunSuite {
     score
   }
 
+  /** Deterministic LPA re-spelled imperatively: symmetrized self-loop-free
+    * edge list, synchronous rounds, most votes wins, ties to the min label. */
+  private def lpaReference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val dir = edges.filter { case (a, b) => a != b }
+    val sym = dir ++ dir.map(_.swap)
+    var label = sym.map(_._1).distinct.map(n => n -> n).toMap
+    (1 to iters).foreach { _ =>
+      label = sym.groupBy(_._2).map { case (v, in) =>
+        val votes = in.groupBy(e => label(e._1)).toSeq.map { case (l, es) => (l, es.size) }
+        v -> votes.minBy { case (l, n) => (-n, l) }._1
+      }
+    }
+    label
+  }
+
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
     LinkGraph.propagate(edges.toDF("src", "dst"), "src", "dst", iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -54,25 +69,16 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(run(edges, 0).values.toSet === Set(1000000000L))
   }
 
-  test("ckptEvery cadence does not change the recurrence (propagate + LPA)") {
-    // r16 made loop rounds compose lazily with lineage truncation every
-    // ckptEvery rounds; every cadence must compute identical integers
+  test("rounds across the fixed checkpoint cadence match the imperative references (propagate + LPA)") {
+    // rounds compose lazily with a lineage cut every 8 rounds; 8, 9 and 17
+    // rounds end on, just past and two cuts past that boundary
     val edges = (1L to 200L).map(i => (i, i * 7 % 97 + 1))
-    val df    = edges.toDF("src", "dst")
-    val base = LinkGraph.propagate(df, "src", "dst", 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Seq(1, 2, 3).foreach { k =>
-      val got = LinkGraph.propagate(df, "src", "dst", 5, ckptEvery = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === base, s"ckptEvery=$k")
+    Seq(8, 9, 17).foreach { iters =>
+      assert(run(edges, iters) === reference(edges, iters), s"iters=$iters")
     }
-    val lpaBase = LinkGraph.labelPropagation(df, "src", "dst", 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Seq(1, 2).foreach { k =>
-      val got = LinkGraph.labelPropagation(df, "src", "dst", 4, ckptEvery = k)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got === lpaBase, s"lpa ckptEvery=$k")
-    }
+    val lpa = LinkGraph.labelPropagation(edges.toDF("src", "dst"), "src", "dst", 9)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lpa === lpaReference(edges, 9))
   }
 
   test("damping=100 on a 2-cycle conserves each node's mass exactly") {
@@ -150,27 +156,9 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(a === b)
   }
 
-  test("prePartition=true computes the identical recurrence (propagate, PPR, hits)") {
-    import spark.implicits._
-    val edges = (1L to 300L).map(i => (i % 29, (i * 11) % 31 + 1)).toDF("src", "dst")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(
-      rows(LinkGraph.propagate(edges, "src", "dst", 3, prePartition = true)) ===
-        rows(LinkGraph.propagate(edges, "src", "dst", 3)))
-    assert(
-      rows(LinkGraph.propagate(edges, "src", "dst", 3,
-        seed = Some(col("id") % 5 === 0), prePartition = true)) ===
-        rows(LinkGraph.propagate(edges, "src", "dst", 3,
-          seed = Some(col("id") % 5 === 0))))
-    assert(
-      rows(LinkGraph.hits(edges, "src", "dst", 2, prePartition = true)) ===
-        rows(LinkGraph.hits(edges, "src", "dst", 2)))
-  }
-
   test("cached repartition(col) partitioning is reused: probe join shuffles only the probe side") {
-    // the planner law the prePartition posture rests on: a plain-shuffle
-    // join against a repartition(col)+persist frame must not re-exchange
+    // the planner law `triangles`' exchange-free wedge join rests on: a
+    // plain-shuffle join against a repartition(col)+persist frame must not re-exchange
     // the cached side (a checkpointed frame would — LogicalRDD reports
     // UnknownPartitioning under AQE). Broadcast disabled so the shuffle
     // structure is visible.
@@ -222,11 +210,6 @@ class LinkGraphSpec extends AnyFunSuite {
     val got = LinkGraph.labelPropagation(edges, "src", "dst", iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 3L, 11L -> 3L, 12L -> 3L))
-    // prePartition (the 1000-executor edge-cache posture) computes the
-    // identical recurrence
-    val pp = LinkGraph.labelPropagation(edges, "src", "dst", iters = 3, prePartition = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pp === got)
   }
 
   test("labelPropagation: multi-edges vote multiply, ties break to min label, self-loops dropped") {
