@@ -12,7 +12,10 @@ import java.nio.file.{Files, Paths}
   * names given). The plan is the pre-execution formatted plan with
   * GraftExtensions active (same rules as the shipped engine); AQE leaves
   * `AdaptiveSparkPlan isFinalPlan=false` wrappers — Exchange placement,
-  * join strategy and PushedFilters/ReadSchema are all visible.
+  * join strategy and PushedFilters/ReadSchema are all visible. Exchange
+  * and join-shape counts are a grep over the files, e.g.
+  *
+  *   grep -c '^Arguments: hashpartitioning' <outDir>/<query>_<suffix>.txt
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,9 +27,8 @@ object PlanDump {
       if (args.length > 3) args.drop(3).toSeq
       else contract.Contract.all.map(_.name)
     Files.createDirectories(outDir)
-    val spark = graft.core.GraftSession.local("8")
+    val spark = Measure.session()
     spark.sparkContext.setLogLevel("ERROR")
-    Bench.quietBenignNoise()
     names.foreach { n =>
       val q = contract.Contract.byName.getOrElse(n, sys.error(s"unknown query: $n"))
       try {

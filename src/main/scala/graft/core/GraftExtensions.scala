@@ -141,9 +141,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.size == 2, "random_project takes (embedding, outDim)")
         RandomProjectExpr(children.head, intArg("random_project", "outDim", children(1)))
       }))
-    // interval-join rescue (OFF unless spark.graft.rangejoin.bucketWidth is
-    // set): rewrites BETWEEN-only joins to the bucketed equi-join form
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
     // ON by default (spark.graft.hoistLambdaInvariants=false to disable):
     // hoists lambda-invariant tokenize/shingle chains out of HOF bodies —
     // the O(len²)-per-row interpreted re-evaluation class

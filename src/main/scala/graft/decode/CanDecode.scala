@@ -3,20 +3,22 @@ package graft.decode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Spark read path for CANServer-v2 logs: binaryFile scan -> per-file
-  * tokenizer flatMap -> columnar decode.
+/** Spark read path for CANServer-v2 logs: DSv2 `canserver` scan ->
+  * columnar decode.
   *
-  * The object boundary is contained to the single tokenizer `flatMap`
-  * (SURVEY §4.4): downstream of `records` everything is DataFrame columns in
+  * The object boundary is contained to the tokenizer inside the scan
+  * (SURVEY §4.4): downstream of it everything is DataFrame columns in
   * whole-stage codegen. Files parallelize across executors; within a file the
   * scan is sequential by construction (running sync-time state), matching the
   * reference's one-Lambda-per-object model (reference serverless.yml:79-83)
-  * with Spark tasks as the unit of parallelism.
+  * with Spark tasks as the unit of parallelism. `records` is the plain
+  * binaryFile + tokenizer formulation of the same scan, kept as the
+  * reference the DSv2 source is checked against.
   */
 object CanDecode {
 
-  /** The one binaryFile scan both the decode path and the health census use
-    * — a single definition so they can never scan different file sets.
+  /** The one binaryFile scan both `records` and the health census use — a
+    * single definition so they can never scan different file sets.
     */
   private def binaryFiles(spark: SparkSession, path: String): Dataset[(String, Array[Byte])] = {
     import spark.implicits._
@@ -34,24 +36,15 @@ object CanDecode {
     binaryFiles(spark, path).flatMap { case (p, bytes) => CanserverTokenizer.tokenize(bytes, p) }
   }
 
-  /** Wide per-frame decode: one row per decoded frame with its channel's
-    * signal columns populated and the rest null (the pivot stage then merges
-    * frames sharing a timestamp — reference parse_canserver_filtered_log.py:268-289).
-    *
-    * Column set mirrors the reference's 14-column wide row (:141-142) minus
-    * the constant unit strings, which are attached at the JSON edge.
-    */
-  def decode(records: Dataset[CanRecord]): DataFrame =
-    decodeRaw(records.select(
-      col("path"),
-      col("frameId").as("frame_id"),
-      col("busId").as("bus_id"),
-      col("payloadLong").as("payload_long"),
-      col("frameTimeMicros").as("frame_time_micros")))
-
-  /** Decode over the snake-case record surface (what the DSv2 `canserver`
-    * format scans). The frame-id filter sits directly above the scan so the
-    * DSv2 path pushes it into the tokenize loop.
+  /** Wide per-frame decode over the snake-case record surface (what the
+    * DSv2 `canserver` format scans): one row per decoded frame with its
+    * channel's signal columns populated and the rest null (the pivot stage
+    * then merges frames sharing a timestamp — reference
+    * parse_canserver_filtered_log.py:268-289). The column set mirrors the
+    * reference's 14-column wide row (:141-142) minus the constant unit
+    * strings, which are attached at the JSON edge. The frame-id filter sits
+    * directly above the scan so the DSv2 path pushes it into the tokenize
+    * loop.
     */
   def decodeRaw(recs: DataFrame): DataFrame = {
     import CanExpressions._
@@ -80,25 +73,10 @@ object CanDecode {
         when(col("frame_id") === CanCodec.FrameAp, apStateName(pay)).as("ap_status"))
   }
 
-  /** THE batch decode entry point — the DSv2 `canserver` scan (chunked
-    * bounded-memory reads, frame-id filter pushed into the tokenize loop,
-    * ~3x faster than the binaryFile+flatMap path it replaced as default).
+  /** THE batch decode entry point: the DSv2 `canserver` scan (chunked
+    * bounded-memory reads, frame-id filter pushed into the tokenize loop).
     */
   def decodeFiles(spark: SparkSession, path: String): DataFrame =
-    decodeFilesV2(spark, path)
-
-  /** binaryFile + typed-flatMap decode path: same records through the
-    * whole-file tokenizer and an Encoder boundary. Kept as the
-    * cross-checkable second formulation (CanserverDataSourceSpec asserts
-    * equivalence) and for contexts without the DSv2 format registration.
-    */
-  def decodeFilesFlatMap(spark: SparkSession, path: String): DataFrame =
-    decode(records(spark, path))
-
-  /** DSv2 path: format("canserver") scan with the frame-id filter pushed
-    * into the tokenizer — what `decodeFiles` runs.
-    */
-  def decodeFilesV2(spark: SparkSession, path: String): DataFrame =
     decodeRaw(spark.read.format("canserver").load(path))
 
   /** Per-file framing health (the bad-record channel): what each file's

@@ -25,7 +25,7 @@ object CanPipelines {
     * source frame in well-formed logs, so `first` is deterministic; on
     * duplicates the reference keeps the LAST frame — a documented divergence.
     *
-    * Input: CanDecode.decode output. One shuffle on epoch_sec; partial
+    * Input: CanDecode.decodeFiles output. One shuffle on epoch_sec; partial
     * aggregation makes the map-side combine absorb the per-file fan-in.
     */
   def pivot(decoded: DataFrame): DataFrame = {

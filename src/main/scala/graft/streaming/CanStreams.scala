@@ -61,7 +61,7 @@ object CanStreams {
       .flatMap { case (p, bytes) => CanserverTokenizer.tokenize(bytes, p) }
   }
 
-  /** Decoded signal stream (same columns as the batch CanDecode.decode),
+  /** Decoded signal stream (same columns as the batch CanDecode.decodeFiles),
     * read through the DSv2 `canserver` micro-batch stream — the same
     * chunked tokenizer + pushed frame-id filter as the batch scan (~3x the
     * throughput of the binaryFile+flatMap path, which `recordStream` keeps

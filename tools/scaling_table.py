@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Render the README scaling-curve table from a curve artifact.
 
-The artifact is one JSON line per replica count — written either by
-graft.Soak with SPARK_GRAFT_SOAK_CURVE (one number per query cell) or by
-graft.Repeat with SPARK_GRAFT_REPEAT_CURVE (round 15: a repeat record per
-cell: {"times":[...],"min":m,"med":d,"max":x}). This script is the single
+The artifact is one JSON line per replica count, written by graft.Repeat
+with SPARK_GRAFT_REPEAT_CURVE: a repeat record per cell,
+{"times":[...],"min":m,"med":d,"max":x,...}. Older committed points
+(soak_scaling.json) carry one number per cell; both render. This script is the single
 source of the README's markdown table, so the prose can never drift from
 the measurement. Repeat cells render as "min (med)" — the min is the
 least-contended observable the noise-envelope finding argues from, the
