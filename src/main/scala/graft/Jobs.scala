@@ -31,7 +31,7 @@ object Jobs {
         rawDir,
         s"$workDir/landing",
         s"$workDir/ckpt/parse",
-        landingJsonDir = Some(s"$workDir/landing_json"))
+        s"$workDir/landing_json")
       .awaitTermination()
 
   def infer(spark: org.apache.spark.sql.SparkSession, workDir: String): Unit = {

@@ -1068,7 +1068,7 @@ object Contract {
     Q(
       "q41_session_window",
       // Batch session_window — the built-in gap-merge form of the stationary
-      // sessionizer (streaming twin in CanStreams.stationarySessionStream).
+      // sessionizer.
       // Cross-engine exactness: sessions computed on exact µs integers
       // (ts_ns div 1000) in both engines; a gap == 30 s starts a NEW session
       // in both (Spark merges only on strict overlap of [ts, ts+gap)).
@@ -5201,15 +5201,12 @@ object Contract {
     Q(
       "q217_contamination_gated_ingest",
       // the measurement→action loop closed for EMBEDDINGS (round 15, the
-      // q201/runIngestNbGated pattern applied to the semantic tier): q209
-      // MEASURES contamination; this is the shipping path that ACTS on
-      // it — the batch form of EmbedStreams.runContaminationGatedIngest:
-      // raw vectors gated against the frozen eval release (every 37th
-      // vector, the q209 split), only clean rows admitted, landed by the
-      // ingest's 8-way hash shard (the stream's MergeSink partitioning).
-      // Plan: the q209 broadcast-eval pass + a pure shard projection —
-      // no new shuffle shapes; the streaming twin is spec-certified
-      // batch ≡ stream (EmbedStreamsSpec).
+      // q201 pattern applied to the semantic tier): q209 MEASURES
+      // contamination; this is the shipping path that ACTS on it: raw
+      // vectors gated against the frozen eval release (every 37th vector,
+      // the q209 split), only clean rows admitted, landed by an 8-way hash
+      // shard. Plan: the q209 broadcast-eval pass + a pure shard
+      // projection — no new shuffle shapes.
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val gate = Similarity.embedContamination(

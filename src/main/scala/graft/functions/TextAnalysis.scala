@@ -40,79 +40,12 @@ object TextAnalysis {
     * real-tokenizer upgrade of `bpeishCount` for when token budgets must
     * match a production vocabulary. The merge table rides inside the
     * expression (one executor-side map, no shuffle); see BpeEncodeExpr for
-    * semantics and the per-word cost bound.
+    * semantics and the per-word cost bound. `Bpe.train(..., endOfWord =
+    * false)` learns a table in this convention.
     */
   def bpeTokens(text: Column, merges: Seq[(String, String)]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(BpeEncodeExpr(ColumnBridge.expression(text), merges))
-  }
-
-  def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    size(bpeTokens(text, merges))
-
-  /** Train a BPE merge list on a DRIVER-SIDE SAMPLE of the corpus (the
-    * pqCodebooks pattern: sampling keeps training one bounded collect
-    * instead of numMerges full-corpus aggregation rounds; the sample is
-    * chosen by xxhash64 of the text, so it is deterministic across
-    * partitioning and engines). Classic greedy training: count adjacent
-    * symbol pairs across all sample words, merge the most frequent
-    * (ties: lexicographic, for determinism), repeat.
-    */
-  def trainBpeMerges(
-      docs: org.apache.spark.sql.DataFrame,
-      textCol: String,
-      numMerges: Int,
-      sampleN: Int = 1000): Seq[(String, String)] = {
-    require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    require(sampleN >= 1, s"sampleN must be >= 1, got $sampleN")
-    val sample: Seq[String] = docs
-      .filter(col(textCol).isNotNull)
-      .select(col(textCol).as("t"))
-      .orderBy(xxhash64(col("t")), col("t"))
-      .limit(sampleN)
-      .collect()
-      .map(_.getString(0))
-      .toSeq
-    // word -> count, each word as its codepoint symbols
-    val words = scala.collection.mutable.HashMap.empty[List[String], Long]
-    sample.foreach { t =>
-      t.split(" ", -1).foreach { w =>
-        if (w.nonEmpty) {
-          val syms = w.codePoints().toArray.toList.map(cp => new String(Character.toChars(cp)))
-          words(syms) = words.getOrElse(syms, 0L) + 1L
-        }
-      }
-    }
-    val merges = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    var table  = words.toMap
-    var round  = 0
-    var stop   = false
-    while (round < numMerges && !stop) {
-      val pairCounts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      table.foreach { case (syms, cnt) =>
-        syms.zip(syms.tail).foreach { p =>
-          pairCounts(p) = pairCounts.getOrElse(p, 0L) + cnt
-        }
-      }
-      if (pairCounts.isEmpty) stop = true
-      else {
-        val (best, _) = pairCounts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
-        merges += best
-        val merged = best._1 + best._2
-        table = table.map { case (syms, cnt) =>
-          val out = scala.collection.mutable.ListBuffer.empty[String]
-          var i   = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == best._1 && syms(i + 1) == best._2) {
-              out += merged; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          out.toList -> cnt
-        }.groupMapReduce(_._1)(_._2)(_ + _)
-        round += 1
-      }
-    }
-    merges.toList
   }
 
   /** Punctuation characters / total characters; NULL for empty text — the

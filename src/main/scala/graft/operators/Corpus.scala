@@ -694,56 +694,6 @@ object Corpus {
       .agg(count(lit(1)).as("vocab_used"), sum(term).as("chi2_q"))
   }
 
-  /** Frozen token BASELINE for drift monitoring: the reference corpus's
-    * token census (token, ct) persisted once — the lexical analogue of
-    * `writeUnigramModel`'s frozen posture, consumed by
-    * `divergenceAgainstBaseline` / `CorpusStreams.runDriftMonitor`.
-    */
-  def writeTokenBaseline(docs: DataFrame, textCol: String, dir: String): Unit =
-    graft.operators.Dedup
-      .spread(docs)
-      .select(explode(split(col(textCol), " ")).as("token"))
-      .groupBy(col("token"))
-      .agg(count(lit(1)).as("ct"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Per-group χ² divergence of `batch` against a FROZEN baseline census
-    * (`writeTokenBaseline`): the same observed-support statistic as
-    * `chiSquareDivergence`, but with expected proportions from the
-    * baseline instead of the batch itself — so a batch that matches the
-    * reference distribution scores 0 and a drifted one spikes, regardless
-    * of batch size mix. Tokens the baseline never saw take a pseudo-count
-    * of 1 (+1 floor): novel vocabulary must RAISE the alarm — an inner
-    * join would undercount drift exactly when it is novel-token-shaped.
-    *
-    * Same scale shape as chiSquareDivergence; the baseline is vocab-sized
-    * and joins on the token key. Output: groupCol, vocab_used, chi2_q.
-    */
-  def divergenceAgainstBaseline(
-      batch: DataFrame,
-      groupCol: String,
-      textCol: String,
-      baseline: DataFrame): DataFrame = {
-    val oc = graft.operators.Dedup
-      .spread(batch)
-      .select(col(groupCol), explode(split(col(textCol), " ")).as("token"))
-      .groupBy(col(groupCol), col("token"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint(true)
-    val ts = oc.groupBy(col(groupCol)).agg(sum(col("o")).as("ts"))
-    val ta = baseline.agg(sum(col("ct")).as("ta"))
-    val d  = (col("o") * col("ta") - col("ct") * col("ts")).cast("double")
-    val term = round(
-      lit(1000000.0) * (d * d) / (col("ct").cast("double") * col("ts") * col("ta")))
-      .cast("long")
-    oc.join(baseline.select(col("token"), col("ct")), Seq("token"), "left")
-      .withColumn("ct", coalesce(col("ct"), lit(1L)))
-      .join(ts, Seq(groupCol))
-      .crossJoin(broadcast(ta))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("vocab_used"), sum(term).as("chi2_q"))
-  }
-
   /** Collocation mining by LIFT: bigrams occurring at least `minSupport`
     * times, scored lift = p(w1,w2) / (p(w1·)·p(·w2)) = c12·N / (c1s·c2e)
     * and cut to the global top-`k` — the PMI-family collocation extractor
@@ -1249,52 +1199,6 @@ object Corpus {
         e.getField("entropy_x1e6").as("entropy_x1e6"))
   }
 
-  /** Persist the unigram model `unigramLogProb` derives on the fly: the
-    * (term, tf) table, parquet at `dir`. Train once on a reference corpus,
-    * then score any OTHER corpus (or stream drain) against it with
-    * `scoreAgainstModel` — the frozen-model split that streaming ingestion
-    * needs (per-batch re-estimation would let one junk-heavy drain redefine
-    * "normal").
-    */
-  def writeUnigramModel(docs: DataFrame, textCol: String, dir: String): Unit = {
-    docs
-      .select(explode(split(col(textCol), " ")).as("term"))
-      .groupBy(col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .write.mode("overwrite").parquet(dir)
-    ()
-  }
-
-  /** Score documents against a FROZEN unigram model (see
-    * `writeUnigramModel`): same add-one smoothing as `unigramLogProb`,
-    * except unseen terms take tf = 0 (the model's vocabulary is fixed, so
-    * out-of-vocabulary tokens get the floor probability 1/(total+vocab) —
-    * exactly what makes gibberish score low against a clean reference).
-    * LEFT join on term keeps every token; the model never broadcasts.
-    *
-    * Output: idCol, n_tokens, avg_logp.
-    */
-  def scoreAgainstModel(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      modelTf: DataFrame): DataFrame = {
-    val toks  = docs.select(col(idCol), explode(split(col(textCol), " ")).as("term"))
-    val stats = modelTf.agg(
-      sum(col("tf")).as("__total"),
-      count(lit(1)).as("__vocab"))
-    toks
-      .join(modelTf.select(col("term"), col("tf").as("__tf")), Seq("term"), "left_outer")
-      .crossJoin(broadcast(stats))
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        avg(log(
-          (coalesce(col("__tf"), lit(0L)).cast("double") + 1.0) /
-            (col("__total").cast("double") + col("__vocab").cast("double"))))
-          .as("avg_logp"))
-  }
-
   /** Per-source token-budget mixture selection — the pretraining-mixture
     * construction step: each source keeps its highest-`scoreCol` documents
     * until that SOURCE's token budget is filled (greedy, exact cut on the
@@ -1584,9 +1488,7 @@ object Corpus {
     * Ingest posture: one fold per DRAINED wave (the drain-then-fold rule
     * every rank-based stage follows). The fold is additive, NOT
     * idempotent — do not call it from a foreachBatch sink, where
-    * at-least-once replay would double-count a micro-batch; a streaming
-    * ingest should write batch_id-keyed delta rows (the
-    * `CorpusStreams.runTokenCms` pattern) and fold at drain.
+    * at-least-once replay would double-count a micro-batch.
     */
   def updateGramCounts(
       newDocs: DataFrame,
@@ -1604,11 +1506,9 @@ object Corpus {
     // CountMin.updateStore rule: the set-aside IS the store)
     if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
       throw new java.io.IOException(s"updateGramCounts: cannot restore $trash to $live")
-    val delta = gramTable(newDocs, idCol, textCol, k)
-      .groupBy(col("__gh").as("gh"))
-      .agg(count(lit(1)).as("c"))
+    val delta = gramCountDelta(newDocs, idCol, textCol, k)
     val merged =
-      if (!fs.exists(live)) delta.select(lit(k).as("k"), col("gh"), col("c"))
+      if (!fs.exists(live)) delta
       else {
         val stored = spark.read.parquet(path)
         // a ZERO-ROW store is legal (every folded doc shorter than k) and
@@ -1619,7 +1519,7 @@ object Corpus {
           s"updateGramCounts: store at $path was built with k=$sk, fold passed k=$k " +
             "(k is store identity — rebuild with writeGramCounts to change it)"))
         stored.select(col("gh"), col("c"))
-          .unionByName(delta)
+          .unionByName(delta.select(col("gh"), col("c")))
           .groupBy(col("gh"))
           .agg(sum(col("c")).as("c"))
           .select(lit(k).as("k"), col("gh"), col("c"))
@@ -1670,9 +1570,8 @@ object Corpus {
   }
 
   /** Frame-taking core of `duplicatedSpansAgainstCounts`: mine `docs`
-    * against ANY gh-UNIQUE (k, gh, c) counts frame — the persisted batch
-    * store, a streaming store fold (`CorpusStreams.readGramCountStore`),
-    * or a union of both FOLDED through `unionGramCounts` (a raw unionByName
+    * against ANY gh-UNIQUE (k, gh, c) counts frame — a persisted store,
+    * or a union of stores FOLDED through `unionGramCounts` (a raw unionByName
     * holds split per-store counts for shared grams, which the per-row
     * minCount filter would under-mine; the fold re-sums them). k comes
     * from the frame (store identity) and mixed-k frames are refused.
@@ -1864,10 +1763,9 @@ object Corpus {
       .withColumn("alarm", lit(alarmed))
   }
 
-  /** One wave's gram-count delta in the store schema (k, gh, c) — the
-    * additive unit both ingest paths fold: `updateGramCounts` merges it
-    * into the batch store, `CorpusStreams.runGramCountIngest` lands it
-    * keyed by batch id for exactly-once streaming accumulation.
+  /** One wave's gram counts in the store schema (k, gh, c): the delta
+    * `updateGramCounts` folds, and the one-shot count a folded store must
+    * equal.
     */
   private[graft] def gramCountDelta(
       docs: DataFrame,

@@ -22,8 +22,7 @@ import graft.functions.PolyHashExpr
   *    of two corpus halves, two ingestion drains, or two days SUM
   *    elementwise into the sketch of the union. That merge law is what a
   *    streaming ingestion keeps in its store where it cannot keep
-  *    per-key state (the `writeTokenBaseline` posture with bounded,
-  *    drift-proof size).
+  *    per-key state (bounded, drift-proof size).
   *
   * Row j of the sketch indexes with the engine's (a_j * polyHash(key)
   * + b_j) mod P family (`Dedup.perm` — pairwise-independent by the same
@@ -134,7 +133,7 @@ object CountMin {
     // restore it before the exists(live) branch below, else this fold
     // would treat the store as fresh and silently RESTART the count
     // history from the delta while deleting the only surviving copy
-    // (the CorpusStreams.ingest / PcaStreams.healSnapshot rule)
+    // (the two-rename swap rule MergeSink.recover also follows)
     locally {
       val trash = new Path(live.getParent, s".cms-old-${live.getName}")
       if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
@@ -170,18 +169,18 @@ object CountMin {
     fs.delete(trash, true)
   }
 
-  /** Merged view of a per-drain sketch table (one row per drained batch,
-    * written by `CorpusStreams.runTokenCms`): sums every row's grid into
-    * one. Row count is #drains-bounded — a driver fold by design, like
-    * every sketch surface here.
+  /** Merged view of a sketch table (one row per sketch, e.g. one per
+    * ingested wave): sums every row's grid into one. Row count is
+    * wave-bounded — a driver fold by design, like every sketch surface
+    * here.
     */
   def readMerged(spark: SparkSession, dir: String): (Int, Int, Array[Long]) = {
     import org.apache.hadoop.fs.Path
     val live = new Path(dir)
     val fs   = live.getFileSystem(spark.sessionState.newHadoopConf())
     // read-side fallback for a writer that died between its two renames:
-    // the set-aside copy is the last committed store (PcaStreams.readLeaf
-    // rule; the next updateStore heals the tree itself)
+    // the set-aside copy is the last committed store (the next
+    // updateStore heals the tree itself)
     val src =
       if (fs.exists(live)) dir
       else {

@@ -755,19 +755,6 @@ object Dedup {
   def perm(j: Int): (Long, Long) =
     (graft.functions.MinHashSigExpr.permA(j), graft.functions.MinHashSigExpr.permB(j))
 
-  /** k-slot minhash signature columns mh0..mh{k-1} for a text column.
-    * NB: each slot re-evaluates the transform lambda over the hash set —
-    * fine for a handful of rows; for corpus-scale signatures use
-    * minHashSigCol / minHashSigTable (all k minima in one native pass).
-    */
-  def minHashSig(text: Column, k: Int = 8, n: Int = 3): Seq[Column] = {
-    val hashes = shingleHashes(text, n)
-    (0 until k).map { j =>
-      val (a, b) = perm(j)
-      minHash(hashes, a, b).as(s"mh$j")
-    }
-  }
-
   /** All k minhash minima in ONE native pass over a shingle-hash array —
     * NULL when the array is empty (no shingles). Signature generation is a
     * pure per-row projection: zero shuffle at any corpus size.
@@ -922,7 +909,7 @@ object Dedup {
     * (the star IS the clique's spanning connectivity) behave exactly as
     * with the full clique, at linear cost. For merely-colliding non-
     * identical members, pairs not involving the bucket minimum are a
-    * documented recall cut — audit with `bucketCensus` on the banded table.
+    * documented recall cut.
     *
     * Guard mechanics: bucket sizes come from a groupBy AGGREGATE (map-side
     * partial combine — shuffle ~ distinct buckets, not rows), the surviving
@@ -955,13 +942,6 @@ object Dedup {
       .select(col("__min").as("id_a"), col("id").as("id_b"))
     coldPairs.union(starPairs).distinct()
   }
-
-  /** Bucket-population census of a banded (id, band, key) table — the audit
-    * surface for `bandCandidates`' hot-bucket guard: any bucket reported
-    * here was mined as a star, not a clique.
-    */
-  def bucketCensus(bands: DataFrame, maxBucket: Int): DataFrame =
-    bands.groupBy(col("band"), col("key")).count().filter(col("count") > maxBucket)
 
   /** (id, band, bucket) rows from a signature table — the band's minhash
     * slots combined into one bucket key.

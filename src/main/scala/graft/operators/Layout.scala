@@ -293,7 +293,7 @@ object Layout {
     val dir  = new Path(path)
     val fs   = dir.getFileSystem(conf)
     // heal any dir parked by a compactor killed between its two renames
-    // (the PcaStreams/CountMin swap rule): without this, a parked ROOT
+    // (the CountMin.updateStore swap rule): without this, a parked ROOT
     // fails the walk on a missing dir and a parked hive LEAF is silently
     // SKIPPED by the dot-filter below — its data one rename away while the
     // table reads as if the partition never existed
@@ -329,7 +329,7 @@ object Layout {
     val tmp   = new Path(dir.getParent, s".compact-tmp-${dir.getName}")
     val trash = new Path(dir.getParent, s".compact-old-${dir.getName}")
     // heal a predecessor killed between its two renames: the set-aside IS
-    // the partition (the PcaStreams/CountMin swap rule) — promote before
+    // the partition (the CountMin.updateStore swap rule) — promote before
     // listing, else the re-run fails on a missing dir with the data
     // parked one rename away
     if (!fs.exists(dir) && fs.exists(trash) && !fs.rename(trash, dir))

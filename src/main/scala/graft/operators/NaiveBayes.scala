@@ -68,7 +68,7 @@ object NaiveBayes {
   }
 
   /** Train and PERSIST the model frame at `dir` (parquet, overwrite) —
-    * the frozen-model posture (`Corpus.writeUnigramModel`): train once on
+    * the frozen-model posture: train once on
     * labeled reference data, then every consumer scores against the
     * persisted frame instead of re-evaluating the training lineage (two
     * corpus-token-keyed shuffles) once per model slice — `score` reads the

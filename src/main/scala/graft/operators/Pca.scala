@@ -287,126 +287,36 @@ object Pca {
       emb: DataFrame,
       embCol: String = "embedding",
       quantum: Double = 1e6): DataFrame = {
-    val q = quantizedCol(emb, embCol, quantum)
-    gramJoin(gramCells(q), gramDims(q))
-  }
-
-  /** Quantized integer copy of the embedding column (`round(x * quantum)`
-    * per component) — the shared head of the batch gram and its streaming
-    * twin (`streaming.PcaStreams`). Stateless projection, so it applies to
-    * a streaming frame unchanged.
-    */
-  private[graft] def quantizedCol(
-      emb: DataFrame, embCol: String, quantum: Double): DataFrame = {
     require(quantum > 0 && !quantum.isInfinity,
       s"quantum must be positive and finite, got $quantum")
-    emb
+    val q = emb
       .filter(col(embCol).isNotNull)
       .select(
         transform(col(embCol), x => round(x.cast("double") * quantum).cast("long")).as("qe"))
-  }
-
-  /** Upper-triangular integer product sums per (i, j) over a quantized
-    * frame. ONE aggregation whose state is d(d+1)/2 rows — bounded by the
-    * embedding DIMENSION, never the corpus — which is what makes the
-    * streaming twin's complete-mode state viable at any ingest volume.
-    */
-  private[graft] def gramCells(q: DataFrame): DataFrame = q
-    .select(col("qe"), posexplode(col("qe")).as(Seq("i", "vi")))
-    .select(
-      col("i"),
-      col("vi"),
-      posexplode(slice(col("qe"), col("i") + 1, size(col("qe")) - col("i")))
-        .as(Seq("jp", "vj")))
-    .select(col("i"), (col("i") + col("jp")).as("j"), (col("vi") * col("vj")).as("p"))
-    .groupBy(col("i"), col("j"))
-    // cnt_cells rides along so a cells snapshot carries its own row count:
-    // modelFromMoments requires it to equal the dims snapshot's n_rows, so
-    // a cells/dims pair drained from DIFFERENT triggers fails loudly
-    // instead of silently training a wrong covariance
-    .agg(sum(col("p")).as("sum_prod"), count(lit(1)).as("cnt_cells"))
-
-  /** Per-dimension integer sums + row count over a quantized frame —
-    * d rows of state, the other half the covariance assembly needs.
-    */
-  private[graft] def gramDims(q: DataFrame): DataFrame = q
-    .select(posexplode(col("qe")).as(Seq("i", "v")))
-    .groupBy(col("i"))
-    .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
-
-  /** Assemble the gramQuantized output schema from the two aggregate
-    * halves — also the BATCH combinator over drained streaming snapshots.
-    */
-  private[graft] def gramJoin(cells: DataFrame, dims: DataFrame): DataFrame =
+    // upper-triangular product sums per (i, j): d(d+1)/2 groups, bounded by
+    // the embedding DIMENSION, never the corpus; cnt_cells is this half's
+    // own row count, beside the dims half's n_rows
+    val cells = q
+      .select(col("qe"), posexplode(col("qe")).as(Seq("i", "vi")))
+      .select(
+        col("i"),
+        col("vi"),
+        posexplode(slice(col("qe"), col("i") + 1, size(col("qe")) - col("i")))
+          .as(Seq("jp", "vj")))
+      .select(col("i"), (col("i") + col("jp")).as("j"), (col("vi") * col("vj")).as("p"))
+      .groupBy(col("i"), col("j"))
+      .agg(sum(col("p")).as("sum_prod"), count(lit(1)).as("cnt_cells"))
+    // per-dimension sums + row count: d groups
+    val dims = q
+      .select(posexplode(col("qe")).as(Seq("i", "v")))
+      .groupBy(col("i"))
+      .agg(sum(col("v")).as("s"), count(lit(1)).as("cnt"))
     cells
       .join(dims.select(col("i"), col("s").as("sum_i"), col("cnt").as("n_rows")), Seq("i"))
       .join(dims.select(col("i").as("j"), col("s").as("sum_j")), Seq("j"))
       .select(
         col("i"), col("j"), col("sum_prod"), col("sum_i"), col("sum_j"), col("n_rows"),
         col("cnt_cells"))
-
-  /** Rebuild a PcaModel from a gram-moments snapshot (the `gramQuantized`
-    * schema) — the consumer that closes the STREAMING fit loop: accumulate
-    * integer moments as data lands (`streaming.PcaStreams`), then turn any
-    * drained snapshot into a trained model without touching the corpus
-    * again. Driver cost is the snapshot itself: d(d+1)/2 rows (2,080 at
-    * d=64, ~525k at d=1024 — bounded by the same `MaxDim` envelope as
-    * `fit`). Covariance derives exactly as `fit`'s moment pass, up to the
-    * documented quantization grid (|x - round(x*quantum)/quantum| <=
-    * 0.5/quantum per component).
-    */
-  def modelFromMoments(gram: DataFrame, quantum: Double = 1e6): PcaModel = {
-    require(quantum > 0 && !quantum.isInfinity,
-      s"quantum must be positive and finite, got $quantum")
-    // cnt_cells (when the snapshot carries it — gramQuantized/gramJoin
-    // output does) is the cells half's OWN row count: n_rows alone comes
-    // solely from the dims half, so without this cross-check a cells
-    // snapshot drained from a newer trigger paired with an older dims
-    // snapshot would pass the n_rows consistency test and silently train
-    // a wrong covariance (round-11 advice)
-    val hasCellCnt = gram.columns.contains("cnt_cells")
-    val baseCols = Seq(
-      col("i"), col("j"), col("sum_prod"), col("sum_i"), col("sum_j"), col("n_rows"))
-    val rows = gram
-      .select(baseCols ++ (if (hasCellCnt) Seq(col("cnt_cells")) else Nil): _*)
-      .collect()
-    require(rows.nonEmpty, "modelFromMoments: empty gram snapshot")
-    val d = rows.iterator.map(_.getInt(1)).max + 1
-    require(d <= MaxDim, s"modelFromMoments: dim $d exceeds the supported $MaxDim")
-    val n = rows.head.getLong(5)
-    require(n > 0L && rows.forall(_.getLong(5) == n),
-      "modelFromMoments: inconsistent n_rows across cells (mixed snapshots?)")
-    require(!hasCellCnt || rows.forall(_.getLong(6) == n),
-      "modelFromMoments: cells snapshot row count disagrees with dims n_rows " +
-        "(cells and dims drained from different triggers?)")
-    val sums = new Array[Double](d)
-    val prod = Array.ofDim[Double](d, d)
-    val seen = Array.ofDim[Boolean](d, d)
-    rows.foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1)
-      sums(i) = r.getLong(3).toDouble
-      sums(j) = r.getLong(4).toDouble
-      prod(i)(j) = r.getLong(2).toDouble
-      seen(i)(j) = true
-    }
-    require((0 until d).forall(i => (i until d).forall(j => seen(i)(j))),
-      s"modelFromMoments: snapshot is missing upper-triangular cells for dim $d")
-    val inv  = 1.0 / quantum
-    val mean = Array.tabulate(d)(i => sums(i) * inv / n)
-    val cov  = Array.ofDim[Double](d, d)
-    var i = 0
-    while (i < d) {
-      var j = i
-      while (j < d) {
-        val c = prod(i)(j) * inv * inv / n - mean(i) * mean(j)
-        cov(i)(j) = c
-        cov(j)(i) = c
-        j += 1
-      }
-      i += 1
-    }
-    val (vals, vecs) = symEigen(cov)
-    PcaModel(n, mean, vals, vecs)
   }
 
   /** Eigendecomposition of a symmetric matrix by cyclic Jacobi rotations

@@ -45,18 +45,6 @@ object Similarity {
       lit(0.0),
       (acc, x) => acc + x)
 
-  /** Same sum as a STATIC dim-term expression tree. Superseded by the native
-    * loop in `dot` (same speed class, no codegen-size growth with dim, no
-    * JIT-limit risk when an optimizer rule duplicates the expression); kept
-    * as a second cross-check formulation. Results are bit-identical to `dot`
-    * except when every product is -0.0 (the fold's 0.0 seed normalizes the
-    * sign).
-    */
-  def dotStatic(a: Column, b: Column, dim: Int): Column =
-    (1 to dim)
-      .map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
   def norm2(a: Column): Column = dot(a, a)
 
   /** Shared tail of the three neighbor searches: top-`k` pairs per probe by
@@ -69,8 +57,6 @@ object Similarity {
     TopK
       .topKPerGroup(pairs, Seq("probe_id"), "cos", "neighbor_id", k, rnkName = "rnk")
       .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("cos"))
-
-  def norm2Static(a: Column, dim: Int): Column = dotStatic(a, a, dim)
 
   /** cosine = dot / (sqrt(norm_a) * sqrt(norm_b)) — fixed association. */
   def cosine(dotCol: Column, n2a: Column, n2b: Column): Column =
@@ -287,13 +273,6 @@ object Similarity {
     }
     cents
   }
-
-  /** Single-cell assignment against a stored/loaded centroid table —
-    * the indexing projection (EmbedStreams' per-batch step). `df` must
-    * carry `embedding` and `n2`.
-    */
-  def assignToCells(df: DataFrame, centArr: DataFrame): DataFrame =
-    assignCells(df, centArr, 1)
 
   /** Nearest `keep` cells per row, computed INSIDE the row against the
     * broadcast single-row centroid array — zero shuffle, zero inflation.
@@ -534,9 +513,9 @@ object Similarity {
 
   /** Re-cluster a persisted IVF index IN PLACE: spherical k-means over the
     * STORED vectors, then an atomic rewrite of the data partitions and the
-    * centroid table. A long-lived index fed by `EmbedStreams` keeps its
-    * original epoch's centroids (cell stability is the streaming
-    * invariant), so when the embedding distribution drifts, the new mass
+    * centroid table. An index grown by `mergeIvfIndexes` keeps its base
+    * epoch's centroids (cell stability is what keeps the partitions
+    * valid), so when the embedding distribution drifts, the new mass
     * crowds a few stale cells — searches still verify exact cosines, but
     * low-nprobe recall decays (a drifted cluster straddling two stale
     * cells hides half its neighbors from every probe) and cell skew grows
@@ -642,7 +621,7 @@ object Similarity {
 
   /** Delete vectors from a persisted IVF index by id — the GDPR /
     * retraction path that completes the index's lifecycle (build:
-    * `writeIvfIndex`, append: `EmbedStreams`, rebalance: `reindexIvf`,
+    * `writeIvfIndex`, append: `mergeIvfIndexes`, rebalance: `reindexIvf`,
     * remove: here). Centroids are untouched: remaining rows keep their
     * cell assignment, so searches stay exact over the survivors.
     *
@@ -704,7 +683,7 @@ object Similarity {
       // only clear the set-aside copy when the live leaf exists — when it
       // does not, the set-aside IS the last committed leaf (a predecessor
       // died between its two renames) and deleting it first would leave a
-      // window holding zero copies (the PcaStreams swap rule; entry-time
+      // window holding zero copies (the CountMin.updateStore swap rule; entry-time
       // healIvfLeaves makes this branch unreachable in practice)
       if (fs.exists(live)) {
         if (fs.exists(trash)) fs.delete(trash, true)

@@ -369,8 +369,11 @@ object Splits {
               }
         // combined bucket id: primary score bucket, heavy values refined by
         // id sub-bucket — DESCENDING in id so a LARGER combined id is
-        // EARLIER in (score DESC, id ASC) order, same as the primary
-        val mult = hv.map(_._2.length + 1).maxOption.getOrElse(1)
+        // EARLIER in (score DESC, id ASC) order, same as the primary. A
+        // heavy value is a cut, so it is the LOWEST score of its primary
+        // bucket: every other row there takes the top sub-bucket, above
+        // all of the heavy value's id sub-buckets
+        val mult = hv.map(_._2.length + 2).maxOption.getOrElse(1)
         def combined(score: Column, id: Column): Column = {
           val primary =
             if (cs.isEmpty) lit(0)
@@ -381,7 +384,7 @@ object Splits {
                 // its bucket offset and its sort position disagree
                 .when(isnan(score), lit(cs.length))
                 .otherwise(size(filter(typedlit(cs), c => c <= score)))
-          val sub = hv.foldLeft(lit(0)) { case (rest, (v, subCuts)) =>
+          val sub = hv.foldLeft(lit(mult - 1)) { case (rest, (v, subCuts)) =>
             when(score === v,
               lit(subCuts.length) - size(filter(typedlit(subCuts), c => c <= id)))
               .otherwise(rest)
@@ -398,14 +401,14 @@ object Splits {
           .sortBy(-_._1) // highest score bucket first = global order
         (cs, hv, tot)
       } finally { slim.unpersist(); () }
-    val mult = heavy.map(_._2.length + 1).maxOption.getOrElse(1)
+    val mult = heavy.map(_._2.length + 2).maxOption.getOrElse(1)
     val bPrimary =
       if (cuts.isEmpty) lit(0)
       else
         when(col(scoreCol).isNull, lit(-1)) // below every real bucket: ranks last
           .when(isnan(col(scoreCol).cast("double")), lit(cuts.length)) // NaN sorts largest
           .otherwise(size(filter(typedlit(cuts), c => c <= col(scoreCol).cast("double"))))
-    val bSub = heavy.foldLeft(lit(0)) { case (rest, (v, subCuts)) =>
+    val bSub = heavy.foldLeft(lit(mult - 1)) { case (rest, (v, subCuts)) =>
       when(col(scoreCol).cast("double") === v,
         lit(subCuts.length) - size(filter(typedlit(subCuts),
           c => c <= expr(s"try_cast(`$idCol` AS DOUBLE)"))))
@@ -578,8 +581,10 @@ object Splits {
         (perGroup, heavy)
       } finally { slim.unpersist(); () }
 
-    // per-group mult so combined ids stay consistent within each group
-    val multByG = heavyRows.groupBy(_._1).map { case (g, hs) => g -> (hs.map(_._3.length).max + 1) }
+    // per-group mult so combined ids stay consistent within each group;
+    // the top sub-bucket holds the rest of a heavy value's primary bucket
+    // (the rankedPrefix rule)
+    val multByG = heavyRows.groupBy(_._1).map { case (g, hs) => g -> (hs.map(_._3.length).max + 2) }
     val cutsDf = cutsRows
       .map { case (g, cs) => (g, cs, multByG.getOrElse(g, 1)) }
       .toDF("__g", "__cuts", "__mult")
@@ -593,7 +598,7 @@ object Splits {
     val sub =
       when(col("__hsub").isNotNull,
         size(col("__hsub")) - size(filter(col("__hsub"), c => c <= col(idCol).cast("double"))))
-        .otherwise(lit(0))
+        .otherwise(coalesce(col("__mult"), lit(1)) - 1)
     val withB = df
       .withColumn("__g", gkey)
       .join(broadcast(cutsDf), Seq("__g"), "left_outer")

@@ -7,8 +7,11 @@ import graft.decode.CanExpressions
 import graft.operators.{Sessionize, Transitions}
 
 /** The three reference domain computations as pure batch
-  * DataFrame -> DataFrame functions (the oracle-testable surface; streaming
-  * twins in graft.streaming reuse these shapes).
+  * DataFrame -> DataFrame functions (the oracle-testable surface). The
+  * parse stream (`graft.streaming.CanStreams`) lands the same pivot shape
+  * and re-channelizes dirty hours with `channelize`; `graft.Jobs.infer`
+  * runs the stationary and autopilot functions over the whole landing
+  * history.
   *
   * Semantics follow SURVEY §2 with the documented clean-ups of §2.7: real
   * nulls instead of 'NA', ISO hour labels from the window end, all

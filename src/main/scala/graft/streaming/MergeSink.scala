@@ -70,20 +70,13 @@ object MergeSink {
     * only guaranteed for readers that do not overlap a commit. Gate reads
     * on a quiesced sink (the AvailableNow drain model) or snapshot the
     * table first where overlap is possible.
-    *
-    * @param compatDropOverlap reference bug-parity mode (SURVEY §2.5): when
-    *        true, a batch whose keys OVERLAP existing rows is dropped
-    *        entirely — the reference's disjoint-or-skip merge
-    *        (parse_canserver_filtered_log.py:342-343) — instead of merged.
-    *        Default false: merge, batch rows win.
     */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       targetDir: String,
       keyCols: Seq[String],
-      partitionCols: Seq[String],
-      compatDropOverlap: Boolean = false): Unit = {
+      partitionCols: Seq[String]): Unit = {
     if (batch.isEmpty) return
 
     val conf   = spark.sessionState.newHadoopConf()
@@ -107,10 +100,6 @@ object MergeSink {
         val oldDirty = old
           .join(broadcast(dirty), partitionCols, "left_semi")
           .select(batch.columns.map(col): _*) // align column order
-        if (compatDropOverlap &&
-          !batch.join(oldDirty, keyCols, "left_semi").isEmpty) {
-          return // reference semantics: overlapping batch silently skipped
-        }
         // batch rows win on key collision
         val w = Window
           .partitionBy(keyCols.map(col): _*)

@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
+import graft.operators.Bpe
 
 /** Greedy BPE: hand-computed merge fixtures (rank priority, cascades,
-  * multi-occurrence, unicode), trainer determinism, and codegen parity.
+  * multi-occurrence, unicode), the encoder on a `Bpe.train` table
+  * (`endOfWord = false`, this encoder's convention), and codegen parity.
   */
 class BpeEncodeExprSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -16,6 +18,11 @@ class BpeEncodeExprSpec extends AnyFunSuite {
     Seq(text).toDF("t")
       .select(TextAnalysis.bpeTokens(col("t"), merges).as("toks"))
       .head().getSeq[String](0).toSeq
+
+  private def trained(docs: org.apache.spark.sql.DataFrame, numMerges: Int): Seq[(String, String)] =
+    Bpe.train(docs, "text", numMerges, endOfWord = false)
+      .orderBy("rank")
+      .collect().map(r => (r.getString(1), r.getString(2))).toSeq
 
   test("rank priority: the earlier merge wins even when a later one also applies") {
     // merges: (a,b) rank 0, (b,c) rank 1. 'abc' must become ['ab','c'],
@@ -58,10 +65,10 @@ class BpeEncodeExprSpec extends AnyFunSuite {
 
   test("trainer: learns the dominant pair first and is partitioning-deterministic") {
     val docs = Seq.fill(50)("banana band bandana").toDF("text")
-    val m1 = TextAnalysis.trainBpeMerges(docs, "text", numMerges = 5)
-    val m2 = TextAnalysis.trainBpeMerges(docs.repartition(7), "text", numMerges = 5)
+    val m1 = trained(docs, numMerges = 5)
+    val m2 = trained(docs.repartition(7), numMerges = 5)
     assert(m1 === m2)
-    // 'an' dominates (3x per 'banana', 1x 'band', 2x 'bandana')
+    // 'an' dominates (2x per 'banana', 1x 'band', 2x 'bandana')
     assert(m1.head === ("a", "n"))
     // trained merges round-trip through the encoder
     val toks = enc("banana", m1)
@@ -70,10 +77,10 @@ class BpeEncodeExprSpec extends AnyFunSuite {
 
   test("encoding a real column stays inside codegen and matches interpreted eval") {
     val docs   = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
-    val merges = TextAnalysis.trainBpeMerges(docs, "text", numMerges = 20, sampleN = 50)
+    val merges = trained(docs, numMerges = 20)
     val counted = docs
       .filter(col("text").isNotNull)
-      .select(TextAnalysis.bpeTokenCount(col("text"), merges).as("n"),
+      .select(size(TextAnalysis.bpeTokens(col("text"), merges)).as("n"),
         TextAnalysis.tokenCount(col("text")).as("ws"))
     val rows = counted.collect()
     // BPE tokens per word >= 1 token, and <= codepoints: count bounded by

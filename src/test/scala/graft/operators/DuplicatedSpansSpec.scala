@@ -166,46 +166,6 @@ class DuplicatedSpansSpec extends AnyFunSuite {
     assert((withHistory -- want) === Set((4L, 1L, 0L, 5L, 6L)))
   }
 
-  test("streaming gram-count ingest: drained store folds == batch counts; resumes across runners") {
-    import spark.implicits._
-    import graft.streaming.CorpusStreams
-    val root  = java.nio.file.Files.createTempDirectory("gramstream").toString
-    val raw   = s"$root/raw"; val store = s"$root/store"; val cp = s"$root/cp"
-    val wave1 = fixture
-    wave1.write.mode("append").json(raw)
-    CorpusStreams.runGramCountIngest(spark, raw, store, cp, k = 3).awaitTermination()
-    def foldSet(): Set[(Int, Long, Long)] = CorpusStreams
-      .readGramCountStore(spark, store)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    def batchSet(df: org.apache.spark.sql.DataFrame): Set[(Int, Long, Long)] = Corpus
-      .gramCountDelta(df, "doc_id", "text", 3)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(foldSet() === batchSet(fixture))
-
-    // second wave through a FRESH runner on the same checkpoint: only the
-    // new files land, and the fold equals the one-shot counts of the union
-    val wave2 = Seq((11L, "a b c w9 w8")).toDF("doc_id", "text")
-    wave2.write.mode("append").json(raw)
-    CorpusStreams.runGramCountIngest(spark, raw, store, cp, k = 3).awaitTermination()
-    val union = fixture.select("doc_id", "text").unionByName(wave2)
-    assert(foldSet() === batchSet(union))
-
-    // the streamed store drives the miner exactly like the batch count
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(
-      key(Corpus.spansAgainstCounts(union, "doc_id", "text",
-        CorpusStreams.readGramCountStore(spark, store))) ===
-        key(Corpus.duplicatedSpans(union, "doc_id", "text", k = 3)))
-
-    // mixed-k stores are refused (k is store identity)
-    CorpusStreams.runGramCountIngest(spark, raw, store, s"$root/cp4", k = 4).awaitTermination()
-    val e = intercept[IllegalArgumentException] {
-      CorpusStreams.readGramCountStore(spark, store)
-    }
-    assert(e.getMessage.contains("mixed k"))
-  }
-
   test("null-text docs are excluded from census and strip (no token spine to rebuild)") {
     import spark.implicits._
     val docs = Seq(
@@ -240,19 +200,9 @@ class DuplicatedSpansSpec extends AnyFunSuite {
     val want = Corpus.duplicatedSpans(fixture, "doc_id", "text", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     assert(got === want && got.nonEmpty)
-
-    // the streaming reader refuses an empty delta store by name, not with
-    // a misleading 'mixed k {}' message
-    val streamStore = s"$root/stream"
-    Corpus.gramCountDelta(short, "doc_id", "text", 3)
-      .withColumn("batch_id", lit(0L)).write.parquet(streamStore)
-    val e2 = intercept[IllegalArgumentException] {
-      graft.streaming.CorpusStreams.readGramCountStore(spark, streamStore)
-    }
-    assert(e2.getMessage.contains("EMPTY"))
   }
 
-  test("union of batch + streaming stores: unionGramCounts law and the k-agreement guard") {
+  test("union of two batch stores: unionGramCounts law and the k-agreement guard") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("gramunion").toString
     // d1 and d2 share 'a b c d' and land in DIFFERENT stores, so the shared
@@ -260,16 +210,12 @@ class DuplicatedSpansSpec extends AnyFunSuite {
     // per-row minCount filter would miss — the fold must re-sum them
     val first  = fixture.filter(col("doc_id") === 1)
     val second = fixture.filter(col("doc_id") > 1)
-    val batchPath = s"$root/batch"
+    val batchPath  = s"$root/batch"
+    val secondPath = s"$root/second"
     Corpus.writeGramCounts(first, "doc_id", "text", k = 3, batchPath)
-    val raw = s"$root/raw"
-    second.write.mode("append").json(raw)
-    graft.streaming.CorpusStreams
-      .runGramCountIngest(spark, raw, s"$root/stream", s"$root/cp", k = 3)
-      .awaitTermination()
+    Corpus.updateGramCounts(second, "doc_id", "text", k = 3, secondPath)
     val unioned = Corpus.unionGramCounts(Seq(
-      spark.read.parquet(batchPath),
-      graft.streaming.CorpusStreams.readGramCountStore(spark, s"$root/stream")))
+      spark.read.parquet(batchPath), spark.read.parquet(secondPath)))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     // the law: mining against the union == the one-shot mine over the
@@ -278,8 +224,7 @@ class DuplicatedSpansSpec extends AnyFunSuite {
     assert(key(Corpus.spansAgainstCounts(fixture, "doc_id", "text", unioned)) === want1)
     // ...and the fold is LOAD-BEARING: the raw union (same k, split counts)
     // under-mines — the cross-store d1/d2 span vanishes
-    val rawUnion = spark.read.parquet(batchPath)
-      .unionByName(graft.streaming.CorpusStreams.readGramCountStore(spark, s"$root/stream"))
+    val rawUnion = spark.read.parquet(batchPath).unionByName(spark.read.parquet(secondPath))
     val rawMined = key(Corpus.spansAgainstCounts(fixture, "doc_id", "text", rawUnion))
     assert(rawMined != want1)
     assert(!rawMined.exists(_._1 == 1L))

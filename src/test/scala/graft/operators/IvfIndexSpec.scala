@@ -59,7 +59,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(neighborCells === Set(probeCell))
   }
 
-  test("reindexIvf: drifted streamed-in cluster regains low-nprobe recall after re-centroid") {
+  test("reindexIvf: drifted merged-in cluster regains low-nprobe recall after re-centroid") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
     def around(center: Array[Float], eps: Float) =
@@ -68,17 +68,16 @@ class IvfIndexSpec extends AnyFunSuite {
     val c1   = Array.fill(16)(rnd.nextGaussian().toFloat)
     val c2   = Array.fill(16)(rnd.nextGaussian().toFloat)
     val base = (1L to 60L).map(i => (i, around(if (i % 2 == 0) c1 else c2, 0.05f)))
-    val raw  = tmp() + "/raw"; val idx = tmp() + "/index"; val ckpt = tmp() + "/ckpt"
-    base.toDF("vec_id", "embedding").write.parquet(raw)
-    graft.streaming.EmbedStreams
-      .runEmbedIngest(spark, raw, idx, ckpt, ncells = 4).awaitTermination()
+    val root    = tmp()
+    val baseIdx = s"$root/base"; val driftIdx = s"$root/drift"; val idx = s"$root/index"
+    Similarity.writeIvfIndex(base.toDF("vec_id", "embedding"), baseIdx, ncells = 4)
 
     // epoch 2: a NEW tight cluster EXACTLY BETWEEN two stored centroids
-    // streams in (unit-normalized sum — equal cosine to both by
-    // construction), so member noise decides each row's stale cell and the
-    // cluster splits across cells: a 1-probe search sees only the part
-    // sharing its cell
-    val cents = spark.read.parquet(s"$idx.centroids")
+    // arrives (unit-normalized sum — equal cosine to both by construction)
+    // and is merged in against the base quantizer, so member noise decides
+    // each row's stale cell and the cluster splits across cells: a 1-probe
+    // search sees only the part sharing its cell
+    val cents = spark.read.parquet(s"$baseIdx.centroids")
       .select(explode(col("cents")).as("c"))
       .orderBy(col("c.cell_id"))
       .select("c.c_emb")
@@ -88,9 +87,8 @@ class IvfIndexSpec extends AnyFunSuite {
     }
     val c3    = unit(cents(0)).zip(unit(cents(1))).map { case (a, b) => a + b }
     val drift = (200L until 260L).map(i => (i, around(c3, 0.05f)))
-    drift.toDF("vec_id", "embedding").write.mode("append").parquet(raw)
-    graft.streaming.EmbedStreams
-      .runEmbedIngest(spark, raw, idx, ckpt, ncells = 4).awaitTermination()
+    Similarity.writeIvfIndex(drift.toDF("vec_id", "embedding"), driftIdx, ncells = 4)
+    Similarity.mergeIvfIndexes(spark, baseIdx, driftIdx, idx)
 
     val all = (base ++ drift).toDF("vec_id", "embedding")
     def recallAt(nprobe: Int): Double = {

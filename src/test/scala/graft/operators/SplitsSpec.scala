@@ -319,6 +319,20 @@ class SplitsSpec extends AnyFunSuite {
     assert(sizes.count(_ > 0) >= 4, s"expected spread, got ${sizes.toSeq}")
   }
 
+  test("rankedPrefix: a higher score sharing a heavy tie value's bucket still ranks first") {
+    import spark.implicits._
+    // cuts at buckets=4 are all 1.0, so 1.0 is split into id sub-buckets and
+    // 23.9 falls into 1.0's primary bucket; it must rank above every tie
+    val df = Seq((0L, 1.0, 20L), (1L, 1.0, 45L), (2L, 1.0, 33L), (3L, 23.9, 27L))
+      .toDF("id", "score", "cost").repartition(5)
+    val want = Seq((0L, 2L, 47L), (1L, 3L, 92L), (2L, 4L, 125L), (3L, 1L, 27L))
+    def ranks(out: org.apache.spark.sql.DataFrame) = out.select("id", "rnk", "cum_cost")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(ranks(Splits.rankedPrefix(df, "score", "id", "cost", buckets = 4)) === want)
+    assert(ranks(Splits.rankedPrefixGrouped(
+      df.withColumn("g", lit("a")), "g", "score", "id", "cost", buckets = 4)) === want)
+  }
+
   test("leakFreeSplit: connected rows share a split; isolated rows match assignSplit") {
     import spark.implicits._
     val docs  = (1L to 50L).map(i => (i, s"row$i")).toDF("doc_id", "payload")

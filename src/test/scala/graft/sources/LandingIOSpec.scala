@@ -86,6 +86,57 @@ class LandingIOSpec extends AnyFunSuite {
     assert(ap.contains("\"canbus_state\":3") && ap.contains("\"canbus_state\":0"))
   }
 
+  test("Jobs: an AP edge and a stationary run spanning two files and two invocations") {
+    val t0   = 1700000000L * 1000000L // 2023-11-14 22:13:20 UTC
+    val raw  = Files.createTempDirectory("xfile_raw").toString
+    val work = Files.createTempDirectory("xfile_work").toString
+    val dev  = new java.io.File(raw).getName
+    def zeros(secs: Range) = secs.flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray
+    def ap(sec: Int, code: Byte) = frame(sec * 1000, 921, 0, Array[Byte](code))
+    def eventDocs(): Map[String, Seq[Byte]] = {
+      val root = Paths.get(work, "events")
+      if (!Files.exists(root)) Map.empty
+      else {
+        val b = Map.newBuilder[String, Seq[Byte]]
+        Files.walk(root).forEach { p =>
+          if (p.toString.endsWith(".json")) b += root.relativize(p).toString -> Files.readAllBytes(p).toSeq
+        }
+        b.result()
+      }
+    }
+
+    // file A: zero speed t0..t0+10 s, AP code 2 at its end — neither the
+    // 10 s run nor an edge is complete inside this file
+    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), zeros(0 to 10), ap(5, 2), ap(10, 2)))
+    Jobs.parse(spark, raw, work)
+    Jobs.infer(spark, work)
+    assert(eventDocs().isEmpty, s"one file alone produced events: ${eventDocs().keys}")
+
+    // file B, a later invocation: code 3 at its first frame, zeros to
+    // t0+20 s, then moving — the run is t0..t0+20 s across both files
+    Files.write(
+      Paths.get(raw, "b.log"),
+      file(timesync(t0), ap(11, 3), zeros(11 to 20), frame(21000, 599, 0, speedPayload(30.0)), ap(21, 3)))
+    Jobs.parse(spark, raw, work)
+    Jobs.infer(spark, work)
+
+    val docs = eventDocs()
+    val name = s"$dev/canserver-events_2023-11-14.json"
+    assert(docs.keySet === Set(s"Autopilot/$name", s"Stationary/$name"))
+    def text(k: String) = new String(docs(k).toArray, "UTF-8").trim
+    // exactly one interval, spanning both files, trimmed 3 s on each side
+    assert(text(s"Stationary/$name") ===
+      """{"IMU-telematics":{"stationary-state":[{"start":1.700000003E9,"end":1.700000017E9}]}}""")
+    // the 2 -> 3 edge sits at file B's first frame
+    assert(text(s"Autopilot/$name") ===
+      """{"auditory":{"engagement":[{"timestamp":1.700000011E9,"canbus_state":3}]}}""")
+
+    // replay: a further infer over the same landing rewrites every event
+    // document byte for byte
+    Jobs.infer(spark, work)
+    assert(eventDocs() === docs)
+  }
+
   test("landing write -> schema'd read preserves channel structure") {
     import spark.implicits._
     val t0 = 1700000000L * 1000000L

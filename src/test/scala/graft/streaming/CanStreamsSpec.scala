@@ -10,11 +10,11 @@ import graft.SparkTestSession
 import graft.decode.{CanDecode, CanFixture}
 import graft.pipelines.CanPipelines
 
-/** Batch ≡ stream equivalence (SURVEY §5.4) + the cross-file state fix:
-  * streaming results over split inputs must equal the batch pipeline over
-  * the concatenated input, including edges/runs that SPAN file boundaries
-  * (which the reference's per-object Lambda model loses, SURVEY §2.7-9),
-  * and re-processing must be idempotent (MergeSink).
+/** Batch ≡ stream equivalence (SURVEY §5.4) for the parse stream: the
+  * landing over split inputs must equal the batch pivot over the
+  * concatenated input, and re-processing must be idempotent (MergeSink
+  * parquet upsert plus the dirty-hour JSON re-channelize). The cross-file
+  * inference check runs through `graft.Jobs` (LandingIOSpec).
   */
 class CanStreamsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -23,6 +23,15 @@ class CanStreamsSpec extends AnyFunSuite {
   private def speedPayload(v: Double): Array[Byte] = {
     val u = math.round((v + 40.0) / 0.08).toInt
     Array[Byte](0x00, ((u & 0x0f) << 4).toByte, (u >> 4).toByte)
+  }
+
+  /** Every landing document under `dir`: relative path -> its bytes. */
+  private def jsonDocs(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(dir)
+    Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".json"))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+      .toMap
   }
 
   test("streaming pivot over split files == batch pivot over all; re-run is idempotent") {
@@ -39,14 +48,15 @@ class CanStreamsSpec extends AnyFunSuite {
 
     val raw  = Files.createTempDirectory("canraw").toString
     val land = Files.createTempDirectory("canland").toString
+    val json = Files.createTempDirectory("canjson").toString
     val ckpt = Files.createTempDirectory("canckpt").toString
 
     // invocation 1: only file A has landed
     Files.write(Paths.get(raw, "a.log"), fileA)
-    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
     // invocation 2: file B lands; checkpoint carries source offsets
     Files.write(Paths.get(raw, "b.log"), fileB)
-    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
 
     val sigCols = Seq(
       "epoch_sec", "long_acc", "lat_acc", "vert_acc", "yaw_rate", "pitch_rate",
@@ -61,10 +71,14 @@ class CanStreamsSpec extends AnyFunSuite {
     val merged = spark.read.parquet(land).filter(col("ap_status").isNotNull).collect()
     assert(merged.length === 1 && merged.head.getAs[Double]("speed") === 0.0)
 
-    // idempotence: fresh checkpoint reprocesses everything; upsert must not dup
+    // idempotence: fresh checkpoint reprocesses everything; upsert must not
+    // dup, and the re-channelized hour documents come back byte-identical
+    val docsBefore = jsonDocs(json)
+    assert(docsBefore.nonEmpty)
     val ckpt2 = Files.createTempDirectory("canckpt2").toString
-    CanStreams.runParse(spark, raw, land, ckpt2).awaitTermination()
+    CanStreams.runParse(spark, raw, land, ckpt2, json).awaitTermination()
     assert(canon(spark.read.parquet(land)) === batch)
+    assert(jsonDocs(json) === docsBefore)
   }
 
   test("retry from checkpoint: a replayed batch (crash before commit) does not duplicate") {
@@ -76,10 +90,13 @@ class CanStreamsSpec extends AnyFunSuite {
 
     val raw  = Files.createTempDirectory("crashraw").toString
     val land = Files.createTempDirectory("crashland").toString
+    val json = Files.createTempDirectory("crashjson").toString
     val ckpt = Files.createTempDirectory("crashckpt").toString
     Files.write(Paths.get(raw, "a.log"), fileA)
-    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
-    val expect = spark.read.parquet(land).orderBy("epoch_sec").collect().toSeq
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
+    val expect     = spark.read.parquet(land).orderBy("epoch_sec").collect().toSeq
+    val expectDocs = jsonDocs(json)
+    assert(expectDocs.nonEmpty)
 
     // simulate a crash AFTER the sink wrote but BEFORE the batch committed:
     // delete the latest commit marker, leaving offsets + sink output in
@@ -95,14 +112,16 @@ class CanStreamsSpec extends AnyFunSuite {
     Files.list(commits).iterator().asScala.toSeq
       .filter(_.getFileName.toString.contains(latest.getFileName.toString))
       .foreach(Files.delete)
-    CanStreams.runParse(spark, raw, land, ckpt).awaitTermination()
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
     assert(spark.read.parquet(land).orderBy("epoch_sec").collect().toSeq === expect)
+    assert(jsonDocs(json) === expectDocs)
   }
 
   test("maxFilesPerTrigger paces a backlog into multiple committed batches, same result") {
     val t0 = 1700000000L * 1000000L
     val raw  = Files.createTempDirectory("paceraw").toString
     val land = Files.createTempDirectory("paceland").toString
+    val json = Files.createTempDirectory("pacejson").toString
     val ckpt = Files.createTempDirectory("paceckpt").toString
     (0 until 3).foreach { i =>
       Files.write(
@@ -110,7 +129,7 @@ class CanStreamsSpec extends AnyFunSuite {
         file(timesync(t0), frame(1000 * i, 599, 0, speedPayload(8.0 * i))))
     }
     CanStreams
-      .runParse(spark, raw, land, ckpt, maxFilesPerTrigger = Some(1))
+      .runParse(spark, raw, land, ckpt, json, maxFilesPerTrigger = Some(1))
       .awaitTermination()
     // one committed DATA micro-batch per file, not one unbounded batch.
     // (The v2 source may also commit a trailing NO-DATA batch — same final
@@ -134,61 +153,6 @@ class CanStreamsSpec extends AnyFunSuite {
     val batch = CanPipelines.pivot(CanDecode.decodeFiles(spark, raw))
       .select("epoch_sec", "speed").orderBy("epoch_sec").collect().toSeq
     assert(streamed === batch)
-  }
-
-  test("transitionsStream detects edges ACROSS micro-batches (cross-file fix)") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Double, Int)](spark)
-    val q = CanStreams
-      .transitionsStream(ms.toDS())
-      .writeStream
-      .format("memory")
-      .queryName("trans_out")
-      .outputMode("append")
-      .start()
-    try {
-      ms.addData(("dev1", 1.0, 2), ("dev1", 2.0, 2)) // file 1 ends idle
-      q.processAllAvailable()
-      assert(spark.table("trans_out").count() === 0)
-      ms.addData(("dev1", 3.0, 3), ("dev1", 4.0, 1)) // file 2 opens ACTIVE
-      q.processAllAvailable()
-      val got = spark
-        .table("trans_out")
-        .orderBy("ts_sec")
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getInt(2), r.getString(3)))
-      // 2->3 edge spans the batch boundary; reference loses it
-      assert(got === Array(
-        ("dev1", 3.0, 3, "engagement"),
-        ("dev1", 4.0, 1, "disengagement")))
-    } finally q.stop()
-  }
-
-  test("transitionsStream matches the batch pipeline on a one-batch series") {
-    import spark.implicits._
-    val series = Seq(
-      ("d", 1.0, "AVAILABLE"), ("d", 2.0, "ACTIVE_NOMINAL"), ("d", 3.0, "ACTIVE_RESTRICTED"),
-      ("d", 4.0, "ACTIVE_NOMINAL"), ("d", 5.0, "DISABLED"))
-    val batch = CanPipelines
-      .autopilotTransitions(series.toDF("key", "ts_sec", "state").drop("key"))
-      .collect()
-      .map(r => (r.getDouble(0), r.getInt(1), r.getString(2)))
-
-    val codes = series.map { case (k, t, s) => (k, t, graft.decode.CanCodec.ApCodes(s)) }
-    val ms = MemoryStream[(String, Double, Int)](spark)
-    val q = CanStreams
-      .transitionsStream(ms.toDS())
-      .writeStream.format("memory").queryName("trans_eq").outputMode("append").start()
-    try {
-      ms.addData(codes: _*)
-      q.processAllAvailable()
-      val streamed = spark
-        .table("trans_eq")
-        .orderBy("ts_sec")
-        .collect()
-        .map(r => (r.getDouble(1), r.getInt(2), r.getString(3)))
-      assert(streamed === batch)
-    } finally q.stop()
   }
 
   test("pivot watermark: events later than 1.2 s behind the max are dropped (MAX_SR parity)") {
@@ -225,92 +189,4 @@ class CanStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamingDedup drops same-key duplicates across micro-batches") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Long)](spark)
-    val df = ms.toDS().toDF("digest", "sec").withColumn("ts", timestamp_seconds(col("sec")))
-    val q = CanStreams
-      .streamingDedup(df, Seq("digest"), "10 seconds")
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      ms.addData(("a", 100L), ("b", 101L), ("a", 102L)) // in-batch dup
-      q.processAllAvailable()
-      ms.addData(("a", 103L), ("c", 104L))              // cross-batch dup
-      q.processAllAvailable()
-      val got = spark.table("dedup_out").select("digest").collect().map(_.getString(0)).sorted
-      assert(got.toSeq === Seq("a", "b", "c"))
-    } finally q.stop()
-  }
-
-  test("stationarySessionStream: session_window form emits gap-closed sessions >= 13 s") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Long, Double)](spark)
-    val df = ms.toDS().toDF("key", "sec", "speed")
-      .withColumn("ts", timestamp_seconds(col("sec")))
-    val q = CanStreams
-      .stationarySessionStream(df)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      // 20 s of zeros, then silence; a far-future event advances the watermark
-      ms.addData((100L to 120L).map(t => ("d", t, 0.0)): _*)
-      q.processAllAvailable()
-      ms.addData(("d", 1000L, 0.0)) // watermark -> 990 s, closes the session
-      q.processAllAvailable()
-      val got = spark.table("sess_out").collect().map(r => (r.getDouble(1), r.getDouble(2)))
-      assert(got === Array((103.0, 117.0)))
-    } finally q.stop()
-  }
-
-  test("stationaryStream: run split across batches emits once closed; 12 s run never emits") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Double, Double)](spark)
-    val q = CanStreams
-      .stationaryStream(ms.toDS())
-      .writeStream.format("memory").queryName("stat_out").outputMode("append").start()
-    try {
-      // batch 1: zeros t=100..107 (open run, still open at batch end)
-      ms.addData((100 to 107).map(t => ("d", t.toDouble, 0.0)): _*)
-      q.processAllAvailable()
-      assert(spark.table("stat_out").count() === 0) // not closed yet
-      // batch 2: zeros t=108..114 then moving -> 14 s run closes
-      ms.addData(((108 to 114).map(t => ("d", t.toDouble, 0.0)) :+ ("d", 115.0, 22.0)): _*)
-      q.processAllAvailable()
-      val got = spark.table("stat_out").collect().map(r => (r.getDouble(1), r.getDouble(2)))
-      assert(got === Array((103.0, 111.0)))
-      // batch 3: a 12 s run fully inside one batch -> ignored
-      ms.addData(((200 to 212).map(t => ("d", t.toDouble, 0.0)) :+ ("d", 213.0, 9.0)): _*)
-      q.processAllAvailable()
-      assert(spark.table("stat_out").count() === 1)
-    } finally q.stop()
-  }
-
-  test("stationaryStream: end-of-data run closes on event-time timeout, short run never does") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Double, Double)](spark)
-    val q = CanStreams
-      .stationaryStream(ms.toDS(), closeAfterSec = 30.0)
-      .writeStream.format("memory").queryName("stat_eod_out").outputMode("append").start()
-    try {
-      // device parks: 16 s of zeros (t=300..315), then stops logging forever
-      ms.addData((300 to 315).map(t => ("e", t.toDouble, 0.0)): _*)
-      q.processAllAvailable()
-      assert(spark.table("stat_eod_out").count() === 0) // still open, not timed out
-      // a LATER, UNRELATED device advances the watermark past 315+30
-      ms.addData(("other", 400.0, 50.0))
-      q.processAllAvailable()
-      ms.addData(("other", 401.0, 50.0)) // nudge a further batch so the timeout fires
-      q.processAllAvailable()
-      val got = spark.table("stat_eod_out").collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-      assert(got === Array(("e", 303.0, 312.0)))
-      // a 12 s end-of-data run: times out but never emits (below threshold)
-      ms.addData((500 to 511).map(t => ("f", t.toDouble, 0.0)): _*)
-      q.processAllAvailable()
-      ms.addData(("other", 600.0, 50.0))
-      q.processAllAvailable()
-      ms.addData(("other", 601.0, 50.0))
-      q.processAllAvailable()
-      assert(spark.table("stat_eod_out").count() === 1)
-    } finally q.stop()
-  }
 }

@@ -63,17 +63,4 @@ class MergeSinkSpec extends AnyFunSuite {
     val leftovers = root.toFile.listFiles().map(_.getName).filter(_.startsWith(".graft"))
     assert(leftovers.isEmpty, s"staging dirs not cleared: ${leftovers.mkString(",")}")
   }
-
-  test("compatDropOverlap: overlapping batch is skipped whole (reference parity)") {
-    val dir = Files.createTempDirectory("ms3").toString
-    MergeSink.upsert(spark, table((1L, "a", 1)), dir, Seq("k"), Seq("p"))
-    // overlaps key 1 -> entire batch (incl. the new key 3) dropped
-    MergeSink.upsert(spark, table((1L, "X", 1), (3L, "c", 1)), dir, Seq("k"), Seq("p"),
-      compatDropOverlap = true)
-    assert(readBack(dir) === Set((1L, "a", 1)))
-    // disjoint batch still lands in compat mode
-    MergeSink.upsert(spark, table((4L, "d", 1)), dir, Seq("k"), Seq("p"),
-      compatDropOverlap = true)
-    assert(readBack(dir) === Set((1L, "a", 1), (4L, "d", 1)))
-  }
 }
