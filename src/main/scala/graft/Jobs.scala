@@ -20,6 +20,11 @@ import graft.streaming.CanStreams
   *   events/Autopilot/   day documents of autopilot transitions
   *   ckpt/      streaming checkpoints (source offsets + pivot state)
   *
+  * Each stage does each thing once. `parse` commits each micro-batch in one
+  * pass (MergeSink's one partition collect names the hours to re-channelize);
+  * `infer` scans the landing JSON once per document type, and an empty
+  * landing writes no document.
+  *
   * Usage: Jobs (parse|infer|all) <rawDir> <workDir>
   */
 object Jobs {
@@ -36,15 +41,13 @@ object Jobs {
 
   def infer(spark: org.apache.spark.sql.SparkSession, workDir: String): Unit = {
     val landing = LandingIO.readLanding(spark, s"$workDir/landing_json")
-    if (!landing.isEmpty) {
-      LandingIO.writeStationaryDocs(
-        CanPipelines.stationaryIntervals(CanPipelines.speedSeries(landing)),
-        s"$workDir/events/Stationary")
-      LandingIO.writeAutopilotDocs(
-        CanPipelines.autopilotDaily(
-          CanPipelines.autopilotTransitions(CanPipelines.apSeries(landing))),
-        s"$workDir/events/Autopilot")
-    }
+    LandingIO.writeStationaryDocs(
+      CanPipelines.stationaryIntervals(CanPipelines.speedSeries(landing)),
+      s"$workDir/events/Stationary")
+    LandingIO.writeAutopilotDocs(
+      CanPipelines.autopilotDaily(
+        CanPipelines.autopilotTransitions(CanPipelines.apSeries(landing))),
+      s"$workDir/events/Autopilot")
   }
 
   private val Usage = "usage: Jobs parse <rawDir> <workDir> | Jobs infer <workDir> | Jobs all <rawDir> <workDir>"

@@ -32,7 +32,10 @@ object CanCodec {
   val SpeedOffset    = -40.0
   val GnssFactor     = 1e-6
 
-  /** code -> state name (reference parse_canserver_filtered_log.py:109-110). */
+  /** code -> state name (reference parse_canserver_filtered_log.py:109-110).
+    * Codes it lacks have no name; the reference KeyErrors on them (SURVEY
+    * §2.7-7).
+    */
   val ApStates: Map[Int, String] = Map(
     0  -> "DISABLED",
     1  -> "UNAVAILABLE",
@@ -98,7 +101,4 @@ object CanCodec {
 
   // --- frame 921: 4-bit state code -------------------------------------------
   def apCode(p: Long): Int = (p & 0x0fL).toInt
-
-  /** Total: unknown codes map to None (reference KeyErrors; SURVEY §2.7-7). */
-  def apState(p: Long): Option[String] = ApStates.get(apCode(p))
 }

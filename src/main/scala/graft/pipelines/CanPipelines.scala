@@ -8,8 +8,8 @@ import graft.operators.{Sessionize, Transitions}
 
 /** The three reference domain computations as pure batch
   * DataFrame -> DataFrame functions (the oracle-testable surface). The
-  * parse stream (`graft.streaming.CanStreams`) lands the same pivot shape
-  * and re-channelizes dirty hours with `channelize`; `graft.Jobs.infer`
+  * parse stream (`graft.streaming.CanStreams`) runs `pivot` itself under a
+  * watermark and re-channelizes dirty hours with `channelize`; `graft.Jobs.infer`
   * runs the stationary and autopilot functions over the whole landing
   * history.
   *
@@ -28,7 +28,12 @@ object CanPipelines {
     * source frame in well-formed logs, so `first` is deterministic; on
     * duplicates the reference keeps the LAST frame — a documented divergence.
     *
-    * Input: CanDecode.decodeFiles output. One shuffle on epoch_sec; partial
+    * The key is (device, ts, epoch_sec). `ts` and `epoch_sec` are both exact
+    * functions of `frame_time_micros`, so `ts` splits no group; keeping it a
+    * key is what lets the parse stream (`CanStreams.pivotStream`) run this
+    * same pivot under a watermark on `ts`, which evicts its state.
+    *
+    * Input: CanDecode.decodeFiles output. One shuffle on the key; partial
     * aggregation makes the map-side combine absorb the per-file fan-in.
     */
   def pivot(decoded: DataFrame): DataFrame = {
@@ -36,11 +41,10 @@ object CanPipelines {
       "long_acc", "lat_acc", "vert_acc",
       "yaw_rate", "pitch_rate", "roll_rate",
       "lat", "long", "speed", "ap_status")
+    val firsts = signals.map(s => first(col(s), ignoreNulls = true).as(s))
     decoded
-      .groupBy(col("device"), col("epoch_sec"))
-      .agg(
-        min(col("ts")).as("ts"),
-        signals.map(s => first(col(s), ignoreNulls = true).as(s)): _*)
+      .groupBy(col("device"), col("ts"), col("epoch_sec"))
+      .agg(firsts.head, firsts.tail: _*)
       // unit annotations, present iff the signal is (reference wide row
       // parse_canserver_filtered_log.py:154,165,169)
       .withColumn("acc_unit", when(col("long_acc").isNotNull, "m/s^2"))

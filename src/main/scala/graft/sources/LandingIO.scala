@@ -23,8 +23,10 @@ import org.apache.spark.sql.types._
   * and enable nested-column pruning.
   *
   * Writes go through the Hadoop FileSystem API from executors, so the same
-  * code addresses file://, hdfs:// or s3a:// targets; empty inputs are
-  * guarded (the reference's non-empty checks, infer_stationary_states.py:73).
+  * code addresses file://, hdfs:// or s3a:// targets. An empty input writes
+  * no file (the reference's non-empty checks, infer_stationary_states.py:73)
+  * because each partition writes only the documents it holds; no separate
+  * emptiness job runs.
   */
 object LandingIO {
 
@@ -41,7 +43,7 @@ object LandingIO {
     StructField("speed", chanType(DoubleType)),
     StructField("ap_status", chanType(StringType))))
 
-  /** Write one named single-object JSON file per row: (nameCol, jsonCol).
+  /** Write one named single-object JSON file per row of `docs`: (name, doc).
     *
     * Overwrites go through FileContext's atomic Rename.OVERWRITE where the
     * filesystem provides one (posix/HDFS): a crash can then never leave the
@@ -52,8 +54,7 @@ object LandingIO {
     * from a crashed earlier run are swept before writing (single concurrent
     * writer per outDir assumed, as with MergeSink).
     */
-  private def writeDocs(docs: DataFrame, nameCol: String, jsonCol: String, outDir: String): Unit = {
-    if (docs.isEmpty) return // non-empty guard
+  private def writeDocs(docs: DataFrame, outDir: String): Unit = {
     // Session Hadoop conf (spark.hadoop.* — s3a credentials etc.) serialized
     // into the closure; executor-side `new Configuration()` only sees
     // classpath XML and would break s3a:// targets.
@@ -73,7 +74,7 @@ object LandingIO {
       }
     }
     docs
-      .select(col(nameCol), col(jsonCol))
+      .select(col("name"), col("doc"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         if (rows.nonEmpty) {
           val conf = new Configuration(false)
@@ -112,16 +113,9 @@ object LandingIO {
     */
   def writeLandingDocs(landing: DataFrame, outDir: String): Unit =
     writeDocs(
-      landing
-        .withColumn(
-          "doc",
-          to_json(struct(col("accel"), col("gyro"), col("location"), col("speed"), col("ap_status"))))
-        .withColumn(
-          "__name",
-          when(col("device").isNull || col("device") === "", col("filename"))
-            .otherwise(concat_ws("/", col("device"), col("filename")))),
-      "__name",
-      "doc",
+      landing.select(
+        docName(landing, col("filename")).as("name"),
+        to_json(struct(col("accel"), col("gyro"), col("location"), col("speed"), col("ap_status"))).as("doc")),
       outDir)
 
   /** Schema'd recursive read of a landing-document tree; the device comes
@@ -134,41 +128,6 @@ object LandingIO {
       .option("pathGlobFilter", "*.json")
       .json(dir)
       .withColumn("device", regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1))
-
-  /** `readLanding` with a BAD-RECORD CHANNEL (the JSON twin of the binary
-    * scan's framing census): malformed lines survive the read in a
-    * `_corrupt` column instead of silently becoming all-null rows, split
-    * into (good, bad) frames. At 100 TB a scraped landing tree always
-    * carries truncated uploads and stray bytes — dropping them silently
-    * corrupts counts, failing the whole read loses the good 99.99%; the
-    * channel quarantines the bad lines (with their source file) for
-    * inspection without stopping the pipeline.
-    */
-  def readLandingWithBadRecords(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val withCorrupt = StructType(landingSchema.fields :+ StructField("_corrupt", StringType))
-    val raw = spark.read
-      .schema(withCorrupt)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.json")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(dir)
-      // capture file provenance BEFORE the checkpoint below severs the
-      // scan context (input_file_name is empty on a concrete RDD)
-      .withColumn("file", input_file_name())
-      .withColumn("device", regexp_extract(col("file"), "([^/]+)/[^/]+$", 1))
-      // Spark's corrupt-column contract: the flag is only materialized when
-      // referenced, and filtering the SAME scan on it requires a
-      // materialization barrier — cache would leak across calls, so read
-      // once into a concrete RDD
-      .localCheckpoint(true)
-    val good = raw.filter(col("_corrupt").isNull).drop("_corrupt", "file")
-    val bad = raw
-      .filter(col("_corrupt").isNotNull)
-      .select(col("device"), col("file"), col("_corrupt"))
-    (good, bad)
-  }
 
   /** Device-prefixed document name when the frame carries a device column. */
   private def docName(df: DataFrame, base: Column): Column =
@@ -190,7 +149,7 @@ object LandingIO {
     val named = daily.select(
       docName(daily, concat(lit("canserver-events_"), date_format(col("date"), "yyyy-MM-dd"))).as("name"),
       to_json(struct(struct(col("iv").as("stationary-state")).as("IMU-telematics"))).as("doc"))
-    writeDocs(named, "name", "doc", outDir)
+    writeDocs(named, outDir)
   }
 
   /** Day documents for autopilot transitions, from CanPipelines.autopilotDaily:
@@ -202,7 +161,5 @@ object LandingIO {
       daily.select(
         docName(daily, concat(lit("canserver-events_"), date_format(col("date"), "yyyy-MM-dd"))).as("name"),
         to_json(struct(col("auditory"))).as("doc")),
-      "name",
-      "doc",
       outDir)
 }

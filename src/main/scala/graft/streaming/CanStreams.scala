@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.decode.CanDecode
+import graft.pipelines.CanPipelines
+import graft.sources.LandingIO
 
 /** The parse stage as one Structured Streaming job (SURVEY §2.6): the file
   * source replaces the S3 -> SNS -> SQS hops, the 1.2 s watermark replaces
@@ -41,35 +43,24 @@ object CanStreams {
         .load(rawDir))
   }
 
-  /** Watermarked per-epoch pivot: the streaming form of CanPipelines.pivot.
-    * State is one wide row per live epoch, evicted 1.2 s (event time) after
-    * the epoch — exactly the reference's bounded out-of-order buffer.
+  /** Watermarked per-epoch pivot: CanPipelines.pivot over a 1.2 s event-time
+    * watermark on `ts`. State is one wide row per live epoch, evicted 1.2 s
+    * (event time) after the epoch — exactly the reference's bounded
+    * out-of-order buffer.
     */
-  def pivotStream(decoded: DataFrame): DataFrame = {
-    val signals = Seq(
-      "long_acc", "lat_acc", "vert_acc",
-      "yaw_rate", "pitch_rate", "roll_rate",
-      "lat", "long", "speed", "ap_status")
-    decoded
-      .withWatermark("ts", "1.2 seconds")
-      .groupBy(col("device"), col("ts"), col("epoch_sec"))
-      .agg(
-        first(col(signals.head), ignoreNulls = true).as(signals.head),
-        signals.tail.map(s => first(col(s), ignoreNulls = true).as(s)): _*)
-      // same unit annotations as the batch pivot (landing schema parity)
-      .withColumn("acc_unit", when(col("long_acc").isNotNull, "m/s^2"))
-      .withColumn("gyro_unit", when(col("yaw_rate").isNotNull, "rad/s"))
-      .withColumn("speed_unit", when(col("speed").isNotNull, "KPH"))
-  }
+  def pivotStream(decoded: DataFrame): DataFrame =
+    CanPipelines.pivot(decoded.withWatermark("ts", "1.2 seconds"))
 
   /** Parse stage as a runnable job: raw logs -> pivoted landing table
     * (parquet, partitioned by date/hour, merged idempotently on epoch) and
     * the hourly channelized JSON documents under `landingJsonDir`.
     *
-    * The JSON documents are maintained INCREMENTALLY: after each upsert,
-    * only the (date, hour) partitions touched by the batch are read back
-    * (partition-pruned scan) and re-channelized — a full-history rescan per
-    * invocation would grow with table age, not batch size.
+    * The JSON documents are maintained INCREMENTALLY: `MergeSink.upsert`
+    * returns the (date, hour) partitions the batch touched, and only those
+    * are read back (partition-pruned, with the batch's schema) and
+    * re-channelized — a full-history rescan per invocation would grow with
+    * table age, not batch size. An empty micro-batch returns no partitions
+    * and writes nothing.
     */
   def runParse(
       spark: SparkSession,
@@ -84,22 +75,18 @@ object CanStreams {
       .writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        val cached = batch.cache()
+        val ss       = batch.sparkSession
+        val partCols = Seq("date", "hour")
+        val cached   = batch.cache()
         try {
-          MergeSink.upsert(
+          val dirty = MergeSink.upsert(
             ss, cached, landingDir,
             keyCols = Seq("device", "epoch_sec"),
-            partitionCols = Seq("date", "hour"))
-          val dirty = cached.select(col("date"), col("hour")).distinct().collect()
-          if (dirty.nonEmpty) {
-            val pred = dirty
-              .map(r => col("date") === lit(r.getDate(0)) && col("hour") === lit(r.getInt(1)))
-              .reduce(_ || _)
-            val touched = ss.read.parquet(landingDir).filter(pred) // pruned
-            graft.sources.LandingIO.writeLandingDocs(
-              graft.pipelines.CanPipelines.channelize(touched), landingJsonDir)
-          }
+            partitionCols = partCols)
+          if (dirty.nonEmpty)
+            LandingIO.writeLandingDocs(
+              CanPipelines.channelize(MergeSink.readPartitions(ss, landingDir, cached.schema, partCols, dirty)),
+              landingJsonDir)
         } finally cached.unpersist()
       }
       .option("checkpointLocation", checkpointDir)

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent partitioned upsert — the foreachBatch replacement for the
   * reference's whole-object read-modify-write merges
@@ -15,10 +16,13 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.7-4), and re-processing the same input is a no-op — which is
   * what makes checkpoint-recovery replays safe (exactly-once effect).
   *
-  * Scale posture: only partitions present in the batch are read back
-  * (left-semi against the batch's distinct partition values, which prunes on
-  * the partition columns) and only those are rewritten. Untouched partitions
-  * are never scanned or written.
+  * One pass per batch: `upsert` collects the batch's distinct partition
+  * values once. That collect is the empty check (an empty batch returns no
+  * values and touches nothing), prunes the read of the old rows, and is
+  * returned, so the caller knows the dirty partitions without a second
+  * job. Only those partitions are read back (with the batch's schema, so no
+  * schema-inference job runs) and rewritten. Untouched partitions are never
+  * scanned or written.
   *
   * Commit protocol (crash-safe): the merge is materialized to a DETERMINISTIC
   * temp sibling (`.graft-tmp-<target>`), then each dirty partition directory
@@ -39,6 +43,18 @@ object MergeSink {
 
   private def relOf(root: Path, leaf: Path, fs: FileSystem): String =
     fs.makeQualified(leaf).toString.stripPrefix(root.toString).stripPrefix("/")
+
+  /** True iff a partition leaf `depth` levels below `dir` holds a data
+    * file: committed data. Hidden names (`_temporary`, the staging a crashed
+    * first write leaves, `_SUCCESS`, `.crc`) and empty partition dirs do not
+    * count. Stops at the first data file.
+    */
+  private def hasData(fs: FileSystem, dir: Path, depth: Int): Boolean =
+    fs.listStatus(dir).exists { s =>
+      val name = s.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") &&
+      (if (depth == 0) s.isFile else s.isDirectory && hasData(fs, s.getPath, depth - 1))
+    }
 
   private def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
@@ -70,14 +86,19 @@ object MergeSink {
     * only guaranteed for readers that do not overlap a commit. Gate reads
     * on a quiesced sink (the AvailableNow drain model) or snapshot the
     * table first where overlap is possible.
+    *
+    * @return the batch's distinct `partitionCols` values, the partitions
+    *         this upsert rewrote; empty for an empty batch, which writes
+    *         nothing
     */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       targetDir: String,
       keyCols: Seq[String],
-      partitionCols: Seq[String]): Unit = {
-    if (batch.isEmpty) return
+      partitionCols: Seq[String]): Seq[Row] = {
+    val dirty = batch.select(partitionCols.map(col): _*).distinct().collect().toSeq
+    if (dirty.isEmpty) return dirty
 
     val conf   = spark.sessionState.newHadoopConf()
     val rawTgt = new Path(targetDir)
@@ -89,48 +110,62 @@ object MergeSink {
     // heal any crashed previous commit BEFORE reading the target
     recover(fs, target, tmp, trash, partitionCols.length)
 
-    val existing: Option[DataFrame] =
-      try Some(spark.read.parquet(targetDir)) catch { case _: AnalysisException => None }
+    // a target without committed data (missing, or a crashed first
+    // write's leftovers) is overwritten whole
+    if (!fs.exists(target) || !hasData(fs, target, partitionCols.length))
+      batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
+    else {
+      val oldDirty = readPartitions(spark, targetDir, batch.schema, partitionCols, dirty)
+        .select(batch.columns.map(col): _*) // align column order
+      // batch rows win on key collision
+      val w = Window
+        .partitionBy(keyCols.map(col): _*)
+        .orderBy(col("__pri"))
+      val merged = batch
+        .withColumn("__pri", lit(0))
+        .unionByName(oldDirty.withColumn("__pri", lit(1)))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__pri", "__rn")
 
-    existing match {
-      case None =>
-        batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
-      case Some(old) =>
-        val dirty = batch.select(partitionCols.map(col): _*).distinct()
-        val oldDirty = old
-          .join(broadcast(dirty), partitionCols, "left_semi")
-          .select(batch.columns.map(col): _*) // align column order
-        // batch rows win on key collision
-        val w = Window
-          .partitionBy(keyCols.map(col): _*)
-          .orderBy(col("__pri"))
-        val merged = batch
-          .withColumn("__pri", lit(0))
-          .unionByName(oldDirty.withColumn("__pri", lit(1)))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .drop("__pri", "__rn")
-
-        // Two-phase commit: materialize the merge to the temp sibling (the
-        // job never deletes data it is still reading), then swap each dirty
-        // partition in with renames. On swap failure the exception
-        // propagates with tmp/trash intact — the NEXT upsert's recover()
-        // restores them; nothing is deleted until its replacement is in
-        // place.
-        merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
-        leafDirs(fs, tmp, partitionCols.length).foreach { leaf =>
-          val rel   = relOf(tmp, leaf, fs)
-          val dest  = if (rel.isEmpty) target else new Path(target, rel)
-          val aside = if (rel.isEmpty) trash else new Path(trash, rel)
-          if (fs.exists(dest)) {
-            fs.mkdirs(aside.getParent)
-            renameOrFail(fs, dest, aside)
-          }
-          fs.mkdirs(dest.getParent)
-          renameOrFail(fs, leaf, dest)
+      // Two-phase commit: materialize the merge to the temp sibling (the
+      // job never deletes data it is still reading), then swap each dirty
+      // partition in with renames. On swap failure the exception
+      // propagates with tmp/trash intact — the NEXT upsert's recover()
+      // restores them; nothing is deleted until its replacement is in
+      // place.
+      merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
+      leafDirs(fs, tmp, partitionCols.length).foreach { leaf =>
+        val rel   = relOf(tmp, leaf, fs)
+        val dest  = if (rel.isEmpty) target else new Path(target, rel)
+        val aside = if (rel.isEmpty) trash else new Path(trash, rel)
+        if (fs.exists(dest)) {
+          fs.mkdirs(aside.getParent)
+          renameOrFail(fs, dest, aside)
         }
-        fs.delete(trash, true)
-        fs.delete(tmp, true)
+        fs.mkdirs(dest.getParent)
+        renameOrFail(fs, leaf, dest)
+      }
+      fs.delete(trash, true)
+      fs.delete(tmp, true)
     }
+    dirty
+  }
+
+  /** The rows of `targetDir` in the given partitions (values of
+    * `partitionCols`, matched null-safe), read with `schema`: the file index
+    * prunes on the predicate, and a given schema runs no inference job.
+    * `partitions` must be non-empty.
+    */
+  def readPartitions(
+      spark: SparkSession,
+      targetDir: String,
+      schema: StructType,
+      partitionCols: Seq[String],
+      partitions: Seq[Row]): DataFrame = {
+    val pred: Column = partitions
+      .map(r => partitionCols.indices.map(i => col(partitionCols(i)) <=> lit(r.get(i))).foldLeft(lit(true))(_ && _))
+      .reduce(_ || _)
+    spark.read.schema(schema).parquet(targetDir).filter(pred)
   }
 }

@@ -64,10 +64,11 @@ class CanCodecSpec extends AnyFunSuite {
   }
 
   test("ap state map matches the reference dict; unknown codes -> None") {
-    assert(CanCodec.apState(3) === Some("ACTIVE_NOMINAL"))
-    assert(CanCodec.apState(15) === Some("SNA"))
-    assert(CanCodec.apState(14) === Some("FAULT"))
-    assert(CanCodec.apState(6) === None) // reference KeyErrors here (SURVEY §2.7-7)
+    def apState(p: Long) = CanCodec.ApStates.get(CanCodec.apCode(p))
+    assert(apState(3) === Some("ACTIVE_NOMINAL"))
+    assert(apState(15) === Some("SNA"))
+    assert(apState(14) === Some("FAULT"))
+    assert(apState(6) === None) // reference KeyErrors here (SURVEY §2.7-7)
     assert(CanCodec.ApCodes("FAULT") === 14) // total reverse map
   }
 

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
 
 /** ScalaCheck laws for the projection kernel (pure, no Spark session):
@@ -11,6 +11,8 @@ import org.scalacheck.Prop.forAll
   * the shared null/empty contract.
   */
 object RandomProjectProps extends Properties("RandomProject") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters = graft.FixedSeed(p, 4L)
 
   private val dimGen = Gen.choose(1, 96)
   private val finiteFloat: Gen[Float] = Gen.chooseNum(-1000f, 1000f)

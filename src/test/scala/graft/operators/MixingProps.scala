@@ -11,7 +11,7 @@ import org.scalacheck.Prop.forAll
 object MixingProps extends Properties("Mixing") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(6).withMaxDiscardRatio(10)
+    graft.FixedSeed(p.withMinSuccessfulTests(6).withMaxDiscardRatio(10), 2L)
 
   private lazy val spark = graft.SparkTestSession.spark
 

@@ -13,7 +13,7 @@ import org.scalacheck.Prop.forAll
 object RankedPrefixProps extends Properties("RankedPrefix") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(8).withMaxDiscardRatio(10)
+    graft.FixedSeed(p.withMinSuccessfulTests(8).withMaxDiscardRatio(10), 1L)
 
   private lazy val spark = graft.SparkTestSession.spark
 

@@ -1,6 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -86,13 +89,25 @@ class LandingIOSpec extends AnyFunSuite {
     assert(ap.contains("\"canbus_state\":3") && ap.contains("\"canbus_state\":0"))
   }
 
+  // The cross-file fixture: two logs of one device, t0 = 2023-11-14
+  // 22:13:20 UTC. File A: zero speed t0..t0+10 s, AP code 2 at its end —
+  // neither the 10 s run nor an edge is complete inside this file.
+  private val t0 = 1700000000L * 1000000L
+  private def zeros(secs: Range) = secs.flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray
+  private def ap(sec: Int, code: Byte) = frame(sec * 1000, 921, 0, Array[Byte](code))
+  private def writeFileA(raw: String): Unit =
+    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), zeros(0 to 10), ap(5, 2), ap(10, 2)))
+  // File B: code 3 at its first frame, zeros to t0+20 s, then moving — the
+  // run is t0..t0+20 s across both files.
+  private def writeFileB(raw: String): Unit =
+    Files.write(
+      Paths.get(raw, "b.log"),
+      file(timesync(t0), ap(11, 3), zeros(11 to 20), frame(21000, 599, 0, speedPayload(30.0)), ap(21, 3)))
+
   test("Jobs: an AP edge and a stationary run spanning two files and two invocations") {
-    val t0   = 1700000000L * 1000000L // 2023-11-14 22:13:20 UTC
     val raw  = Files.createTempDirectory("xfile_raw").toString
     val work = Files.createTempDirectory("xfile_work").toString
     val dev  = new java.io.File(raw).getName
-    def zeros(secs: Range) = secs.flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray
-    def ap(sec: Int, code: Byte) = frame(sec * 1000, 921, 0, Array[Byte](code))
     def eventDocs(): Map[String, Seq[Byte]] = {
       val root = Paths.get(work, "events")
       if (!Files.exists(root)) Map.empty
@@ -105,18 +120,13 @@ class LandingIOSpec extends AnyFunSuite {
       }
     }
 
-    // file A: zero speed t0..t0+10 s, AP code 2 at its end — neither the
-    // 10 s run nor an edge is complete inside this file
-    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), zeros(0 to 10), ap(5, 2), ap(10, 2)))
+    writeFileA(raw)
     Jobs.parse(spark, raw, work)
     Jobs.infer(spark, work)
     assert(eventDocs().isEmpty, s"one file alone produced events: ${eventDocs().keys}")
 
-    // file B, a later invocation: code 3 at its first frame, zeros to
-    // t0+20 s, then moving — the run is t0..t0+20 s across both files
-    Files.write(
-      Paths.get(raw, "b.log"),
-      file(timesync(t0), ap(11, 3), zeros(11 to 20), frame(21000, 599, 0, speedPayload(30.0)), ap(21, 3)))
+    // file B, a later invocation
+    writeFileB(raw)
     Jobs.parse(spark, raw, work)
     Jobs.infer(spark, work)
 
@@ -135,6 +145,34 @@ class LandingIOSpec extends AnyFunSuite {
     // document byte for byte
     Jobs.infer(spark, work)
     assert(eventDocs() === docs)
+  }
+
+  /** Spark jobs `body` starts, counted after the listener bus drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc, 60000L)
+    val n = new AtomicInteger
+    val l = new SparkListener { override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet() }
+    sc.addSparkListener(l)
+    try { body; ListenerBridge.drain(sc, 60000L) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("Jobs: each invocation of the cross-file fixture runs a fixed job count") {
+    val raw  = Files.createTempDirectory("jobs_count_raw").toString
+    val work = Files.createTempDirectory("jobs_count_work").toString
+    def invocation(): (Int, Int) = (jobsOf(Jobs.parse(spark, raw, work)), jobsOf(Jobs.infer(spark, work)))
+    writeFileA(raw)
+    val first = invocation()
+    writeFileB(raw)
+    val second = invocation()
+    // parse: the data micro-batch's one partition collect, the landing
+    // write (first write, then merge), the dirty-hour re-channelize; plus
+    // the no-data batch's partition collect. No emptiness job, no parquet
+    // schema inference, no second collect. infer: per document type one
+    // landing scan to the window shuffle and one document write.
+    assert((first, second) === ((4, 4), (4, 4)))
   }
 
   test("landing write -> schema'd read preserves channel structure") {
@@ -157,31 +195,6 @@ class LandingIOSpec extends AnyFunSuite {
     assert(accel.length === 1 && loc.length === 1)
     assert(accel.head.getAs[scala.collection.Seq[Double]]("value") === Seq(0.00125, 0.0025, 0.00375))
     assert(row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("speed").isEmpty)
-  }
-
-  test("bad-record channel: malformed JSON lines quarantine with provenance; good rows unaffected") {
-    val dir = Files.createTempDirectory("landbad").toString
-    Files.createDirectories(Paths.get(dir, "devA"))
-    val goodDoc =
-      """{"accel":[{"timestamp":1.5,"value":[0.1,0.2,0.3]}],"gyro":[],"location":[],"speed":[],"ap_status":[]}"""
-    Files.write(Paths.get(dir, "devA", "good.json"), goodDoc.getBytes("UTF-8"))
-    Files.write(Paths.get(dir, "devA", "trunc.json"), """{"accel":[{"timestamp":2.""".getBytes("UTF-8"))
-
-    val (good, bad) = LandingIO.readLandingWithBadRecords(spark, dir)
-    assert(good.count() === 1)
-    val g = good.head()
-    assert(g.getAs[String]("device") === "devA")
-    assert(g.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("accel").length === 1)
-    assert(!good.columns.contains("_corrupt"))
-
-    val b = bad.collect()
-    assert(b.length === 1)
-    assert(b.head.getAs[String]("device") === "devA")
-    assert(b.head.getAs[String]("file").endsWith("trunc.json"))
-    assert(b.head.getAs[String]("_corrupt").startsWith("""{"accel":[{"timestamp":2."""))
-
-    // the strict reader still sees only the parseable document
-    assert(LandingIO.readLanding(spark, dir).count() === 2) // permissive all-null row included
   }
 
   test("re-write overwrites atomically and sweeps stale .tmp leftovers") {

@@ -1,13 +1,15 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
 
 /** Merge-sink semantics: batch-wins upsert, untouched-partition isolation,
-  * and the reference-parity disjoint-or-skip compat mode (SURVEY §2.5).
+  * crash recovery, the first-write branch for a target without committed
+  * data, and the dirty-partition set `upsert` returns.
   */
 class MergeSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -62,5 +64,43 @@ class MergeSinkSpec extends AnyFunSuite {
     assert(readBack(dir) === Set((1L, "a", 1), (2L, "b", 2), (3L, "c", 3)))
     val leftovers = root.toFile.listFiles().map(_.getName).filter(_.startsWith(".graft"))
     assert(leftovers.isEmpty, s"staging dirs not cleared: ${leftovers.mkString(",")}")
+  }
+
+  test("a target dir with no committed data takes the first-write branch") {
+    import java.nio.file.{Files => JFiles}
+    val dir = Files.createTempDirectory("ms6").resolve("tgt")
+    // a crashed first write: staging under _temporary, an empty partition
+    // dir, no data file a reader would see
+    JFiles.createDirectories(dir.resolve("_temporary/0/task_0/p=1"))
+    JFiles.write(dir.resolve("_temporary/0/task_0/p=1/part-0.parquet"), "partial".getBytes)
+    JFiles.createDirectories(dir.resolve("p=7"))
+    val parts = MergeSink.upsert(spark, table((1L, "a", 1)), dir.toString, Seq("k"), Seq("p"))
+    assert(parts.map(_.getInt(0)) === Seq(1))
+    assert(readBack(dir.toString) === Set((1L, "a", 1)))
+    // the overwrite cleared the leftovers; a merge would have kept them
+    assert(!JFiles.exists(dir.resolve("_temporary")) && !JFiles.exists(dir.resolve("p=7")))
+  }
+
+  test("upsert returns exactly the batch's distinct partition values") {
+    val dir = Files.createTempDirectory("ms7").resolve("tgt").toString
+    val first = MergeSink.upsert(spark, table((1L, "a", 1), (2L, "b", 2), (3L, "c", 2)), dir, Seq("k"), Seq("p"))
+    assert(first.map(_.getInt(0)).sorted === Seq(1, 2))
+    // the merge branch returns the batch's partitions, not the target's
+    val second = MergeSink.upsert(spark, table((4L, "d", 3), (5L, "e", 3), (2L, "B", 2)), dir, Seq("k"), Seq("p"))
+    assert(second.map(_.getInt(0)).sorted === Seq(2, 3))
+    assert(readBack(dir) === Set((1L, "a", 1), (2L, "B", 2), (3L, "c", 2), (4L, "d", 3), (5L, "e", 3)))
+  }
+
+  test("an empty batch returns nothing and writes nothing") {
+    val root  = Files.createTempDirectory("ms8")
+    val fresh = root.resolve("fresh").toString
+    assert(MergeSink.upsert(spark, table(), fresh, Seq("k"), Seq("p")).isEmpty)
+    assert(!new java.io.File(fresh).exists())
+    val dir = root.resolve("tgt").toString
+    MergeSink.upsert(spark, table((1L, "a", 1)), dir, Seq("k"), Seq("p"))
+    val before = Files.walk(root).iterator().asScala.map(p => root.relativize(p).toString).toSet
+    assert(MergeSink.upsert(spark, table(), dir, Seq("k"), Seq("p")).isEmpty)
+    assert(Files.walk(root).iterator().asScala.map(p => root.relativize(p).toString).toSet === before)
+    assert(readBack(dir) === Set((1L, "a", 1)))
   }
 }
