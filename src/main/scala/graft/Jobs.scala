@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.GraftSession
 import graft.pipelines.CanPipelines
@@ -14,15 +14,17 @@ import graft.streaming.CanStreams
   * infer_stationary_states.py:50, infer_autopilot_states.py:53).
   *
   * Layout under <workDir>:
-  *   landing/   pivoted signal table (parquet, date/hour partitions)
-  *   landing_json/  hourly channelized documents (JSON-compat view)
+  *   landing/   pivoted signal table (parquet, date/hour partitions):
+  *              the one landing every stage reads
+  *   landing_json/  hourly channelized documents, the reference's output
+  *              contract: an export that no stage reads
   *   events/Stationary/  day documents of stationary intervals
   *   events/Autopilot/   day documents of autopilot transitions
   *   ckpt/      streaming checkpoints (source offsets + pivot state)
   *
   * Each stage does each thing once. `parse` commits each micro-batch in one
   * pass (MergeSink's one partition collect names the hours to re-channelize);
-  * `infer` scans the landing JSON once per document type, and an empty
+  * `infer` scans the landing table once per document type, and an empty
   * landing writes no document.
   *
   * Usage: Jobs (parse|infer|all) <rawDir> <workDir>
@@ -39,8 +41,20 @@ object Jobs {
         s"$workDir/landing_json")
       .awaitTermination()
 
+  /** The landing columns infer uses. A given schema runs no inference job;
+    * the date/hour partition columns still come from the directory names.
+    */
+  private val InferSchema = StructType(Seq(
+    StructField("device", StringType),
+    StructField("epoch_sec", DoubleType),
+    StructField("speed", DoubleType),
+    StructField("ap_status", StringType)))
+
+  /** Runs after `parse` has returned, so it reads a quiesced sink (see
+    * `MergeSink.upsert` on concurrent readers).
+    */
   def infer(spark: org.apache.spark.sql.SparkSession, workDir: String): Unit = {
-    val landing = LandingIO.readLanding(spark, s"$workDir/landing_json")
+    val landing = spark.read.schema(InferSchema).parquet(s"$workDir/landing")
     LandingIO.writeStationaryDocs(
       CanPipelines.stationaryIntervals(CanPipelines.speedSeries(landing)),
       s"$workDir/events/Stationary")

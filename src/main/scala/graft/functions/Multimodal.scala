@@ -94,39 +94,4 @@ object Multimodal {
       transform(
         sequence(lit(0), lit(nSamples - 1)),
         i => hex(substr(col(payloadCol), i * stride + 1, lit(window)))))
-
-  /** A resized asset: fixed-size grid, whatever the input payload size. */
-  final case class MediaResized(
-      media_id: Long,
-      format: String,
-      grid: Array[Double])
-
-  /** FAKE resize: downsample the payload to a fixed `cells`-cell grid of
-    * byte means (each cell averages its contiguous byte span — the
-    * area-interpolation shape of a real image resize, applied to bytes).
-    * Deterministic, input-size-independent output — exactly the property a
-    * real `resize(w, h)` provides; a codec-backed implementation replaces
-    * only the cell-mean body. Batched like `decodeBatch` (iterator in/out,
-    * per-batch setup amortizable). Empty payloads yield an all-zero grid.
-    */
-  def resizeBatch(media: Dataset[MediaRow], cells: Int): Dataset[MediaResized] = {
-    require(cells >= 1, s"cells must be positive, got $cells")
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.map { r =>
-      val bytes = r.payload
-      val grid  = new Array[Double](cells)
-      if (bytes.nonEmpty) {
-        var c = 0
-        while (c < cells) {
-          val lo = (c.toLong * bytes.length / cells).toInt
-          val hi = ((c + 1).toLong * bytes.length / cells).toInt.max(lo + 1).min(bytes.length)
-          var s  = 0L; var i = lo
-          while (i < hi) { s += bytes(i) & 0xff; i += 1 }
-          grid(c) = s.toDouble / (hi - lo)
-          c += 1
-        }
-      }
-      MediaResized(r.media_id, r.format, grid)
-    })
-  }
 }

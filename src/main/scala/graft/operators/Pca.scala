@@ -16,12 +16,6 @@ final case class PcaModel(
     eigenvalues: Array[Double],
     components: Array[Array[Double]]) {
   def dim: Int = mean.length
-
-  /** Fraction of total variance captured by the first `k` components. */
-  def explainedVariance(k: Int): Double = {
-    val tot = eigenvalues.sum
-    if (tot <= 0) 1.0 else eigenvalues.take(k).sum / tot
-  }
 }
 
 /** Principal component analysis over embedding columns — the DATA-TRAINED

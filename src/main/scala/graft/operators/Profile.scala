@@ -44,42 +44,6 @@ object Profile {
       .select(groupCols.map(col) ++ Seq(col("bin"), col("bin_lo"), col("bin_hi"), col("cnt")): _*)
   }
 
-  /** Per-column summary of the named NUMERIC columns: row count, null
-    * count, min, max, decimal-exact sum (the engine's cross-engine-stable
-    * sum form). One pass, one aggregate row per column via explode of a
-    * per-row struct array — no N-pass scan per column.
-    *
-    * Output: col_name, n, n_null, min_v, max_v, sum_v. ("column" itself is
-    * a reserved word in several engines, which would break the oracle
-    * mirror.)
-    */
-  /** MERGEABLE distinct-count sketches (Apache DataSketches HLL via
-    * Spark's hll_sketch_agg): one sketch row per group, persistable as
-    * binary, unionable later WITHOUT rescanning history — the incremental
-    * analytics shape for "distinct users per day, any date range on
-    * demand" at 100 TB: per-partition sketches are built once at ingest
-    * (one shuffle each), and a range query unions a handful of KB-sized
-    * sketches instead of re-scanning the raw rows.
-    *
-    * Output: groupCols..., sketch (binary), estimate (the group's own
-    * distinct estimate, ±~1.6% at the default lgK=12).
-    */
-  def distinctSketch(df: DataFrame, keyCol: String, groupCols: Seq[String]): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(expr(s"hll_sketch_agg($keyCol)").as("sketch"))
-      .withColumn("estimate", expr("hll_sketch_estimate(sketch)"))
-
-  /** Union previously built sketches (e.g. a date range's rows from the
-    * persisted sketch table) into one distinct estimate — no raw-data
-    * rescan. HLL union is register-max: merging partial sketches of a
-    * partitioned corpus estimates the SAME cardinality a direct sketch
-    * over the union would.
-    */
-  def sketchUnionEstimate(sketches: DataFrame): Long =
-    sketches
-      .agg(expr("hll_sketch_estimate(hll_union_agg(sketch))").as("est"))
-      .head().getLong(0)
-
   /** Robust (median/MAD) outlier annotation of a numeric column — the
     * distribution-free quality gate a pipeline runs over embedding norms,
     * doc lengths, or feature magnitudes, where mean/stddev is itself
@@ -210,6 +174,15 @@ object Profile {
           .as("slope")): _*)
   }
 
+  /** Per-column summary of the named NUMERIC columns: row count, null
+    * count, min, max, decimal-exact sum (the engine's cross-engine-stable
+    * sum form). One pass, one aggregate row per column via explode of a
+    * per-row struct array — no N-pass scan per column.
+    *
+    * Output: col_name, n, n_null, min_v, max_v, sum_v. ("column" itself is
+    * a reserved word in several engines, which would break the oracle
+    * mirror.)
+    */
   def numericProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "need at least one column")
     val entries = array(cols.map { c =>

@@ -93,10 +93,4 @@ object Publish {
     }
     (stamped, signature(spark.read.parquet(path)))
   }
-
-  /** True iff the dataset at `path` still matches its manifest. */
-  def isValid(spark: SparkSession, path: String): Boolean = {
-    val (stamped, actual) = validate(spark, path)
-    stamped == actual
-  }
 }

@@ -67,16 +67,4 @@ object Resample {
         col("__vobs").as("value"),
         (col("bin") === col("__bin")).as("observed"))
   }
-
-  /** Gap report over the same grid: per key, the count and fraction of
-    * carried-forward (unobserved) bins — the data-quality number that says
-    * whether a channel is dense enough to train on.
-    */
-  def gapStats(resampled: DataFrame, keyCol: String): DataFrame =
-    resampled
-      .groupBy(col(keyCol))
-      .agg(
-        count(lit(1)).as("n_bins"),
-        sum(when(!col("observed"), 1L).otherwise(0L)).as("n_filled"))
-      .withColumn("fill_ratio", col("n_filled").cast("double") / col("n_bins"))
 }

@@ -218,10 +218,12 @@ object Similarity {
     *    so the shuffle carries only tasks x ncells x dim partial sums —
     *    independent of corpus size;
     *  - the ncells x dim sums collect to the driver (centroids are driver
-    *    state in every k-means) and rebuild the broadcastable centroid row.
+    *    state in every k-means) and rebuild the broadcastable centroid row;
+    *    the driver keeps its copy of that row for the next round.
     * Cosine-argmax assignment + un-normalized means = spherical k-means
     * (the mean's norm cancels in the cosine ranking). Empty cells keep
-    * their previous centroid.
+    * their previous centroid; the seed row is collected only if the first
+    * round leaves a cell empty.
     */
   def kmeansCentroids(
       emb: DataFrame,
@@ -233,8 +235,18 @@ object Similarity {
     require(
       emb.limit(ncells).count() == ncells,
       s"kmeansCentroids: corpus has fewer than ncells=$ncells vectors")
-    var cents: DataFrame =
-      if (farthestSeeds) farthestPointSeeds(emb, ncells) else seedCentroids(emb, ncells)
+    val seed = if (farthestSeeds) farthestPointSeeds(emb, ncells) else seedCentroids(emb, ncells)
+    lazy val seedCells: Map[Long, Seq[Double]] = seed
+      .select(explode(col("cents")).as("c"))
+      .select(col("c.cell_id"), col("c.c_emb"))
+      .collect()
+      .map(r => r.getLong(0) -> r.getSeq[Any](1).map {
+        case f: Float  => f.toDouble
+        case d: Double => d
+      })
+      .toMap
+    var cents: DataFrame          = seed
+    var prev: Long => Seq[Double] = seedCells(_)
     val withN2 = emb.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
     (1 to iters).foreach { _ =>
       val stats = assignCells(withN2, cents, 1)
@@ -250,22 +262,14 @@ object Similarity {
         sums.getOrElseUpdate(cell, new Array[Double](dims))(r.getInt(1)) = r.getDouble(2)
         cnts(cell) = r.getLong(3)
       }
-      val prev = cents
-        .select(explode(col("cents")).as("c"))
-        .select(col("c.cell_id"), col("c.c_emb"))
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Any](1).map {
-          case f: Float  => f.toDouble
-          case d: Double => d
-        }.toArray)
-        .toMap
       val next = (0L until ncells.toLong).map { cell =>
         val mean = sums.get(cell) match {
-          case Some(s) => s.map(_ / cnts(cell))
+          case Some(s) => s.map(_ / cnts(cell)).toSeq
           case None    => prev(cell) // empty cell keeps its centroid
         }
-        (cell, mean.toSeq)
+        (cell, mean)
       }
+      prev = next.toMap
       cents = next
         .toDF("cell_id", "c_emb")
         .withColumn("c_n2", norm2(col("c_emb")))

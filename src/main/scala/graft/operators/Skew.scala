@@ -62,17 +62,4 @@ object Skew {
         (col("cnt") / col("__total")).as("share"),
         (col("cnt") * col("__nkeys") / col("__total")).as("skew_factor"))
   }
-
-  /** Skew-safe count-distinct: pre-aggregate (key, value) pairs — spreading
-    * a hot key's values across the cluster — then count per key. The same
-    * two-phase shape Spark plans for COUNT(DISTINCT) internally; exposed for
-    * composing with other skew handling.
-    */
-  def distinctCountTwoPhase(df: DataFrame, key: Column, value: Column): DataFrame =
-    df.select(key.as("k"), value.as("v"))
-      .filter(col("v").isNotNull) // COUNT(DISTINCT) ignores NULL
-      .groupBy(col("k"), col("v"))
-      .agg(lit(1))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_distinct"))
 }

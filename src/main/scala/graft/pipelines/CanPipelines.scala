@@ -9,9 +9,10 @@ import graft.operators.{Sessionize, Transitions}
 /** The three reference domain computations as pure batch
   * DataFrame -> DataFrame functions (the oracle-testable surface). The
   * parse stream (`graft.streaming.CanStreams`) runs `pivot` itself under a
-  * watermark and re-channelizes dirty hours with `channelize`; `graft.Jobs.infer`
-  * runs the stationary and autopilot functions over the whole landing
-  * history.
+  * watermark and re-channelizes dirty hours with `channelize` into the
+  * exported JSON documents; `graft.Jobs.infer` runs the stationary and
+  * autopilot functions over the whole landing table, whose rows are
+  * `pivot`'s, so `speedSeries`/`apSeries` take pivoted rows.
   *
   * Semantics follow SURVEY §2 with the documented clean-ups of §2.7: real
   * nulls instead of 'NA', ISO hour labels from the window end, all
@@ -90,28 +91,29 @@ object CanPipelines {
         col("speed"),
         col("ap_status"))
 
-  /** Full parse stage: decoded frames -> hourly landing documents. */
-  def parseToLanding(decoded: DataFrame): DataFrame = channelize(pivot(decoded))
-
   // ----------------------------------------------------- landing projections
 
-  /** Carry the device through the channel explode when the doc has one. */
-  private def devCols(landing: DataFrame): Seq[Column] =
-    if (landing.columns.contains("device")) Seq(col("device")) else Seq.empty
-
-  /** speed channel of a landing document -> flat (ts_sec, speed) series
-    * (what infer_stationary_states.py:70-71 projects).
+  /** Pivoted rows (`pivot` output, or the landing table `Jobs.infer` reads)
+    * -> flat (ts_sec, speed) series: the rows where the signal exists, which
+    * are exactly the hourly document's speed channel entries (what
+    * infer_stationary_states.py:70-71 projects).
     */
-  def speedSeries(landing: DataFrame): DataFrame =
-    landing
-      .select(devCols(landing) :+ explode(col("speed")).as("s"): _*)
-      .select(devCols(landing) ++ Seq(col("s.timestamp").as("ts_sec"), col("s.value").as("speed")): _*)
+  def speedSeries(pivoted: DataFrame): DataFrame =
+    pivoted
+      .filter(col("speed").isNotNull)
+      .select(col("device"), col("epoch_sec").as("ts_sec"), col("speed"))
 
-  /** ap_status channel -> flat (ts_sec, state) series (infer_autopilot_states.py:71). */
-  def apSeries(landing: DataFrame): DataFrame =
-    landing
-      .select(devCols(landing) :+ explode(col("ap_status")).as("s"): _*)
-      .select(devCols(landing) ++ Seq(col("s.timestamp").as("ts_sec"), col("s.value").as("state")): _*)
+  /** Pivoted rows -> flat (ts_sec, state) series of the ap_status signal
+    * (infer_autopilot_states.py:71).
+    */
+  def apSeries(pivoted: DataFrame): DataFrame =
+    pivoted
+      .filter(col("ap_status").isNotNull)
+      .select(col("device"), col("epoch_sec").as("ts_sec"), col("ap_status").as("state"))
+
+  /** Carry the device through the event functions when the series has one. */
+  private def devCols(df: DataFrame): Seq[Column] =
+    if (df.columns.contains("device")) Seq(col("device")) else Seq.empty
 
   // ------------------------------------------------------------- stationary
 

@@ -3,12 +3,11 @@ package graft.sources
 import java.net.URI
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** Landing / event JSON document I/O — the reference's whole-object S3
-  * PUT/GET contract re-expressed (reference
+/** Landing / event JSON document writes — the reference's whole-object S3
+  * PUT contract re-expressed (reference
   * parse_canserver_filtered_log.py:350-356, infer_stationary_states.py:135-141,
   * infer_autopilot_states.py:116-122).
   *
@@ -18,9 +17,9 @@ import org.apache.spark.sql.types._
   * not replicate, SURVEY §2.7-8). Documents are written compact (not
   * indent=2) — content-equivalent, byte-layout divergence documented.
   *
-  * Reads are SCHEMA'D (`spark.read.schema(...)`): the reference's
-  * `json.loads` is schema-less and fails late; fixed StructTypes fail fast
-  * and enable nested-column pruning.
+  * The documents are write-only exports: the hourly landing documents are
+  * the reference's output contract, and every engine stage reads the
+  * `landing/` parquet table they are channelized from (`graft.Jobs`).
   *
   * Writes go through the Hadoop FileSystem API from executors, so the same
   * code addresses file://, hdfs:// or s3a:// targets. An empty input writes
@@ -29,19 +28,6 @@ import org.apache.spark.sql.types._
   * emptiness job runs.
   */
 object LandingIO {
-
-  private def chanType(valueType: DataType): ArrayType =
-    ArrayType(StructType(Seq(
-      StructField("timestamp", DoubleType),
-      StructField("value", valueType))))
-
-  /** FIXTURES.md §2 — the hourly channelized document. */
-  val landingSchema: StructType = StructType(Seq(
-    StructField("accel", chanType(ArrayType(DoubleType))),
-    StructField("gyro", chanType(ArrayType(DoubleType))),
-    StructField("location", chanType(ArrayType(DoubleType))),
-    StructField("speed", chanType(DoubleType)),
-    StructField("ap_status", chanType(StringType))))
 
   /** Write one named single-object JSON file per row of `docs`: (name, doc).
     *
@@ -117,17 +103,6 @@ object LandingIO {
         docName(landing, col("filename")).as("name"),
         to_json(struct(col("accel"), col("gyro"), col("location"), col("speed"), col("ap_status"))).as("doc")),
       outDir)
-
-  /** Schema'd recursive read of a landing-document tree; the device comes
-    * back from the per-device subdirectory the documents were written under.
-    */
-  def readLanding(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(landingSchema)
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.json")
-      .json(dir)
-      .withColumn("device", regexp_extract(input_file_name(), "([^/]+)/[^/]+$", 1))
 
   /** Device-prefixed document name when the frame carries a device column. */
   private def docName(df: DataFrame, base: Column): Column =

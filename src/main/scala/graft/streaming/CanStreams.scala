@@ -52,8 +52,9 @@ object CanStreams {
     CanPipelines.pivot(decoded.withWatermark("ts", "1.2 seconds"))
 
   /** Parse stage as a runnable job: raw logs -> pivoted landing table
-    * (parquet, partitioned by date/hour, merged idempotently on epoch) and
-    * the hourly channelized JSON documents under `landingJsonDir`.
+    * (parquet, partitioned by date/hour, merged idempotently on epoch), which
+    * `graft.Jobs.infer` reads, and the hourly channelized JSON documents
+    * under `landingJsonDir`, an export no stage reads.
     *
     * The JSON documents are maintained INCREMENTALLY: `MergeSink.upsert`
     * returns the (date, hour) partitions the batch touched, and only those

@@ -1,5 +1,7 @@
 package graft.decode
 
+import java.nio.file.{Files, Paths}
+
 /** Synthetic CANServer-v2 byte-stream builder (FIXTURES.md §1) plus an
   * INDEPENDENT reference-style decoder.
   *
@@ -29,6 +31,34 @@ object CanFixture {
       (((busId & 0x0f) << 4) | (payload.length & 0x0f)).toByte) ++ payload
 
   def file(parts: Array[Byte]*): Array[Byte] = header ++ parts.flatten
+
+  /** Speed frame (0x257) payload for v KPH: u12 = (v+40)/0.08 -> bytes
+    * [0, (u&0xF)<<4, u>>4].
+    */
+  def speedPayload(v: Double): Array[Byte] = {
+    val u = math.round((v + 40.0) / 0.08).toInt
+    Array[Byte](0x00, ((u & 0x0f) << 4).toByte, (u >> 4).toByte)
+  }
+
+  /** The cross-file fixture: two logs of one device, t0 = 2023-11-14
+    * 22:13:20 UTC. File A: zero speed t0..t0+10 s, AP code 2 at its end —
+    * neither the 10 s run nor an edge is complete inside this file. File B:
+    * code 3 at its first frame, zeros to t0+20 s, then moving — the run is
+    * t0..t0+20 s across both files.
+    */
+  object CrossFile {
+    private val t0 = 1700000000L * 1000000L
+    private def zeros(secs: Range) = secs.flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray
+    private def ap(sec: Int, code: Byte) = frame(sec * 1000, 921, 0, Array[Byte](code))
+
+    def writeA(raw: String): Unit =
+      Files.write(Paths.get(raw, "a.log"), file(timesync(t0), zeros(0 to 10), ap(5, 2), ap(10, 2)))
+
+    def writeB(raw: String): Unit =
+      Files.write(
+        Paths.get(raw, "b.log"),
+        file(timesync(t0), ap(11, 3), zeros(11 to 20), frame(21000, 599, 0, speedPayload(30.0)), ap(21, 3)))
+  }
 
   /** Independent decode: bit-string slicing, as the reference does it. */
   object RefStyleDecode {

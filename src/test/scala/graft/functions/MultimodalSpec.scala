@@ -61,20 +61,4 @@ class MultimodalSpec extends AnyFunSuite {
       .getAs[scala.collection.Seq[String]](0)
     assert(got === Seq("0001", "1011", "2021"))
   }
-
-  test("resizeBatch: fixed-size grid regardless of payload size; cell means exact; empty = zeros") {
-    import spark.implicits._
-    val media = Seq(
-      MediaRow(1L, "bin", Array[Byte](0, 64, 127, -1)),          // 4 bytes -> 2 cells of 2
-      MediaRow(2L, "bin", Array.tabulate(100)(i => i.toByte)),   // 100 bytes -> 2 cells of 50
-      MediaRow(3L, "bin", Array.emptyByteArray)
-    ).toDS()
-    val got = Multimodal.resizeBatch(media, cells = 2)
-      .collect().map(r => r.media_id -> r.grid.toSeq).toMap
-    assert(got(1L) === Seq((0 + 64) / 2.0, (127 + 255) / 2.0))
-    assert(got(2L) === Seq((0 until 50).sum / 50.0, (50 until 100).sum / 50.0))
-    assert(got(3L) === Seq(0.0, 0.0))
-    // every output grid has exactly `cells` entries whatever the input size
-    assert(Multimodal.resizeBatch(media, cells = 7).collect().forall(_.grid.length == 7))
-  }
 }

@@ -35,31 +35,6 @@ class ProfileSpec extends AnyFunSuite {
     assert(got.values.map(_._3).sum === 7L) // everything non-null accounted
   }
 
-  test("distinctSketch: per-group estimates within tolerance; union of parts == direct whole") {
-    import spark.implicits._
-    val rows = (1 to 20000).map(i => (i % 7, (i % 3000).toLong)) // 7 groups, 3000 distinct keys
-    val df   = rows.toDF("g", "k")
-
-    val sketches = Profile.distinctSketch(df, "k", Seq("g")).cache()
-    val exact = df.groupBy("g").agg(countDistinct(col("k")).as("d"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    sketches.select("g", "estimate").collect().foreach { r =>
-      val (g, est) = (r.getInt(0), r.getLong(1))
-      assert(math.abs(est - exact(g)).toDouble / exact(g) < 0.05, s"group $g: $est vs ${exact(g)}")
-    }
-
-    // the incremental contract: union the per-group sketches (no raw
-    // rescan) ≈ distinct over the whole table; and a sketch survives a
-    // parquet round-trip (the persistence path)
-    val dir = java.nio.file.Files.createTempDirectory("sketch").toString + "/t"
-    sketches.select("g", "sketch").write.parquet(dir)
-    val merged = Profile.sketchUnionEstimate(spark.read.parquet(dir))
-    val whole  = df.select(countDistinct(col("k"))).head().getLong(0)
-    assert(math.abs(merged - whole).toDouble / whole < 0.05, s"$merged vs $whole")
-    sketches.unpersist()
-    ()
-  }
-
   test("numericProfile: hand-computed count/nulls/min/max/sum over two columns") {
     import spark.implicits._
     val df = Seq(

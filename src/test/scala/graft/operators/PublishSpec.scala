@@ -18,11 +18,17 @@ class PublishSpec extends AnyFunSuite {
 
   private def df = (1L to 1000L).map(i => (i, s"doc$i", i * 1.5)).toDF("id", "s", "v")
 
+  /** `Publish.validate`'s pair agrees: the dataset matches its manifest. */
+  private def matches(path: String): Boolean = {
+    val (stamped, actual) = Publish.validate(spark, path)
+    stamped == actual
+  }
+
   test("publish then validate: clean dataset matches; checksum ignores layout") {
     val p1 = tmp() + "/d1"
     val m1 = Publish.publish(spark, df.repartition(7), p1)
     assert(m1.rows === 1000L)
-    assert(Publish.isValid(spark, p1))
+    assert(matches(p1))
 
     // same rows, different partitioning/order -> same manifest
     val p2 = tmp() + "/d2"
@@ -58,9 +64,9 @@ class PublishSpec extends AnyFunSuite {
       .filter(_.endsWith(".parquet")).head
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(part))
     Files.delete(java.nio.file.Paths.get(part))
-    assert(!Publish.isValid(spark, p))
+    assert(!matches(p))
     Files.write(java.nio.file.Paths.get(part), bytes) // restore
-    assert(Publish.isValid(spark, p))
+    assert(matches(p))
 
     // smuggle in a duplicate part file: rows double-count, checksum drifts
     val src = Files
@@ -69,9 +75,9 @@ class PublishSpec extends AnyFunSuite {
     Files.copy(
       java.nio.file.Paths.get(src),
       java.nio.file.Paths.get(p, "part-smuggled.parquet"))
-    assert(!Publish.isValid(spark, p))
+    assert(!matches(p))
     Files.delete(java.nio.file.Paths.get(p, "part-smuggled.parquet"))
-    assert(Publish.isValid(spark, p))
+    assert(matches(p))
 
     // unpublished directory: validation must throw, not pass
     val q = tmp() + "/never-published"

@@ -23,15 +23,6 @@ class SkewSpec extends AnyFunSuite {
     assert(salted === plain)
   }
 
-  test("distinctCountTwoPhase == countDistinct") {
-    val e = Tables.events(spark, sfDir)
-    val direct = e.groupBy(col("user_id")).agg(countDistinct(col("event_type")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val twoPhase = Skew.distinctCountTwoPhase(e, col("user_id"), col("event_type"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(twoPhase === direct)
-  }
-
   test("keyStats: hand-computed shares and skew factor on a planted hot key") {
     import spark.implicits._
     val df = ((1 to 90).map(_ => 1L) ++ (1 to 9).map(_ => 2L) ++ Seq(3L)).toDF("k")

@@ -3,7 +3,7 @@ package graft.pipelines
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkTestSession
 import graft.decode.{CanDecode, CanFixture}
@@ -17,12 +17,29 @@ class CanPipelinesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import CanFixture._
 
-  /** speed payload for v KPH: u12 = (v+40)/0.08 -> bytes [0, (u&0xF)<<4, u>>4]. */
-  private def speedPayload(v: Double): Array[Byte] = {
-    val u = math.round((v + 40.0) / 0.08).toInt
-    Array[Byte](0x00, ((u & 0x0f) << 4).toByte, (u >> 4).toByte)
-  }
   private def apPayload(code: Int): Array[Byte] = Array(code.toByte)
+
+  /** The two-hour fixture: hour 1 holds a 15 s stationary run (speed 0 at
+    * +0..15 s) then moving, with AP engagement mid-hour and an accel and a
+    * gyro frame sharing one epoch; hour 2 holds the disengagement.
+    */
+  private def writeTwoHourLog(dir: String): Unit = {
+    val t0 = 1700000000L * 1000000L // 2023-11-14 22:13:20 UTC, µs
+    val t1 = 1700003000L * 1000000L // 23:03:20 UTC (next hour bucket)
+    val hour1 =
+      timesync(t0) ++
+        (0 to 15).flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray ++
+        frame(16000, 599, 0, speedPayload(48.0)) ++
+        frame(17000, 921, 0, apPayload(2)) ++
+        frame(18000, 921, 0, apPayload(3)) ++
+        frame(20000, 273, 0, Array[Byte](1, 0, 2, 0, 3, 0)) ++
+        frame(20000, 257, 0, Array[Byte](4, 0, 0, 0, 0, 0))
+    val hour2 =
+      timesync(t1) ++
+        frame(0, 921, 0, apPayload(3)) ++
+        frame(1000, 921, 0, apPayload(1))
+    Files.write(Paths.get(dir, "trip.log"), file(hour1 ++ hour2))
+  }
 
   private def seriesDF(rows: Seq[(Double, Double)]) = {
     import spark.implicits._
@@ -114,30 +131,11 @@ class CanPipelinesSpec extends AnyFunSuite {
   }
 
   test("end-to-end: binary log -> landing documents -> both inferences") {
-    val t0 = 1700000000L * 1000000L // 2023-11-14 22:13:20 UTC, µs
-    val t1 = 1700003000L * 1000000L // 23:03:20 UTC (next hour bucket)
-
-    // hour 1: a 15 s stationary run (speed 0 at +0..15 s) then moving,
-    // with AP engagement mid-hour; an accel and gyro frame share one epoch.
-    val hour1 =
-      timesync(t0) ++
-        (0 to 15).flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray ++
-        frame(16000, 599, 0, speedPayload(48.0)) ++
-        frame(17000, 921, 0, apPayload(2)) ++
-        frame(18000, 921, 0, apPayload(3)) ++
-        frame(20000, 273, 0, Array[Byte](1, 0, 2, 0, 3, 0)) ++
-        frame(20000, 257, 0, Array[Byte](4, 0, 0, 0, 0, 0))
-    // hour 2: disengagement
-    val hour2 =
-      timesync(t1) ++
-        frame(0, 921, 0, apPayload(3)) ++
-        frame(1000, 921, 0, apPayload(1))
-
     val dir = Files.createTempDirectory("canpipe").toString
-    Files.write(Paths.get(dir, "trip.log"), file(hour1 ++ hour2))
+    writeTwoHourLog(dir)
 
-    val decoded = CanDecode.decodeFiles(spark, dir)
-    val landing = CanPipelines.parseToLanding(decoded).cache()
+    val pivoted = CanPipelines.pivot(CanDecode.decodeFiles(spark, dir))
+    val landing = CanPipelines.channelize(pivoted).cache()
 
     // two hourly documents with end-hour ISO filenames
     val names = landing.select("filename").orderBy("filename").collect().map(_.getString(0))
@@ -156,7 +154,7 @@ class CanPipelinesSpec extends AnyFunSuite {
 
     // stationary: 15 s zero-run -> one trimmed interval (device-keyed now)
     val st = CanPipelines
-      .stationaryIntervals(CanPipelines.speedSeries(landing))
+      .stationaryIntervals(CanPipelines.speedSeries(pivoted))
       .collect()
       .map(r => (r.getAs[Double]("start"), r.getAs[Double]("end")))
     assert(st === Array((1700000000.0 + 3, 1700000015.0 - 3)))
@@ -165,12 +163,39 @@ class CanPipelinesSpec extends AnyFunSuite {
     // 3 -> 1 disengagement (state carried WITHIN the series, incl. across
     // documents when processed together)
     val tr = CanPipelines
-      .autopilotTransitions(CanPipelines.apSeries(landing))
+      .autopilotTransitions(CanPipelines.apSeries(pivoted))
       .orderBy("ts_sec")
       .collect()
       .map(r => (r.getAs[Double]("ts_sec"), r.getAs[Int]("canbus_state"), r.getAs[String]("status")))
     assert(tr === Array(
       (1700000018.0, 3, "engagement"),
       (1700003001.0, 1, "disengagement")))
+  }
+
+  test("speedSeries/apSeries over pivot == the hourly documents' channel entries") {
+    // the reference: an inline explode of channelize's speed/ap_status
+    // channels, which is what infer read before it read the landing table
+    def channelEntries(landing: DataFrame, channel: String) =
+      landing
+        .select(col("device"), explode(col(channel)).as("s"))
+        .select(col("device"), col("s.timestamp"), col("s.value"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.groupBy(identity).map {
+      case (r, n) => r -> n.size
+    }
+    val twoHour = Files.createTempDirectory("series_2h").toString
+    writeTwoHourLog(twoHour)
+    val crossFile = Files.createTempDirectory("series_xfile").toString
+    CrossFile.writeA(crossFile)
+    CrossFile.writeB(crossFile)
+    for (dir <- Seq(twoHour, crossFile)) {
+      val pivoted = CanPipelines.pivot(CanDecode.decodeFiles(spark, dir)).cache()
+      val landing = CanPipelines.channelize(pivoted)
+      val speed   = rows(CanPipelines.speedSeries(pivoted))
+      val ap      = rows(CanPipelines.apSeries(pivoted))
+      assert(speed.nonEmpty && ap.nonEmpty)
+      assert(speed === rows(channelEntries(landing, "speed")), dir)
+      assert(ap === rows(channelEntries(landing, "ap_status")), dir)
+      pivoted.unpersist()
+    }
   }
 }

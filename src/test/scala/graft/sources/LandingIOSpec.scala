@@ -11,16 +11,28 @@ import graft.{Jobs, SparkTestSession}
 import graft.decode.CanFixture._
 import graft.pipelines.CanPipelines
 
-/** Landing/event JSON document contract: exact file naming, schema'd
+/** Landing/event JSON document contract: exact file naming, channel
   * round-trip, and the full raw -> landing -> events chain through the Jobs
-  * driver (the reference DAG end-to-end).
+  * driver (the reference DAG end-to-end), which infers from the landing
+  * table and only exports the landing documents.
   */
 class LandingIOSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def speedPayload(v: Double): Array[Byte] = {
-    val u = math.round((v + 40.0) / 0.08).toInt
-    Array[Byte](0x00, ((u & 0x0f) << 4).toByte, (u >> 4).toByte)
+  /** A document tree read back with `spark.read.json`. */
+  private def jsonDocs(dir: String) = spark.read.option("recursiveFileLookup", "true").json(dir)
+
+  /** Every event document under `work`: path relative to events/ -> bytes. */
+  private def eventDocs(work: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(work, "events")
+    if (!Files.exists(root)) Map.empty
+    else {
+      val b = Map.newBuilder[String, Seq[Byte]]
+      Files.walk(root).forEach { p =>
+        if (p.toString.endsWith(".json")) b += root.relativize(p).toString -> Files.readAllBytes(p).toSeq
+      }
+      b.result()
+    }
   }
 
   test("Jobs: raw binary -> landing parquet+JSON -> event documents, exact names") {
@@ -43,7 +55,7 @@ class LandingIOSpec extends AnyFunSuite {
     Jobs.infer(spark, work)
 
     // landing JSON: exact end-hour filename under the device (= parent dir
-    // of the log, the reference's org prefix), schema'd read round-trips
+    // of the log, the reference's org prefix), read back as JSON
     def jsonNames(dir: String): Seq[String] = {
       val b = scala.collection.mutable.ArrayBuffer.empty[String]
       java.nio.file.Files.walk(Paths.get(dir)).forEach { p =>
@@ -54,7 +66,7 @@ class LandingIOSpec extends AnyFunSuite {
     assert(jsonNames(s"$work/landing_json") === Seq("canserver_2023-11-14_23-00-00.json"))
     val deviceDir = new java.io.File(s"$work/landing_json").list().toSeq
     assert(deviceDir === Seq(new java.io.File(raw).getName)) // per-device subdir
-    val landing = LandingIO.readLanding(spark, s"$work/landing_json")
+    val landing = jsonDocs(s"$work/landing_json")
     assert(landing.count() === 1)
     val speeds = landing.select(explode(col("speed")).as("s")).select("s.value")
       .collect().map(_.getDouble(0))
@@ -78,7 +90,7 @@ class LandingIOSpec extends AnyFunSuite {
     Jobs.parse(spark, raw, work)
     assert(jsonNames(s"$work/landing_json") ===
       Seq("canserver_2023-11-14_23-00-00.json", "canserver_2023-11-15_00-00-00.json"))
-    val oldDoc = LandingIO.readLanding(spark, s"$work/landing_json")
+    val oldDoc = jsonDocs(s"$work/landing_json")
     assert(oldDoc.count() === 2)
 
     // autopilot day document: both transitions kept, under the device prefix
@@ -89,48 +101,22 @@ class LandingIOSpec extends AnyFunSuite {
     assert(ap.contains("\"canbus_state\":3") && ap.contains("\"canbus_state\":0"))
   }
 
-  // The cross-file fixture: two logs of one device, t0 = 2023-11-14
-  // 22:13:20 UTC. File A: zero speed t0..t0+10 s, AP code 2 at its end —
-  // neither the 10 s run nor an edge is complete inside this file.
-  private val t0 = 1700000000L * 1000000L
-  private def zeros(secs: Range) = secs.flatMap(i => frame(i * 1000, 599, 0, speedPayload(0.0))).toArray
-  private def ap(sec: Int, code: Byte) = frame(sec * 1000, 921, 0, Array[Byte](code))
-  private def writeFileA(raw: String): Unit =
-    Files.write(Paths.get(raw, "a.log"), file(timesync(t0), zeros(0 to 10), ap(5, 2), ap(10, 2)))
-  // File B: code 3 at its first frame, zeros to t0+20 s, then moving — the
-  // run is t0..t0+20 s across both files.
-  private def writeFileB(raw: String): Unit =
-    Files.write(
-      Paths.get(raw, "b.log"),
-      file(timesync(t0), ap(11, 3), zeros(11 to 20), frame(21000, 599, 0, speedPayload(30.0)), ap(21, 3)))
-
   test("Jobs: an AP edge and a stationary run spanning two files and two invocations") {
     val raw  = Files.createTempDirectory("xfile_raw").toString
     val work = Files.createTempDirectory("xfile_work").toString
     val dev  = new java.io.File(raw).getName
-    def eventDocs(): Map[String, Seq[Byte]] = {
-      val root = Paths.get(work, "events")
-      if (!Files.exists(root)) Map.empty
-      else {
-        val b = Map.newBuilder[String, Seq[Byte]]
-        Files.walk(root).forEach { p =>
-          if (p.toString.endsWith(".json")) b += root.relativize(p).toString -> Files.readAllBytes(p).toSeq
-        }
-        b.result()
-      }
-    }
 
-    writeFileA(raw)
+    CrossFile.writeA(raw)
     Jobs.parse(spark, raw, work)
     Jobs.infer(spark, work)
-    assert(eventDocs().isEmpty, s"one file alone produced events: ${eventDocs().keys}")
+    assert(eventDocs(work).isEmpty, s"one file alone produced events: ${eventDocs(work).keys}")
 
     // file B, a later invocation
-    writeFileB(raw)
+    CrossFile.writeB(raw)
     Jobs.parse(spark, raw, work)
     Jobs.infer(spark, work)
 
-    val docs = eventDocs()
+    val docs = eventDocs(work)
     val name = s"$dev/canserver-events_2023-11-14.json"
     assert(docs.keySet === Set(s"Autopilot/$name", s"Stationary/$name"))
     def text(k: String) = new String(docs(k).toArray, "UTF-8").trim
@@ -144,7 +130,7 @@ class LandingIOSpec extends AnyFunSuite {
     // replay: a further infer over the same landing rewrites every event
     // document byte for byte
     Jobs.infer(spark, work)
-    assert(eventDocs() === docs)
+    assert(eventDocs(work) === docs)
   }
 
   /** Spark jobs `body` starts, counted after the listener bus drained. */
@@ -159,13 +145,32 @@ class LandingIOSpec extends AnyFunSuite {
     n.get
   }
 
+  test("Jobs: infer reads the landing table; the JSON export is not an input") {
+    val raw  = Files.createTempDirectory("export_raw").toString
+    val kept = Files.createTempDirectory("export_kept").toString
+    val gone = Files.createTempDirectory("export_gone").toString
+    // both work dirs parse the same raw dir, so both see the same device;
+    // one keeps its landing documents, the other deletes them before infer
+    def invocation(): Unit = {
+      Seq(kept, gone).foreach(Jobs.parse(spark, raw, _))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$gone/landing_json"))
+      Seq(kept, gone).foreach(Jobs.infer(spark, _))
+    }
+    CrossFile.writeA(raw)
+    invocation()
+    CrossFile.writeB(raw)
+    invocation()
+    assert(eventDocs(kept).size === 2)
+    assert(eventDocs(gone) === eventDocs(kept))
+  }
+
   test("Jobs: each invocation of the cross-file fixture runs a fixed job count") {
     val raw  = Files.createTempDirectory("jobs_count_raw").toString
     val work = Files.createTempDirectory("jobs_count_work").toString
     def invocation(): (Int, Int) = (jobsOf(Jobs.parse(spark, raw, work)), jobsOf(Jobs.infer(spark, work)))
-    writeFileA(raw)
+    CrossFile.writeA(raw)
     val first = invocation()
-    writeFileB(raw)
+    CrossFile.writeB(raw)
     val second = invocation()
     // parse: the data micro-batch's one partition collect, the landing
     // write (first write, then merge), the dirty-hour re-channelize; plus
@@ -175,7 +180,7 @@ class LandingIOSpec extends AnyFunSuite {
     assert((first, second) === ((4, 4), (4, 4)))
   }
 
-  test("landing write -> schema'd read preserves channel structure") {
+  test("landing write -> JSON read-back preserves channel structure") {
     import spark.implicits._
     val t0 = 1700000000L * 1000000L
     val dir = Files.createTempDirectory("landrt").toString
@@ -185,10 +190,10 @@ class LandingIOSpec extends AnyFunSuite {
         timesync(t0),
         frame(100, 273, 0, Array[Byte](1, 0, 2, 0, 3, 0)),
         frame(200, 79, 0, Array[Byte](0x15, 0x26, 0x37, 0x04, 0x59, 0x6a, 0x0b))))
-    val landing = CanPipelines.parseToLanding(graft.decode.CanDecode.decodeFiles(spark, dir))
+    val landing = CanPipelines.channelize(CanPipelines.pivot(graft.decode.CanDecode.decodeFiles(spark, dir)))
     val out = Files.createTempDirectory("landout").toString
     LandingIO.writeLandingDocs(landing, out)
-    val back = LandingIO.readLanding(spark, out)
+    val back = jsonDocs(out)
     val row  = back.head()
     val accel = row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("accel")
     val loc   = row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("location")
@@ -204,7 +209,7 @@ class LandingIOSpec extends AnyFunSuite {
     Files.write(
       Paths.get(dir, "in.log"),
       file(timesync(t0), frame(100, 273, 0, Array[Byte](1, 0, 2, 0, 3, 0))))
-    val landing = CanPipelines.parseToLanding(graft.decode.CanDecode.decodeFiles(spark, dir))
+    val landing = CanPipelines.channelize(CanPipelines.pivot(graft.decode.CanDecode.decodeFiles(spark, dir)))
     val out = Files.createTempDirectory("landowout").toString
     LandingIO.writeLandingDocs(landing, out)
     val files = java.nio.file.Files.walk(Paths.get(out)).iterator()
@@ -217,7 +222,7 @@ class LandingIOSpec extends AnyFunSuite {
     LandingIO.writeLandingDocs(landing, out) // overwrite same names
     assert(!Files.exists(stale), "stale .tmp not swept")
     // document still present and readable after the overwrite
-    assert(LandingIO.readLanding(spark, out).count() >= 1)
+    assert(jsonDocs(out).count() >= 1)
   }
 
   test("empty inputs are guarded: no files written") {

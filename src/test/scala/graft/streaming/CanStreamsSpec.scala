@@ -20,11 +20,6 @@ class CanStreamsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import CanFixture._
 
-  private def speedPayload(v: Double): Array[Byte] = {
-    val u = math.round((v + 40.0) / 0.08).toInt
-    Array[Byte](0x00, ((u & 0x0f) << 4).toByte, (u >> 4).toByte)
-  }
-
   /** Every landing document under `dir`: relative path -> its bytes. */
   private def jsonDocs(dir: String): Map[String, Seq[Byte]] = {
     val root = Paths.get(dir)
