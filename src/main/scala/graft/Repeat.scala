@@ -1,8 +1,10 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -15,7 +17,9 @@ import graft.Measure.fmt
   * the full rep vector plus min/med/max per cell, and the median phase
   * split of a rep — construct (`q.run`, including the jobs it runs
   * eagerly), plan (`executedPlan`), execute (the `noop` write) — with the
-  * jobs, stages, tasks and task time it launched.
+  * jobs, stages, tasks and task time it launched, the generated classes
+  * Janino compiled (`CodegenMetrics`) and the JIT's compile time
+  * (`CompilationMXBean`) while it ran.
   *
   * Single heavy-cell timings on a shared host carry a 3–6x multiplicative
   * envelope while per-run totals stay within ~4%, so the observables are
@@ -48,7 +52,8 @@ import graft.Measure.fmt
   *    "calib":...,"calib_end":...,"calib_waits":W,
   *    "queries":{"qNN":{"times":[...],"min":m,"med":d,"max":x,
   *      "construct_ms":..,"plan_ms":..,"execute_ms":..,"jobs":..,
-  *      "stages":..,"tasks":..,"task_ms":..}},
+  *      "stages":..,"tasks":..,"task_ms":..,"codegen_compiles":..,
+  *      "jit_ms":..}},
   *    "total_min":...,"total_med":...,"failed":[...],"loadavg":[...]}
   */
 object Repeat {
@@ -94,8 +99,9 @@ object Repeat {
   /** Bound on waiting for the listener bus before reading counters. */
   private val DrainTimeoutMs = 10000L
 
-  /** One rep of one cell: wall seconds (-1 when it failed), its phases, and
-    * the Spark work it launched.
+  /** One rep of one cell: wall seconds (-1 when it failed), its phases, the
+    * Spark work it launched, and what it compiled: generated classes and JIT
+    * milliseconds.
     */
   final case class Rep(
       wall: Double,
@@ -105,7 +111,9 @@ object Repeat {
       jobs: Int,
       stages: Int,
       tasks: Int,
-      taskMs: Long)
+      taskMs: Long,
+      codegenCompiles: Long,
+      jitMs: Long)
 
   final case class Cell(name: String, reps: Seq[Rep]) {
     private val ok = reps.filter(_.wall >= 0)
@@ -133,6 +141,17 @@ object Repeat {
     }
   }
 
+  /** Janino compiles so far in this JVM (local mode: driver and executors). */
+  private def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** JIT compile milliseconds so far in this JVM; 0 where the VM does not
+    * report them.
+    */
+  private def jitMs(): Long = {
+    val jit = ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime else 0L
+  }
+
   /** Fails, before any Spark work, on an empty list or an unknown name. */
   private def checkNames(names: Seq[String]): Unit = {
     require(names.nonEmpty, "Repeat: empty query list")
@@ -149,6 +168,7 @@ object Repeat {
       val q    = contract.Contract.byName(name)
       val cell = Cell(name, (1 to n).map { rep =>
         counters.reset()
+        val (compiles0, jit0) = (codegenCompiles(), jitMs())
         val t0 = System.nanoTime()
         val phases =
           try {
@@ -164,10 +184,12 @@ object Repeat {
               System.err.println(s"[repeat] $name rep $rep FAILED: ${e.getMessage}")
               None
           }
+        val (compiles, jit) = (codegenCompiles() - compiles0, jitMs() - jit0)
         ListenerBridge.drain(spark.sparkContext, DrainTimeoutMs)
         Measure.settle(spark)
         val (wall, c, p, x) = phases.getOrElse((-1.0, 0.0, 0.0, 0.0))
-        Rep(wall, c, p, x, counters.jobs.get, counters.stages.get, counters.tasks.get, counters.taskMs.get)
+        Rep(wall, c, p, x, counters.jobs.get, counters.stages.get, counters.tasks.get, counters.taskMs.get,
+          compiles, jit)
       })
       System.err.println(
         f"[repeat] $name%-28s min ${cell.min}%.2f med ${cell.med}%.2f max ${cell.max}%.2f  " +
@@ -195,7 +217,9 @@ object Repeat {
         s""""construct_ms":${ms(c.median(_.constructMs))},"plan_ms":${ms(c.median(_.planMs))},""" +
         s""""execute_ms":${ms(c.median(_.executeMs))},"jobs":${ms(c.median(_.jobs))},""" +
         s""""stages":${ms(c.median(_.stages))},"tasks":${ms(c.median(_.tasks))},""" +
-        s""""task_ms":${ms(c.median(_.taskMs.toDouble))}}"""
+        s""""task_ms":${ms(c.median(_.taskMs.toDouble))},""" +
+        s""""codegen_compiles":${ms(c.median(_.codegenCompiles.toDouble))},""" +
+        s""""jit_ms":${ms(c.median(_.jitMs.toDouble))}}"""
     }.mkString("{", ",", "}")
     val failed = cells.filter(_.failed).map(_.name)
     s"""{"replicas":$replicas,"dir":"$dir","docs":$docs,"embeddings":$embeddings,"reps":$reps,""" +

@@ -8,6 +8,21 @@ import org.apache.spark.sql.SparkSession
   * all time math here is session-TZ UTC. AQE is on for runtime re-planning
   * (shuffle coalescing, skew splitting) which is what makes the same plans hold
   * from local[32] test scale up to a real cluster.
+  *
+  * Two confs keep each generated class compiled once per JVM. Both are fixed
+  * when the session is created, so `local` sets them in the builder and `tune`
+  * cannot; a session created outside the engine must be given them at
+  * creation (e.g. `--conf` on spark-submit):
+  *  - `spark.sql.artifact.isolation.enabled=false`: each `Trigger.AvailableNow`
+  *    invocation restarts its query on a clone of the session, and isolation
+  *    would give the clone a fresh executor class loader. The codegen cache
+  *    is keyed by (class loader, code), so every restart would miss it, and
+  *    Janino and the JIT would compile the same classes again. The engine
+  *    adds no session artifacts, so nothing needs isolating.
+  *  - `spark.sql.codegen.cache.maxEntries=1000`: one CAN invocation cycles
+  *    through about 130 distinct classes and a `contract_iterative` pass
+  *    about 210; Spark's default of 100 (LRU) would evict each class before
+  *    its next use.
   */
 object GraftSession {
 
@@ -41,6 +56,8 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)

@@ -62,6 +62,13 @@ object CanStreams {
     * re-channelized — a full-history rescan per invocation would grow with
     * table age, not batch size. An empty micro-batch returns no partitions
     * and writes nothing.
+    *
+    * The trailing no-data micro-batch each invocation commits (Spark's
+    * default `spark.sql.streaming.noDataMicroBatches.enabled`) stays,
+    * although its partition collect is one of the invocation's jobs: it
+    * persists the advanced watermark, which the next invocation's late-data
+    * drop relies on. Without it a restart admits ticks older than the
+    * previous maximum minus 1.2 s.
     */
   def runParse(
       spark: SparkSession,

@@ -25,8 +25,11 @@ class RepeatSpec extends AnyFunSuite {
     assert(!rec.columns.contains("_corrupt_record"), line)
     assert(rec.count() == 1)
     for (n <- names; f <- Seq("times", "min", "med", "max", "construct_ms", "plan_ms",
-                              "execute_ms", "jobs", "stages", "tasks", "task_ms"))
+                              "execute_ms", "jobs", "stages", "tasks", "task_ms",
+                              "codegen_compiles", "jit_ms"))
       assert(!rec.select(col(s"queries.$n.$f")).head().isNullAt(0), s"$n.$f missing")
+    for (n <- names; f <- Seq("codegen_compiles", "jit_ms"))
+      assert(rec.select(col(s"queries.$n.$f")).head().getLong(0) >= 0, s"$n.$f negative")
     assert(rec.select("failed").head().getSeq[String](0).isEmpty)
   }
 
@@ -40,6 +43,11 @@ class RepeatSpec extends AnyFunSuite {
         assert(math.abs(phases - r.wall) <= 0.1 * r.wall, s"${c.name}: $r")
       }
     }
+  }
+
+  test("the second rep of q02 compiles no more generated classes than the first") {
+    val q02 = cells.find(_.name == "q02_tpch_q1").get
+    assert(q02.reps(1).codegenCompiles <= q02.reps(0).codegenCompiles, q02)
   }
 
   test("an unknown query name fails before any Spark job") {
