@@ -3,7 +3,7 @@ package graft.decode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Spark read path for CANServer-v2 logs: DSv2 `canserver` scan ->
+/** Spark read path for CANServer-v2 logs: `canserver` file format ->
   * columnar decode.
   *
   * The object boundary is contained to the tokenizer inside the scan
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * reference's one-Lambda-per-object model (reference serverless.yml:79-83)
   * with Spark tasks as the unit of parallelism. `records` is the plain
   * binaryFile + tokenizer formulation of the same scan, kept as the
-  * reference the DSv2 source is checked against.
+  * reference the `canserver` format is checked against.
   */
 object CanDecode {
 
@@ -37,13 +37,13 @@ object CanDecode {
   }
 
   /** Wide per-frame decode over the snake-case record surface (what the
-    * DSv2 `canserver` format scans): one row per decoded frame with its
+    * `canserver` format scans): one row per decoded frame with its
     * channel's signal columns populated and the rest null (the pivot stage
     * then merges frames sharing a timestamp — reference
     * parse_canserver_filtered_log.py:268-289). The column set mirrors the
     * reference's 14-column wide row (:141-142) minus the constant unit
     * strings, which are attached at the JSON edge. The frame-id filter sits
-    * directly above the scan so the DSv2 path pushes it into the tokenize
+    * directly above the scan so Spark pushes it into the format's tokenize
     * loop.
     */
   def decodeRaw(recs: DataFrame): DataFrame = {
@@ -73,11 +73,11 @@ object CanDecode {
         when(col("frame_id") === CanCodec.FrameAp, apStateName(pay)).as("ap_status"))
   }
 
-  /** THE batch decode entry point: the DSv2 `canserver` scan (chunked
+  /** THE batch decode entry point: the `canserver` format (chunked
     * bounded-memory reads, frame-id filter pushed into the tokenize loop).
     */
   def decodeFiles(spark: SparkSession, path: String): DataFrame =
-    decodeRaw(spark.read.format("canserver").load(path))
+    decodeRaw(spark.read.format("canserver").option("recursiveFileLookup", "true").load(path))
 
   /** Per-file framing health (the bad-record channel): what each file's
     * tokenize pass skipped — noise bytes, truncated tails, embedded headers,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.decode.CanDecode
 import graft.pipelines.CanPipelines
 import graft.sources.LandingIO
+import graft.sources.canserver.CanserverFileFormat
 
 /** The parse stage as one Structured Streaming job (SURVEY §2.6): the file
   * source replaces the S3 -> SNS -> SQS hops, the 1.2 s watermark replaces
@@ -25,18 +26,25 @@ import graft.sources.LandingIO
 object CanStreams {
 
   /** Decoded signal stream (same columns as the batch CanDecode.decodeFiles),
-    * read through the DSv2 `canserver` micro-batch stream — the same
-    * chunked tokenizer + pushed frame-id filter as the batch scan.
-    * @param maxFilesPerTrigger backpressure pacing (SURVEY §2.1), carried by
-    *        the source's admission control: one invocation over a large
-    *        backlog becomes several bounded micro-batches, each committed to
-    *        the checkpoint. Trigger.AvailableNow still drains everything.
+    * read through Spark's file stream source over the `canserver` format:
+    * the same chunked tokenizer and frame-id filter as the batch scan, and a
+    * source log that Spark compacts, so each offset is a log index.
+    * @param maxFilesPerTrigger backpressure pacing (SURVEY §2.1), Spark's
+    *        own source option: one invocation over a large backlog becomes
+    *        several bounded micro-batches, each committed to the checkpoint.
+    *        Trigger.AvailableNow still drains everything.
     */
   def decodedStream(
       spark: SparkSession,
       rawDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.format("canserver")
+    val reader = spark.readStream
+      .format("canserver")
+      .schema(CanserverFileFormat.Schema)
+      .option("recursiveFileLookup", "true") // logs live under per-device dirs
+      // Spark's default (7 days) skips a file whose mtime is that much older
+      // than the newest file seen; a device's week-old upload must still land
+      .option("maxFileAge", "36500d")
     CanDecode.decodeRaw(
       maxFilesPerTrigger
         .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graftbridge.ListenerBridge
@@ -236,6 +237,55 @@ class LandingIOSpec extends AnyFunSuite {
       .collect().map(_.getDouble(0))
     assert(exported.length === 22 && !exported.contains(50.0))
     assert(eventDocs(work) === docs)
+  }
+
+  test("Jobs: a log whose mtime is a month old still lands") {
+    val t0   = 1700000000L * 1000000L
+    val raw  = Files.createTempDirectory("old_mtime_raw").toString
+    val work = Files.createTempDirectory("old_mtime_work").toString
+    Files.write(Paths.get(raw, "new.log"),
+      file(timesync(t0), (0 to 4).flatMap(i => frame(i * 1000, 599, 0, speedPayload(10.0))).toArray))
+    Jobs.parse(spark, raw, work)
+    // later ticks, but the file was last modified 30 days before the newest
+    // file the stream has seen (a device uploading an old recording)
+    val old = Paths.get(raw, "old.log")
+    Files.write(old,
+      file(timesync(t0 + 60000000L), (0 to 4).flatMap(i => frame(i * 1000, 599, 0, speedPayload(20.0))).toArray))
+    Files.setLastModifiedTime(old,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 30L * 24 * 3600 * 1000))
+    Jobs.parse(spark, raw, work)
+    val landed = spark.read.parquet(s"$work/landing")
+    assert(landed.count() === 10)
+    assert(landed.filter(col("speed") === 20.0).count() === 5)
+  }
+
+  test("Jobs: the source offset a trickle invocation writes does not grow with the files seen") {
+    val t0   = 1700000000L * 1000000L
+    val raw  = Files.createTempDirectory("growth_raw").toString
+    val work = Files.createTempDirectory("growth_work").toString
+    val offsets = Paths.get(work, "ckpt", "parse", "offsets")
+    // the newest offset-log entry after each invocation of one new small log
+    val sizes = (0 until 12).map { i =>
+      Files.write(Paths.get(raw, f"trickle_$i%02d.log"),
+        file(timesync(t0 + i * 10000000L), (0 to 2).flatMap(s => frame(s * 1000, 599, 0, speedPayload(10.0))).toArray))
+      Jobs.parse(spark, raw, work)
+      val newest = Files.list(offsets).iterator().asScala
+        .filter(_.getFileName.toString.forall(_.isDigit))
+        .maxBy(_.getFileName.toString.toLong)
+      Files.size(newest)
+    }
+    // an offset that listed every file seen would add a path per invocation;
+    // a log index adds one byte, when it reaches 10
+    assert(sizes(11) <= sizes(1) + 1, s"offset bytes per invocation: $sizes")
+    assert(spark.read.parquet(s"$work/landing").count() === 36)
+  }
+
+  test("Jobs: a missing raw dir fails with PATH_NOT_FOUND and writes nothing") {
+    val base = Files.createTempDirectory("missing_raw").toString
+    val work = Files.createTempDirectory("missing_work").toString
+    val e = intercept[org.apache.spark.SparkThrowable](Jobs.parse(spark, s"$base/nope", work))
+    assert(e.getCondition === "PATH_NOT_FOUND")
+    assert(new java.io.File(work).list().isEmpty)
   }
 
   test("landing write -> JSON read-back preserves channel structure") {

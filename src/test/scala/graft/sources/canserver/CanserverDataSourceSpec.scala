@@ -2,20 +2,28 @@ package graft.sources.canserver
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkThrowable
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, In, IsNotNull}
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkTestSession
 import graft.decode.{CanDecode, CanFixture}
 
-/** DSv2 `canserver` format: equivalence with the flatMap read path, frame-id
-  * pushdown reaching the tokenize loop, multi-file partitioning.
+/** The `canserver` file format: equivalence with the flatMap read path,
+  * Spark's file index (globs, a missing path), frame-id pushdown reaching
+  * the tokenize loop, and the path column per file.
   */
 class CanserverDataSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import CanFixture._
 
   private def writeLogs(): String = {
-    val dir = Files.createTempDirectory("dsv2").toString
+    val dir = Files.createTempDirectory("canfmt").toString
     val t0  = 1700000000L * 1000000L
     Files.write(
       Paths.get(dir, "a.log"),
@@ -30,9 +38,14 @@ class CanserverDataSourceSpec extends AnyFunSuite {
     dir
   }
 
+  private def condition(e: Throwable): String = e match {
+    case s: SparkThrowable => s.getCondition
+    case _                 => s"not a SparkThrowable: $e"
+  }
+
   test("format(canserver) == binaryFile+flatMap read path") {
     val dir = writeLogs()
-    val dsv2 = spark.read
+    val format = spark.read
       .format("canserver")
       .load(dir)
       .select("frame_id", "bus_id", "length", "payload_long", "frame_time_micros")
@@ -50,8 +63,8 @@ class CanserverDataSourceSpec extends AnyFunSuite {
       .collect()
       .map(_.toSeq)
       .toSet
-    assert(dsv2 === flatMapPath)
-    assert(dsv2.size === 4)
+    assert(format === flatMapPath)
+    assert(format.size === 4)
   }
 
   test("glob paths resolve like binaryFile; no match fails with a clear error") {
@@ -63,36 +76,38 @@ class CanserverDataSourceSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       spark.read.format("canserver").load(s"$dir/nope/*.log").count()
     }
-    assert(e.getMessage.contains("does not exist or matches no files"))
+    assert(condition(e) === "PATH_NOT_FOUND")
   }
 
-  test("PartitionReader contract: get() is idempotent between next() calls") {
-    val dir = writeLogs()
-    val scan = new CanserverScan(dir, None, 8 << 20, None)
-    val parts = scan.planInputPartitions()
-    val factory = scan.createReaderFactory()
-    val rows = parts.flatMap { p =>
-      val r = factory.createReader(p).asInstanceOf[
-        org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow]]
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      while (r.next()) {
-        val first  = r.get().getLong(4) // payload_long
-        val second = r.get().getLong(4) // must be the SAME row, not the next
-        assert(first === second)
-        buf += first
-      }
-      buf
+  test("a missing path raises PATH_NOT_FOUND in batch and stream") {
+    val missing = Paths.get(writeLogs(), "nope").toString
+    val batch = intercept[Exception](spark.read.format("canserver").load(missing).count())
+    assert(condition(batch) === "PATH_NOT_FOUND")
+    val stream = intercept[Exception] {
+      spark.readStream.format("canserver").schema(CanserverFileFormat.Schema).load(missing)
     }
-    assert(rows.length === 4)
+    assert(condition(stream) === "PATH_NOT_FOUND")
   }
 
   test("frame_id filter is pushed into the scan") {
     val dir = writeLogs()
     val df  = spark.read.format("canserver").load(dir).filter(col("frame_id").isin(599, 921))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("pushedFrameIds=") && (plan.contains("599") || plan.contains("921")),
+    assert(
+      "PushedFilters: \\[[^\\]]*In\\(frame_id, \\[599,921\\]\\)".r.findFirstIn(plan).nonEmpty,
       s"pushdown missing from plan:\n$plan")
     assert(df.collect().map(_.getAs[Int]("frame_id")).sorted.toSeq === Seq(599, 921))
+    // Spark re-applies the filter above the scan, so the reader's own drop
+    // shows only when it is called directly
+    val frameId = StructType(Seq(CanserverFileFormat.Schema("frame_id")))
+    val read = new CanserverFileFormat().buildReader(
+      spark, CanserverFileFormat.Schema, new StructType(), frameId,
+      Seq(In("frame_id", Array(599, 921))), Map.empty, spark.sessionState.newHadoopConf())
+    val kept = Seq("a.log", "b.log").flatMap { name =>
+      val f = new java.io.File(dir, name)
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(f.toURI)), 0L, f.length())).map(_.getInt(0))
+    }
+    assert(kept === Seq(599, 921))
   }
 
   test("conjunctive frame_id filters INTERSECT (not union)") {
@@ -107,31 +122,16 @@ class CanserverDataSourceSpec extends AnyFunSuite {
       .load(dir)
       .filter(col("frame_id").isin(273, 599) && col("frame_id").isin(599, 921))
     assert(df2.collect().map(_.getAs[Int]("frame_id")).toSeq === Seq(599))
+    assert(CanserverFileFormat.frameIds(
+      Seq(IsNotNull("frame_id"), EqualTo("frame_id", 273), In("frame_id", Array(599, 921)))) === Some(Set.empty))
+    assert(CanserverFileFormat.frameIds(Seq(IsNotNull("frame_id"))) === None)
   }
 
-  test("chunk_bytes: multi-chunk file decodes identically to whole-file read") {
-    val dir = Files.createTempDirectory("dsv2chunk").toString
-    val t0  = 1700000000L * 1000000L
-    // ~4.5 KB of frames: with chunk_bytes=1 (clamped to a 514-byte buffer)
-    // the reader refills ~9 times, so records straddle many boundaries
-    val parts = (0 until 30).flatMap { s =>
-      timesync(t0 + s * 1000000L) +:
-        (0 until 10).map(j => frame(j * 10, 599, 0, Array[Byte](s.toByte, j.toByte, 0x30)))
-    }
-    Files.write(Paths.get(dir, "big.log"), file(parts: _*))
-    val whole = spark.read.format("canserver").load(dir)
-      .collect().map(_.toSeq).toSet
-    val chunked = spark.read.format("canserver").option("chunk_bytes", "1").load(dir)
-      .collect().map(_.toSeq).toSet
-    assert(whole.size === 300)
-    assert(chunked === whole)
-  }
-
-  test("each file is its own partition") {
+  test("the path column distinguishes files") {
     val dir = writeLogs()
-    val df  = spark.read.format("canserver").load(dir)
-    assert(df.rdd.getNumPartitions === 2)
-    // path column distinguishes source files
-    assert(df.select("path").distinct().count() === 2)
+    val byPath = spark.read.format("canserver").load(dir)
+      .groupBy("path").count().collect()
+      .map(r => Paths.get(new java.net.URI(r.getString(0))).getFileName.toString -> r.getLong(1)).toMap
+    assert(byPath === Map("a.log" -> 3L, "b.log" -> 1L))
   }
 }
