@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.types._
 
-import graft.core.GraftSession
+import graft.core.{DirSwap, GraftSession}
 import graft.pipelines.CanPipelines
 import graft.sources.LandingIO
 import graft.streaming.CanStreams
@@ -21,6 +21,8 @@ import graft.streaming.CanStreams
   *   events/Stationary/  day documents of stationary intervals
   *   events/Autopilot/   day documents of autopilot transitions
   *   ckpt/      streaming checkpoints (source offsets + pivot state)
+  *   .graft-tmp-landing/, .graft-old-landing/  transient `DirSwap`
+  *              staging and parked partitions of a landing commit
   *
   * Each stage does each thing once. `parse` commits each micro-batch in one
   * pass (MergeSink's one partition collect names the hours to re-channelize);
@@ -51,9 +53,11 @@ object Jobs {
     StructField("ap_status", StringType)))
 
   /** Runs after `parse` has returned, so it reads a quiesced sink (see
-    * `MergeSink.upsert` on concurrent readers).
+    * `MergeSink.upsert` on concurrent readers). It heals the landing first:
+    * a parse killed mid-commit leaves a partition parked outside it.
     */
   def infer(spark: org.apache.spark.sql.SparkSession, workDir: String): Unit = {
+    DirSwap.heal(spark, s"$workDir/landing", 2)
     val landing = spark.read.schema(InferSchema).parquet(s"$workDir/landing")
     LandingIO.writeStationaryDocs(
       CanPipelines.stationaryIntervals(CanPipelines.speedSeries(landing)),

@@ -36,18 +36,6 @@ object TextAnalysis {
   def bpeishCount(text: Column): Column =
     regexp_count(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
 
-  /** TRAINED-merges greedy BPE tokenization (native BpeEncodeExpr): the
-    * real-tokenizer upgrade of `bpeishCount` for when token budgets must
-    * match a production vocabulary. The merge table rides inside the
-    * expression (one executor-side map, no shuffle); see BpeEncodeExpr for
-    * semantics and the per-word cost bound. `Bpe.train(..., endOfWord =
-    * false)` learns a table in this convention.
-    */
-  def bpeTokens(text: Column, merges: Seq[(String, String)]): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(BpeEncodeExpr(ColumnBridge.expression(text), merges))
-  }
-
   /** Punctuation characters / total characters; NULL for empty text — the
     * nullif guard matters under ANSI mode, where a bare `x / length(text)`
     * THROWS DIVIDE_BY_ZERO on the empty documents every real crawl

@@ -34,9 +34,7 @@ object Bpe {
 
   /** Initial symbol array for `word`: characters, last one suffixed with
     * the end-of-word marker (or plain characters with `endOfWord = false`
-    * — the merges.txt-style convention `TextAnalysis.bpeTokens` /
-    * `BpeEncodeExpr` consume, so a table trained that way feeds the
-    * native in-row production encoder directly). `slice(chars, 1, len-1)`
+    * — the merges.txt-style convention). `slice(chars, 1, len-1)`
     * is empty for single-char words (no descending-`sequence` trap).
     */
   private def initialSyms(word: Column, endOfWord: Boolean): Column = {

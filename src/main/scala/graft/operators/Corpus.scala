@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.DirSwap
+
 /** Corpus-hygiene operators for training-data pipelines: benchmark
   * decontamination (n-gram overlap against an eval set) and TF-IDF
   * relevance scoring — the checks a curation run performs after dedup
@@ -1287,12 +1289,9 @@ object Corpus {
     * is O(n_tokens) regardless of list size (the r7 `array_contains` form
     * scanned the literal array per token: O(n_tokens x terms)). The
     * literal form is still bounded ~10^4 terms by PLAN SIZE (the set rides
-    * in the plan/codegen payload); for a 10^6-term blocklist see
-    * `blocklistAuditJoin`, which turns the probe into a broadcast
-    * semi-join on exploded tokens.
+    * in the plan/codegen payload).
     *
-    * Null text is dropped (same isNotNull gate as every text op here and
-    * as the join twin, so literal == join equivalence holds row-for-row).
+    * Null text is dropped (the same isNotNull gate as every text op here).
     *
     * Output: idCol, n_tokens, n_hits, n_distinct_hits, keep.
     */
@@ -1313,46 +1312,6 @@ object Corpus {
         size(toks).cast("long").as("n_tokens"),
         size(hits).cast("long").as("n_hits"),
         size(array_distinct(hits)).cast("long").as("n_distinct_hits"))
-      .withColumn("keep", col("n_hits") === 0L)
-  }
-
-  /** `blocklistAudit` for blocklists too large to evaluate as an in-row
-    * literal: tokens explode, hit-count against the terms table via an
-    * inner join (terms broadcast when small, hash-join when not), and the
-    * per-doc census joins back onto the id spine so hit-free documents
-    * still report zeros. Two shuffles at worst (token join + id group);
-    * the exploded side collapses map-side on (id, token) first, so the
-    * join input is distinct tokens per doc, not raw occurrences.
-    */
-  def blocklistAuditJoin(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      termsDf: DataFrame,
-      termCol: String = "term"): DataFrame = {
-    // same null-text gate as the literal twin: without it the two paths
-    // diverge on null rows (literal: null counts → dropped; join: explode
-    // drops the row but the spine keeps it with 0 hits → kept)
-    val base = df.filter(col(textCol).isNotNull).select(
-      col(idCol),
-      split(col(textCol), " ").as("__tk"))
-    val spine = base.select(col(idCol), size(col("__tk")).cast("long").as("n_tokens"))
-    val hits = base
-      .select(col(idCol), explode(col("__tk")).as("__t"))
-      .groupBy(col(idCol), col("__t"))
-      .agg(count(lit(1)).as("__occ"))
-      .join(termsDf.select(col(termCol).as("__t")).distinct(), Seq("__t"))
-      .groupBy(col(idCol))
-      .agg(
-        sum(col("__occ")).as("n_hits"),
-        count(lit(1)).as("n_distinct_hits"))
-    spine
-      .join(hits, Seq(idCol), "left_outer")
-      .select(
-        col(idCol),
-        col("n_tokens"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        coalesce(col("n_distinct_hits"), lit(0L)).as("n_distinct_hits"))
       .withColumn("keep", col("n_hits") === 0L)
   }
 
@@ -1455,9 +1414,9 @@ object Corpus {
   }
 
   /** Build a FRESH persisted gram-count store at `path` from `docs` —
-    * deletes any existing store (and set-aside copy) first, then folds
-    * the corpus in as one wave. See `updateGramCounts` for the schema and
-    * the incremental contract.
+    * deletes any existing store first, then folds the corpus in as one
+    * wave. See `updateGramCounts` for the schema and the incremental
+    * contract.
     */
   def writeGramCounts(
       docs: DataFrame,
@@ -1466,24 +1425,22 @@ object Corpus {
       k: Int,
       path: String): Unit = {
     import org.apache.hadoop.fs.Path
+    val spark = docs.sparkSession
+    DirSwap.heal(spark, path, 0)
     val live = new Path(path)
-    val fs   = live.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    Seq(live, new Path(live.getParent, s".gramcnt-old-${live.getName}"))
-      .foreach(p => if (fs.exists(p)) fs.delete(p, true))
+    live.getFileSystem(spark.sessionState.newHadoopConf()).delete(live, true)
     updateGramCounts(docs, idCol, textCol, k, path)
   }
 
   /** Fold a landing wave into a persisted gram-count store — the
     * INCREMENTAL ingest path for span mining: gram counts are additive,
     * so each wave costs one delta aggregation + one hash-keyed merge of
-    * store and delta instead of recounting the corpus per wave (the
-    * `CountMin.updateStore` posture applied to exact gram counts; any
+    * store and delta instead of recounting the corpus per wave (any
     * sequence of folds converges to the one-shot count of the union).
     * Store schema: (k, gh, c) — k is store IDENTITY, not a tunable; a
-    * fold with a different k is refused. The store swaps by the healed
-    * two-rename pattern: a writer killed between renames leaves the
-    * set-aside copy, which the next fold promotes and readers fall back
-    * to — no crash state restarts the count history.
+    * fold with a different k is refused. The store swaps whole through
+    * `DirSwap.commit`, and the fold and the miner heal first, so no crash
+    * state restarts the count history.
     *
     * Ingest posture: one fold per DRAINED wave (the drain-then-fold rule
     * every rank-based stage follows). The fold is additive, NOT
@@ -1499,16 +1456,11 @@ object Corpus {
     import org.apache.hadoop.fs.Path
     require(k >= 2, s"updateGramCounts: k must be >= 2, got $k")
     val spark = newDocs.sparkSession
+    DirSwap.heal(spark, path, 0)
     val live  = new Path(path)
-    val fs    = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val trash = new Path(live.getParent, s".gramcnt-old-${live.getName}")
-    // heal a predecessor killed between its two renames (the
-    // CountMin.updateStore rule: the set-aside IS the store)
-    if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
-      throw new java.io.IOException(s"updateGramCounts: cannot restore $trash to $live")
     val delta = gramCountDelta(newDocs, idCol, textCol, k)
     val merged =
-      if (!fs.exists(live)) delta
+      if (!live.getFileSystem(spark.sessionState.newHadoopConf()).exists(live)) delta
       else {
         val stored = spark.read.parquet(path)
         // a ZERO-ROW store is legal (every folded doc shorter than k) and
@@ -1524,20 +1476,8 @@ object Corpus {
           .agg(sum(col("c")).as("c"))
           .select(lit(k).as("k"), col("gh"), col("c"))
       }
-    val tmp = new Path(live.getParent, s".gramcnt-tmp-${live.getName}")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    merged.write.parquet(tmp.toString)
-    if (fs.exists(live)) {
-      if (fs.exists(trash)) fs.delete(trash, true)
-      if (!fs.rename(live, trash))
-        throw new java.io.IOException(s"updateGramCounts: cannot set aside $live")
-    }
-    if (!fs.rename(tmp, live)) {
-      if (fs.exists(trash)) fs.rename(trash, live) // roll back
-      throw new java.io.IOException(s"updateGramCounts: cannot promote $tmp")
-    }
-    fs.delete(trash, true)
-    ()
+    merged.write.parquet(DirSwap.staging(path))
+    DirSwap.commit(spark, path, Seq(""))
   }
 
   /** `duplicatedSpans` against a PERSISTED gram-count store instead of a
@@ -1547,8 +1487,8 @@ object Corpus {
     * store covers MORE ingested history, spans reflect duplication against
     * everything ever folded — which is the point at 100 TB (each wave is
     * mined against the full corpus history at delta cost). k comes from
-    * the store (it is store identity); reads fall back to the set-aside
-    * copy when a writer died mid-swap.
+    * the store (it is store identity); a store left mid-swap by a crashed
+    * writer is healed before the read.
     */
   def duplicatedSpansAgainstCounts(
       docs: DataFrame,
@@ -1556,17 +1496,9 @@ object Corpus {
       textCol: String,
       countsPath: String,
       minCount: Long = 2L): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val spark = docs.sparkSession
-    val live  = new Path(countsPath)
-    val fs    = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val src =
-      if (fs.exists(live)) countsPath
-      else {
-        val trash = new Path(live.getParent, s".gramcnt-old-${live.getName}")
-        if (fs.exists(trash)) trash.toString else countsPath
-      }
-    spansAgainstCounts(docs, idCol, textCol, spark.read.parquet(src), minCount)
+    DirSwap.heal(spark, countsPath, 0)
+    spansAgainstCounts(docs, idCol, textCol, spark.read.parquet(countsPath), minCount)
   }
 
   /** Frame-taking core of `duplicatedSpansAgainstCounts`: mine `docs`

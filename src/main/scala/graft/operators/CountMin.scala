@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -77,8 +77,8 @@ object CountMin {
   }
 
   /** One-row sketch of a string column: (width, depth, counters). The
-    * single row is the ENTIRE driver/store state — persist it next to the
-    * corpus (see `updateStore`) and point-query it with `estimate`.
+    * single row is the ENTIRE driver/store state; point-query it with
+    * `estimate`.
     */
   def sketch(df: DataFrame, keyCol: String, width: Int = 2048, depth: Int = 4): DataFrame = {
     val cms = udaf(new CmsAgg(width, depth), Encoders.STRING)
@@ -114,92 +114,6 @@ object CountMin {
     var i   = 0
     while (i < out.length) { out(i) = a(i) + b(i); i += 1 }
     out
-  }
-
-  /** Fold a delta sketch into a persisted store — the incremental-drain
-    * pattern (LSH signature store / token baseline twin): read the live
-    * sketch if present, merge, write tmp, two-rename atomic swap. The
-    * merge law makes the fold order-free, so any sequence of drains
-    * converges to the one-shot sketch of their union; a crash before the
-    * final rename leaves the old store intact (re-run the drain).
-    * Shapes must match (width/depth are store identity, not tunables).
-    */
-  def updateStore(spark: SparkSession, dir: String, delta: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(dir)
-    val fs   = live.getFileSystem(spark.sessionState.newHadoopConf())
-    // heal a predecessor that died between its two renames (live set
-    // aside, replacement not yet promoted): the trash IS the store —
-    // restore it before the exists(live) branch below, else this fold
-    // would treat the store as fresh and silently RESTART the count
-    // history from the delta while deleting the only surviving copy
-    // (the two-rename swap rule MergeSink.recover also follows)
-    locally {
-      val trash = new Path(live.getParent, s".cms-old-${live.getName}")
-      if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
-        throw new java.io.IOException(s"updateStore: cannot restore $trash to $live")
-    }
-    val merged =
-      if (!fs.exists(live)) delta
-      else {
-        val d = delta.head()
-        val s = spark.read.parquet(dir).head()
-        require(
-          s.getInt(0) == d.getInt(0) && s.getInt(1) == d.getInt(1),
-          s"CMS store shape (${s.getInt(0)}x${s.getInt(1)}) != delta shape " +
-            s"(${d.getInt(0)}x${d.getInt(1)})")
-        val summed = merge(
-          s.getSeq[Long](2).toArray,
-          d.getSeq[Long](2).toArray)
-        import spark.implicits._
-        Seq((d.getInt(0), d.getInt(1), summed.toSeq))
-          .toDF("width", "depth", "counters")
-      }
-    val tmp = new Path(live.getParent, s".cms-tmp-${live.getName}")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    merged.coalesce(1).write.parquet(tmp.toString)
-    val trash = new Path(live.getParent, s".cms-old-${live.getName}")
-    if (fs.exists(trash)) fs.delete(trash, true)
-    if (fs.exists(live) && !fs.rename(live, trash))
-      throw new java.io.IOException(s"updateStore: cannot set aside $live")
-    if (!fs.rename(tmp, live)) {
-      if (fs.exists(trash)) fs.rename(trash, live) // roll back
-      throw new java.io.IOException(s"updateStore: cannot promote $tmp")
-    }
-    fs.delete(trash, true)
-  }
-
-  /** Merged view of a sketch table (one row per sketch, e.g. one per
-    * ingested wave): sums every row's grid into one. Row count is
-    * wave-bounded — a driver fold by design, like every sketch surface
-    * here.
-    */
-  def readMerged(spark: SparkSession, dir: String): (Int, Int, Array[Long]) = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(dir)
-    val fs   = live.getFileSystem(spark.sessionState.newHadoopConf())
-    // read-side fallback for a writer that died between its two renames:
-    // the set-aside copy is the last committed store (the next
-    // updateStore heals the tree itself)
-    val src =
-      if (fs.exists(live)) dir
-      else {
-        val trash = new Path(live.getParent, s".cms-old-${live.getName}")
-        if (fs.exists(trash)) trash.toString else dir
-      }
-    val rows = spark.read.parquet(src).select("width", "depth", "counters").collect()
-    require(rows.nonEmpty, s"readMerged: no sketches at $dir")
-    val w = rows.head.getInt(0)
-    val d = rows.head.getInt(1)
-    val acc = new Array[Long](w * d)
-    rows.foreach { r =>
-      require(r.getInt(0) == w && r.getInt(1) == d,
-        s"readMerged: drain shape ${r.getInt(0)}x${r.getInt(1)} != store shape ${w}x$d")
-      val c = r.getSeq[Long](2)
-      var i = 0
-      while (i < acc.length) { acc(i) += c(i); i += 1 }
-    }
-    (w, d, acc)
   }
 
   /** Estimates for a column of keys against a COLLECTED sketch (the

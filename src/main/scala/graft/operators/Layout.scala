@@ -135,7 +135,7 @@ object Layout {
     * positions i, i+n, i+2n, ...). Runs one `percentile_approx` aggregate
     * over `df` to learn the cut points; the returned Column is then pure
     * per-row arithmetic (codegen'd, zero shuffle). Exposed for tests and
-    * for clustering EXISTING layouts (e.g. compact-then-zorder).
+    * for clustering EXISTING layouts.
     */
   def zValue(df: DataFrame, zCols: Seq[String], buckets: Int): Column = {
     val qs = (1 until buckets).map(_.toDouble / buckets)
@@ -174,184 +174,4 @@ object Layout {
     */
   def filesTouched(df: DataFrame): Long =
     df.select(input_file_name()).distinct().count()
-
-  /** `clusterWrite` + a `_RANGE_INDEX.json` manifest mapping each data
-    * file to its [min, max] span of `clusterCol` — the span metadata
-    * parquet keeps in footers, EXPORTED to where a reader that never opens
-    * a footer (a shard loader, a downloader, an external catalog) can
-    * binary-search it. One extra aggregation over the written files
-    * (group by input_file_name), manifest written last so a crashed write
-    * leaves no index to trust.
-    */
-  def clusterWriteIndexed(
-      df: DataFrame,
-      path: String,
-      clusterCol: String,
-      numFiles: Int): Unit = {
-    // the manifest stores spans as JSON longs and the reader range-cuts
-    // numerically — an arbitrary type (timestamp, string) would stringify
-    // fine at write and then blow up or mis-order at read, so reject it
-    // here, at write time, where the caller can still fix the schema
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val dt = df.schema(clusterCol).dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-      s"clusterWriteIndexed: clusterCol '$clusterCol' must be integral for a typed " +
-        s"range manifest, got $dt (cast timestamps to epoch long first)")
-    clusterWrite(df, path, clusterCol, numFiles)
-    val spark = df.sparkSession
-    val spans = spark.read
-      .parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        min(col(clusterCol)).cast("long").as("lo"),
-        max(col(clusterCol)).cast("long").as("hi"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._2) // numeric span order — lexicographic would put "10" < "2"
-    val json = spans
-      .map { case (f, lo, hi) =>
-        val name = new org.apache.hadoop.fs.Path(f).getName
-        s"""{"file":"$name","lo":$lo,"hi":$hi}"""
-      }
-      .mkString("[", ",", "]")
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val idx  = new Path(path, "_RANGE_INDEX.json")
-    val fs   = idx.getFileSystem(conf)
-    val tmp  = new Path(idx.getParent, s".${idx.getName}.tmp")
-    val out  = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(idx)) fs.delete(idx, false)
-    if (!fs.rename(tmp, idx))
-      throw new java.io.IOException(s"clusterWriteIndexed: cannot promote $tmp")
-  }
-
-  /** Range read THROUGH the manifest: select only the files whose stamped
-    * long span overlaps [lo, hi] (the manifest is typed — only integral
-    * cluster columns can be indexed, enforced at write) and read just
-    * those, with the residual filter on top. The span cut happens on
-    * the driver over the manifest — no listing, no footer reads, no
-    * planner involvement for the skipped files. Returns the pruned
-    * DataFrame and the file count it will read.
-    */
-  def readRangeIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      clusterCol: String,
-      lo: Long,
-      hi: Long): (DataFrame, Int) = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val idx  = new Path(path, "_RANGE_INDEX.json")
-    val fs   = idx.getFileSystem(conf)
-    if (!fs.exists(idx))
-      throw new java.io.FileNotFoundException(s"readRangeIndexed: no range index at $idx")
-    val in  = fs.open(idx)
-    val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val rx  = """\{"file":"([^"]+)","lo":(-?\d+),"hi":(-?\d+)\}""".r
-    val files = rx
-      .findAllMatchIn(raw)
-      .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong))
-      .collect { case (f, flo, fhi) if fhi >= lo && flo <= hi => s"$path/$f" }
-      .toSeq
-    val df =
-      if (files.isEmpty)
-        spark.read.parquet(path).filter(lit(false)) // empty, same schema
-      else
-        spark.read
-          .parquet(files: _*)
-          .filter(col(clusterCol) >= lo && col(clusterCol) <= hi)
-    (df, files.size)
-  }
-
-  /** Compact a parquet table's small files toward `targetBytes` per file:
-    * sizes the output file count from the table's actual on-disk bytes and
-    * rewrites atomically (write to a sibling temp dir, swap by rename) so
-    * readers never see a half-compacted table and a crash leaves the
-    * original in place.
-    *
-    * Hive-partitioned tables (the engine's own landing / shard layouts, and
-    * exactly the tables streaming sinks fragment most) are handled by
-    * recursing to each partition LEAF (`col=value` directory chain) and
-    * compacting it in place — the partition columns stay encoded in the
-    * path, each leaf gets its own atomic two-rename swap, and a crash mid-
-    * table leaves every leaf either fully old or fully new, never mixed
-    * within a leaf.
-    *
-    * Small files are the silent 100 TB killer — a streaming sink that lands
-    * a file per micro-batch turns every later scan into millions of opens
-    * and the driver's file index into the bottleneck; periodic compaction
-    * is the standard remedy. Returns the total output file count.
-    */
-  def compact(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Long = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val dir  = new Path(path)
-    val fs   = dir.getFileSystem(conf)
-    // heal any dir parked by a compactor killed between its two renames
-    // (the CountMin.updateStore swap rule): without this, a parked ROOT
-    // fails the walk on a missing dir and a parked hive LEAF is silently
-    // SKIPPED by the dot-filter below — its data one rename away while the
-    // table reads as if the partition never existed
-    def promote(trash: Path, live: Path): Unit =
-      if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
-        throw new java.io.IOException(s"compact: cannot restore $trash to $live")
-    promote(new Path(dir.getParent, s".compact-old-${dir.getName}"), dir)
-    // a partition leaf is reached by following `name=value` subdirectories;
-    // a directory with none of those is itself a (flat) leaf
-    def leaves(d: Path): Seq[Path] = {
-      val all = fs.listStatus(d)
-      all.foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && n.startsWith(".compact-old-"))
-          promote(s.getPath, new Path(d, n.stripPrefix(".compact-old-")))
-      }
-      val parts = fs
-        .listStatus(d)
-        .filter(s =>
-          s.isDirectory && s.getPath.getName.contains("=") &&
-            !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_"))
-      if (parts.isEmpty) Seq(d) else parts.toSeq.flatMap(p => leaves(p.getPath))
-    }
-    leaves(dir).map(leaf => compactLeaf(spark, fs, leaf, targetBytes)).sum
-  }
-
-  private def compactLeaf(
-      spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      targetBytes: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val tmp   = new Path(dir.getParent, s".compact-tmp-${dir.getName}")
-    val trash = new Path(dir.getParent, s".compact-old-${dir.getName}")
-    // heal a predecessor killed between its two renames: the set-aside IS
-    // the partition (the CountMin.updateStore swap rule) — promote before
-    // listing, else the re-run fails on a missing dir with the data
-    // parked one rename away
-    if (!fs.exists(dir) && fs.exists(trash) && !fs.rename(trash, dir))
-      throw new java.io.IOException(s"compact: cannot restore $trash to $dir")
-    val dataFiles = fs
-      .listStatus(dir)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") && !s.getPath.getName.startsWith("_"))
-    if (dataFiles.isEmpty) return 0L // empty partition: nothing to rewrite
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val nFiles     = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (fs.exists(tmp)) fs.delete(tmp, true)     // stale crashed attempt
-    if (fs.exists(trash)) fs.delete(trash, true) // stale completed swap (dir exists here)
-    spark.read.parquet(dir.toString).repartition(nFiles).write.parquet(tmp.toString)
-    // two-rename swap (MergeSink's commit shape): a crash between the
-    // renames is healed by re-running compact (tmp is rebuilt, trash is
-    // the original)
-    if (!fs.rename(dir, trash)) throw new java.io.IOException(s"compact: cannot set aside $dir")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(trash, dir) // roll back
-      throw new java.io.IOException(s"compact: cannot promote $tmp")
-    }
-    fs.delete(trash, true)
-    nFiles.toLong
-  }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.DirSwap
+
 /** Vector similarity over an `Array[Float]` embedding column.
   *
   * Brute-force cosine top-k is the exact baseline: broadcast the (small) probe
@@ -167,50 +169,6 @@ object Similarity {
               c.getField("embedding").as("c_emb"),
               norm2(c.getField("embedding")).as("c_n2"))).as("cents"))
 
-  /** Deterministic farthest-point (k-center greedy) seeding: start from the
-    * smallest vec_id, then repeatedly add the vector LEAST similar to every
-    * seed so far (argmin of max cosine, ties on vec_id). Each step is one
-    * pass over the corpus with the chosen seeds as broadcast literals —
-    * ncells passes total, the deliberate-rebuild price. Where
-    * `seedCentroids` (first ncells ids) can start Lloyd with every seed
-    * inside one region — a local optimum that leaves a later-drifted
-    * cluster without a cell — farthest-point spreads the seeds across the
-    * corpus's actual extent, which is exactly what `reindexIvf` needs when
-    * the distribution has drifted since the original epoch.
-    */
-  def farthestPointSeeds(emb: DataFrame, ncells: Int): DataFrame = {
-    require(ncells >= 1, s"ncells must be >= 1, got $ncells")
-    val withN2 = emb
-      .select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val first = withN2.orderBy(col("vec_id")).limit(1)
-        .select(col("vec_id"), col("embedding")).collect()(0)
-      var chosen = Vector[Seq[Float]](first.getSeq[Float](1))
-      while (chosen.size < ncells) {
-        val maxCos = chosen
-          .map { v =>
-            val lv = typedlit(v)
-            cosine(dot(col("embedding"), lv), col("n2"), norm2(lv))
-          }
-          .reduce(greatest(_, _))
-        val next = withN2
-          .select(col("vec_id"), col("embedding"), maxCos.as("__m"))
-          .orderBy(col("__m").asc, col("vec_id"))
-          .limit(1)
-          .collect()(0)
-        chosen = chosen :+ next.getSeq[Float](1)
-      }
-      val ss = emb.sparkSession
-      import ss.implicits._
-      chosen.zipWithIndex
-        .map { case (v, i) => (i.toLong, v) }
-        .toDF("cell_id", "c_emb")
-        .withColumn("c_n2", norm2(col("c_emb")))
-        .agg(collect_list(struct(col("cell_id"), col("c_emb"), col("c_n2"))).as("cents"))
-    } finally { withN2.unpersist(); () }
-  }
-
   /** Spherical-k-means (Lloyd) refinement of the IVF centroids — scale-safe:
     *  - ASSIGNMENT is the same zero-shuffle in-row fold ivfTopK uses;
     *  - the UPDATE is posexplode -> groupBy((cell, pos)) sum/count: the
@@ -225,17 +183,13 @@ object Similarity {
     * their previous centroid; the seed row is collected only if the first
     * round leaves a cell empty.
     */
-  def kmeansCentroids(
-      emb: DataFrame,
-      ncells: Int,
-      iters: Int,
-      farthestSeeds: Boolean = false): DataFrame = {
+  def kmeansCentroids(emb: DataFrame, ncells: Int, iters: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     require(
       emb.limit(ncells).count() == ncells,
       s"kmeansCentroids: corpus has fewer than ncells=$ncells vectors")
-    val seed = if (farthestSeeds) farthestPointSeeds(emb, ncells) else seedCentroids(emb, ncells)
+    val seed = seedCentroids(emb, ncells)
     lazy val seedCells: Map[Long, Seq[Double]] = seed
       .select(explode(col("cents")).as("c"))
       .select(col("c.cell_id"), col("c.c_emb"))
@@ -367,7 +321,7 @@ object Similarity {
     *    candidate volume under a FIXED width is Θ(n²/2^bandBits) — the
     *    pinned 6-bit width was measured to cliff 8.1 s → 338 s from 20k to
     *    40k vectors (soak_scaling.json) while the ladder stays flat — so a
-    *    fixed width is strictly a frozen-diagnostic / reproduce-old-runs
+    *    fixed width is strictly a frozen-diagnostic / reproduce-earlier-runs
     *    knob, never the production posture;
     *  - verify: exact cosine on candidates only; output pairs all satisfy
     *    cos >= threshold.
@@ -502,6 +456,8 @@ object Similarity {
     */
   def writeIvfIndex(emb: DataFrame, path: String, ncells: Int): Unit = {
     import org.apache.spark.sql.SaveMode
+    // a parked cell of an earlier index at `path` must not heal into this one
+    DirSwap.heal(emb.sparkSession, path, 1)
     val centArr = seedCentroids(emb, ncells)
     val withN2 =
       emb.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
@@ -515,135 +471,25 @@ object Similarity {
     centArr.write.mode(SaveMode.Overwrite).parquet(s"$path.centroids")
   }
 
-  /** Re-cluster a persisted IVF index IN PLACE: spherical k-means over the
-    * STORED vectors, then an atomic rewrite of the data partitions and the
-    * centroid table. An index grown by `mergeIvfIndexes` keeps its base
-    * epoch's centroids (cell stability is what keeps the partitions
-    * valid), so when the embedding distribution drifts, the new mass
-    * crowds a few stale cells — searches still verify exact cosines, but
-    * low-nprobe recall decays (a drifted cluster straddling two stale
-    * cells hides half its neighbors from every probe) and cell skew grows
-    * monotonically. Reindex is the deliberate rebuild that restores both.
-    *
-    * Crash shape (compact's two-rename swap, applied to data then
-    * centroids): tmp dirs are rebuilt by a re-run; a crash between the two
-    * swaps leaves NEW data partitions with OLD centroids — re-running
-    * reindexIvf heals it, and searches in that window lose recall, never
-    * cosine correctness.
-    */
-  def reindexIvf(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      iters: Int = 5): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.SaveMode
-    // promote any parked root/centroids/leaf FIRST (every reading entry's
-    // rule): without this a `.reindex-old-*` root from a predecessor killed
-    // between its renames reads as a missing path, and a parked
-    // `.ivfdel-old-cell_id=*` leaf (dot-prefixed — spark.read skips it)
-    // would be silently DROPPED from the rebuild and then deleted with the
-    // old tree — the one crash shape that loses rows
-    healIvfLeaves(spark, path)
-    val stored = spark.read.parquet(path).select("vec_id", "embedding")
-    val ncells = spark.read.parquet(s"$path.centroids")
-      .select(size(col("cents"))).head().getInt(0)
-    // farthest-point seeding: the drift that motivates a reindex is exactly
-    // the case where the original-epoch seeds miss part of the corpus
-    val cents   = kmeansCentroids(stored, ncells, iters, farthestSeeds = true)
-    val conf    = spark.sessionState.newHadoopConf()
-    val dataDir = new Path(path)
-    val centDir = new Path(s"$path.centroids")
-    val fs      = dataDir.getFileSystem(conf)
-    val tmpData = new Path(dataDir.getParent, s".reindex-tmp-${dataDir.getName}")
-    val tmpCent = new Path(centDir.getParent, s".reindex-tmp-${centDir.getName}")
-    Seq(tmpData, tmpCent).foreach(p => if (fs.exists(p)) fs.delete(p, true))
-    // both tmp writes read the OLD index (lazy plans over `path`), so they
-    // must complete before any swap
-    val withN2 = stored.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2"))
-    assignCells(withN2, cents, 1)
-      .repartition(col("cell_id"))
-      .sortWithinPartitions(col("cell_id"), col("vec_id"))
-      .write
-      .partitionBy("cell_id")
-      .mode(SaveMode.Overwrite)
-      .parquet(tmpData.toString)
-    cents.write.mode(SaveMode.Overwrite).parquet(tmpCent.toString)
-    def swap(live: Path, tmp: Path): Unit = {
-      val trash = new Path(live.getParent, s".reindex-old-${live.getName}")
-      // clear the set-aside only when live exists — when it does not, the
-      // set-aside IS the last committed copy (a predecessor died between
-      // its two renames; entry-time healIvfLeaves promotes it, so this
-      // branch is belt-and-braces)
-      if (fs.exists(live)) {
-        if (fs.exists(trash)) fs.delete(trash, true)
-        if (!fs.rename(live, trash))
-          throw new java.io.IOException(s"reindexIvf: cannot set aside $live")
-      }
-      if (!fs.rename(tmp, live)) {
-        if (fs.exists(trash)) fs.rename(trash, live) // roll back
-        throw new java.io.IOException(s"reindexIvf: cannot promote $tmp")
-      }
-      fs.delete(trash, true)
-    }
-    // the two swaps are each atomic-with-recovery, but a death BETWEEN
-    // them leaves new data with old centroids for the gap's duration:
-    // searches then route probes with the old quantizer against new cell
-    // ids (degraded, not corrupt — cell routing only affects recall).
-    // Re-running reindexIvf converges the pair; the gap cannot lose rows.
-    swap(dataDir, tmpData)
-    swap(centDir, tmpCent)
-  }
-
-  /** Crash-window repair for a persisted IVF tree, run by every API entry
-    * that reads it (`searchIvfIndex` / `deleteFromIvfIndex` /
-    * `mergeIvfIndexes`): promote any set-aside copy whose live directory
-    * is absent — `.reindex-old-*` beside the index root (a reindex died
-    * between its two renames) and `.ivfdel-old-cell_id=*` inside it (a
-    * delete died mid-leaf-swap). Without this a reader silently misses
-    * the set-aside rows (a PARTIAL index, not an error — the failure mode
-    * that matters); with it every crash state re-reads as the last
-    * committed tree. Idempotent; one parent stat + one index listing.
-    */
-  private def healIvfLeaves(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dataDir = new Path(path)
-    val fs      = dataDir.getFileSystem(spark.sessionState.newHadoopConf())
-    def promote(trash: Path, live: Path): Unit =
-      if (!fs.exists(live) && fs.exists(trash) && !fs.rename(trash, live))
-        throw new java.io.IOException(s"ivf heal: cannot promote $trash to $live")
-    promote(new Path(dataDir.getParent, s".reindex-old-${dataDir.getName}"), dataDir)
-    val centDir = new Path(s"$path.centroids")
-    promote(new Path(centDir.getParent, s".reindex-old-${centDir.getName}"), centDir)
-    if (fs.exists(dataDir))
-      fs.listStatus(dataDir).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".ivfdel-old-"))
-          promote(st.getPath, new Path(dataDir, n.stripPrefix(".ivfdel-old-")))
-      }
-  }
-
   /** Delete vectors from a persisted IVF index by id — the GDPR /
     * retraction path that completes the index's lifecycle (build:
-    * `writeIvfIndex`, append: `mergeIvfIndexes`, rebalance: `reindexIvf`,
-    * remove: here). Centroids are untouched: remaining rows keep their
-    * cell assignment, so searches stay exact over the survivors.
+    * `writeIvfIndex`, append: `mergeIvfIndexes`, remove: here). Centroids
+    * are untouched: remaining rows keep their cell assignment, so searches
+    * stay exact over the survivors.
     *
     * Scale shape: delete lists are small (a retraction batch, not a
     * corpus), so the id set BROADCASTS; the affected cell ids come from
     * probing the index WITH that broadcast (collected — bounded by the
     * delete list, the MergeSink dirty-partition pattern), and only those
     * cell directories are rescanned (partition-pruned literal IN) and
-    * rewritten. Cost ∝ cells touched, never index size. Each leaf swaps
-    * by the two-rename pattern: a crash leaves every cell either fully
-    * old, fully new, or parked at its set-aside path for the instant
-    * between the two renames — and every reading entry point promotes
-    * set-asides first (`healIvfLeaves`), so no crash state reads as a
-    * PARTIAL index; re-running the delete heals (deletes are
-    * idempotent). A cell whose every row is deleted ends EMPTY (its
-    * directory is removed) — searches simply stop probing into it.
-    * Bulk deletes (a constant fraction of the index) should use
-    * `reindexIvf` on the filtered corpus instead.
+    * rewritten. Cost ∝ cells touched, never index size. The rewritten
+    * cells swap in through `DirSwap.commit`, and every entry point that
+    * reads the index heals first, so no crash state reads as a PARTIAL
+    * index; re-running the delete heals too (deletes are idempotent). A
+    * cell whose every row is deleted ends EMPTY (its directory is removed)
+    * — searches simply stop probing into it. Bulk deletes (a constant
+    * fraction of the index) should rebuild it with `writeIvfIndex` on the
+    * filtered corpus instead.
     *
     * Returns the number of rows actually removed.
     */
@@ -652,9 +498,8 @@ object Similarity {
       path: String,
       deleteIds: DataFrame,
       idCol: String = "vec_id"): Long = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SaveMode
-    healIvfLeaves(spark, path)
+    DirSwap.heal(spark, path, 1)
     val dels = deleteIds
       .select(col(idCol).cast("long").as("__del"))
       .distinct()
@@ -670,37 +515,12 @@ object Similarity {
     if (affected.isEmpty) return 0L
     val sub  = idx.filter(col("cell_id").isin(affected: _*)) // partition-pruned
     val nDel = sub.join(broadcast(dels), sub("vec_id") === col("__del")).count()
-    val keep = sub
+    sub
       .join(broadcast(dels), sub("vec_id") === col("__del"), "left_anti")
       .repartition(col("cell_id"))
       .sortWithinPartitions(col("cell_id"), col("vec_id"))
-    val conf    = spark.sessionState.newHadoopConf()
-    val dataDir = new Path(path)
-    val fs      = dataDir.getFileSystem(conf)
-    val tmp     = new Path(dataDir.getParent, s".ivfdel-tmp-${dataDir.getName}")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    keep.write.partitionBy("cell_id").mode(SaveMode.Overwrite).parquet(tmp.toString)
-    affected.foreach { c =>
-      val live    = new Path(dataDir, s"cell_id=$c")
-      val rebuilt = new Path(tmp, s"cell_id=$c")
-      val trash   = new Path(dataDir, s".ivfdel-old-cell_id=$c")
-      // only clear the set-aside copy when the live leaf exists — when it
-      // does not, the set-aside IS the last committed leaf (a predecessor
-      // died between its two renames) and deleting it first would leave a
-      // window holding zero copies (the CountMin.updateStore swap rule; entry-time
-      // healIvfLeaves makes this branch unreachable in practice)
-      if (fs.exists(live)) {
-        if (fs.exists(trash)) fs.delete(trash, true)
-        if (!fs.rename(live, trash))
-          throw new java.io.IOException(s"deleteFromIvfIndex: cannot set aside $live")
-      }
-      if (fs.exists(rebuilt) && !fs.rename(rebuilt, live)) {
-        fs.rename(trash, live) // roll back this leaf
-        throw new java.io.IOException(s"deleteFromIvfIndex: cannot promote $rebuilt")
-      }
-      fs.delete(trash, true)
-    }
-    fs.delete(tmp, true)
+      .write.partitionBy("cell_id").mode(SaveMode.Overwrite).parquet(DirSwap.staging(path))
+    DirSwap.commit(spark, path, affected.map(c => s"cell_id=$c"))
     nDel
   }
 
@@ -720,8 +540,7 @@ object Similarity {
     * skew every downstream top-k, and a mismatched dimension would store
     * vectors no probe can ever score. Rows keep their exact embeddings and
     * precomputed norms, so post-merge searches are exact over the union —
-    * recall shifts only through the coarse geometry, the same trade
-    * `reindexIvf` exists to heal.
+    * recall shifts only through the coarse geometry.
     *
     * Scale shape: cost = one in-row assignment over |other| + one
     * cell-partitioned write of |base| + |other|. The guards cost ONE extra
@@ -739,7 +558,8 @@ object Similarity {
       otherPath: String,
       outPath: String): Unit = {
     import org.apache.spark.sql.SaveMode
-    healIvfLeaves(spark, basePath)
+    DirSwap.heal(spark, basePath, 1)
+    DirSwap.heal(spark, outPath, 1)
     val cents = spark.read.parquet(s"$basePath.centroids")
     val base = spark.read.parquet(basePath)
       .select(
@@ -813,7 +633,7 @@ object Similarity {
       probes: DataFrame,
       k: Int,
       nprobe: Int): DataFrame = {
-    healIvfLeaves(spark, path)
+    DirSwap.heal(spark, path, 1)
     val centArr = spark.read.parquet(s"$path.centroids")
     val p = assignCells(
       probes.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2")),

@@ -67,7 +67,9 @@ class CanserverFileFormat extends FileFormat with DataSourceRegister {
       // one task reads several small files in turn: close each at its end,
       // and at task completion for a task that fails or stops early
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-      val tokens = CanserverTokenizer.tokenizeChunked(in, path.toString)
+      // a buffer no larger than the file: logs are often tens of KB
+      val chunk  = math.min(8L << 20, file.fileSize).toInt
+      val tokens = CanserverTokenizer.tokenizeChunked(in, path.toString, chunk)
       val records = new Iterator[CanRecord] {
         def hasNext: Boolean = tokens.hasNext || { in.close(); false }
         def next(): CanRecord = tokens.next()

@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.DirSwap
+
 /** Idempotent partitioned upsert — the foreachBatch replacement for the
   * reference's whole-object read-modify-write merges
   * (reference parse_canserver_filtered_log.py:327-346,
@@ -24,25 +26,14 @@ import org.apache.spark.sql.types.StructType
   * schema-inference job runs) and rewritten. Untouched partitions are never
   * scanned or written.
   *
-  * Commit protocol (crash-safe): the merge is materialized to a DETERMINISTIC
-  * temp sibling (`.graft-tmp-<target>`), then each dirty partition directory
-  * is swapped in with two renames, displacing the old copy into
-  * `.graft-old-<target>`. Every upsert begins by RECOVERING any staging dirs
-  * a crashed commit left behind: a trash leaf whose destination is missing
-  * (crash between the two renames) is renamed back, one whose destination
-  * exists (new data landed) is dropped — so no commit state is ever
-  * unrecoverable. Deterministic staging names mean concurrent upserts to the
-  * SAME target are not supported (a streaming query runs its batches
-  * serially, which is the intended caller).
+  * Commit: the merge is written to `DirSwap.staging(target)` and each
+  * dirty partition swaps in through `DirSwap.commit`; every upsert first
+  * heals what a crashed commit left (`DirSwap.heal`). The staging names
+  * are fixed, so concurrent upserts to the SAME target are not supported
+  * (a streaming query runs its batches serially, which is the intended
+  * caller).
   */
 object MergeSink {
-
-  private def leafDirs(fs: FileSystem, p: Path, depth: Int): Seq[Path] =
-    if (depth == 0) Seq(p)
-    else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap(s => leafDirs(fs, s.getPath, depth - 1))
-
-  private def relOf(root: Path, leaf: Path, fs: FileSystem): String =
-    fs.makeQualified(leaf).toString.stripPrefix(root.toString).stripPrefix("/")
 
   /** True iff a partition leaf `depth` levels below `dir` holds a data
     * file: committed data. Hidden names (`_temporary`, the staging a crashed
@@ -56,33 +47,9 @@ object MergeSink {
       (if (depth == 0) s.isFile else s.isDirectory && hasData(fs, s.getPath, depth - 1))
     }
 
-  private def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      sys.error(s"MergeSink commit: rename $src -> $dst failed")
-
-  /** Restore the target from a previous crashed commit, then clear staging. */
-  private def recover(fs: FileSystem, target: Path, tmp: Path, trash: Path, depth: Int): Unit = {
-    if (fs.exists(trash)) {
-      leafDirs(fs, trash, depth).foreach { leaf =>
-        val rel  = relOf(trash, leaf, fs)
-        val dest = if (rel.isEmpty) target else new Path(target, rel)
-        if (!fs.exists(dest)) { // crash between the two renames: put it back
-          fs.mkdirs(dest.getParent)
-          renameOrFail(fs, leaf, dest)
-        } // else the new copy landed; the displaced old copy is obsolete
-      }
-      fs.delete(trash, true)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true) // half-written merge output
-  }
-
-  /** CONCURRENT READERS: the per-partition two-rename swap is atomic per
-    * partition but not across partitions — a reader scanning WHILE an upsert
-    * commits may observe a mix of new and old partition generations, and
-    * each partition has a brief window (old renamed aside, new not yet in
-    * place) where it is missing entirely. A crash in that window is healed
-    * by the next upsert's recover(), and a crashed batch replay converges
-    * (idempotent merge) — but point-in-time consistency across partitions is
+  /** CONCURRENT READERS: the swap is atomic per partition, not across
+    * partitions (see `DirSwap`), and a crashed batch replay converges
+    * (idempotent merge); point-in-time consistency across partitions is
     * only guaranteed for readers that do not overlap a commit. Gate reads
     * on a quiesced sink (the AvailableNow drain model) or snapshot the
     * table first where overlap is possible.
@@ -100,19 +67,15 @@ object MergeSink {
     val dirty = batch.select(partitionCols.map(col): _*).distinct().collect().toSeq
     if (dirty.isEmpty) return dirty
 
-    val conf   = spark.sessionState.newHadoopConf()
-    val rawTgt = new Path(targetDir)
-    val fs     = rawTgt.getFileSystem(conf)
-    val target = fs.makeQualified(rawTgt)
-    val tmp    = fs.makeQualified(new Path(target.getParent, s".graft-tmp-${target.getName}"))
-    val trash  = fs.makeQualified(new Path(target.getParent, s".graft-old-${target.getName}"))
-
+    val depth = partitionCols.length
     // heal any crashed previous commit BEFORE reading the target
-    recover(fs, target, tmp, trash, partitionCols.length)
+    DirSwap.heal(spark, targetDir, depth)
+    val target = new Path(targetDir)
+    val fs     = target.getFileSystem(spark.sessionState.newHadoopConf())
 
     // a target without committed data (missing, or a crashed first
     // write's leftovers) is overwritten whole
-    if (!fs.exists(target) || !hasData(fs, target, partitionCols.length))
+    if (!fs.exists(target) || !hasData(fs, target, depth))
       batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
     else {
       val oldDirty = readPartitions(spark, targetDir, batch.schema, partitionCols, dirty)
@@ -128,26 +91,11 @@ object MergeSink {
         .filter(col("__rn") === 1)
         .drop("__pri", "__rn")
 
-      // Two-phase commit: materialize the merge to the temp sibling (the
-      // job never deletes data it is still reading), then swap each dirty
-      // partition in with renames. On swap failure the exception
-      // propagates with tmp/trash intact — the NEXT upsert's recover()
-      // restores them; nothing is deleted until its replacement is in
-      // place.
-      merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
-      leafDirs(fs, tmp, partitionCols.length).foreach { leaf =>
-        val rel   = relOf(tmp, leaf, fs)
-        val dest  = if (rel.isEmpty) target else new Path(target, rel)
-        val aside = if (rel.isEmpty) trash else new Path(trash, rel)
-        if (fs.exists(dest)) {
-          fs.mkdirs(aside.getParent)
-          renameOrFail(fs, dest, aside)
-        }
-        fs.mkdirs(dest.getParent)
-        renameOrFail(fs, leaf, dest)
-      }
-      fs.delete(trash, true)
-      fs.delete(tmp, true)
+      // the job never deletes data it is still reading: materialize the
+      // merge to staging, then swap the dirty partitions in
+      val staging = DirSwap.staging(targetDir)
+      merged.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(staging)
+      DirSwap.commit(spark, targetDir, DirSwap.leaves(spark, staging, depth))
     }
     dirty
   }

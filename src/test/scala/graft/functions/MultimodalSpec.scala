@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
 
-/** Multimodal plumbing: metadata derivation, magic-byte sniffing, batched
-  * fake-decode determinism, window sampling shape.
+/** Multimodal plumbing: metadata derivation, magic-byte sniffing, window
+  * sampling shape.
   */
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -29,25 +29,6 @@ class MultimodalSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
       .sortBy(_._1)
     assert(got === Array((1L, "png", 11), (2L, "jpeg", 5), (3L, "riff", 12), (4L, "unknown", 3)))
-  }
-
-  test("decodeBatch: deterministic byte-stat features through the batch seam") {
-    import spark.implicits._
-    val rows = Seq(
-      MediaRow(1L, "png", Array[Byte](0, 64, -128, -64)), // one byte per histogram bucket
-      MediaRow(2L, "png", Array.empty[Byte]))
-    val got = Multimodal
-      .decodeBatch(rows.toDS())
-      .collect()
-      .sortBy(_.media_id)
-    assert(got(0).histogram4.toSeq === Seq(1L, 1L, 1L, 1L))
-    assert(got(0).mean_byte === (0 + 64 + 128 + 192) / 4.0)
-    assert(got(0).n_bytes === 4L)
-    assert(got(1).mean_byte === 0.0)
-    // digest matches the Column-side sha2 on the same bytes
-    val sqlDigest = rows.take(1).toDF()
-      .select(sha2(col("payload"), 256).as("d")).head().getString(0)
-    assert(got(0).digest === sqlDigest)
   }
 
   test("sampleWindows: stride/window offsets over the opaque payload") {

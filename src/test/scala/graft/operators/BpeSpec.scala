@@ -90,25 +90,38 @@ class BpeSpec extends AnyFunSuite {
     assert(segs("aaa") === Seq("aa", "a</w>"))
   }
 
-  test("endOfWord=false table feeds the native production encoder: bpeTokens == segmentWords") {
+  test("endOfWord=false: hand-derived merge table and segmentWords without the sentinel") {
     import spark.implicits._
-    import graft.functions.TextAnalysis
-    // merges.txt-style training (no </w> sentinel) so the learned table is
-    // directly consumable by BpeEncodeExpr's convention; on a trained
-    // table priority application (the expr) and rank-order application
-    // (segmentWords) must agree — a merge's operands always exist from
-    // EARLIER merges, so later merges can never re-enable earlier ones.
+    // merges.txt-style training (no </w> sentinel)
     val merges = Bpe.train(fixtureDocs, "text", numMerges = 10, endOfWord = false)
     val ms = merges.orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     assert(ms === Seq(("a", "b"), ("ab", "ab"))) // hand-derived without the sentinel
     val words = Seq("abab", "ab", "ababab", "aab", "a").toDF("word")
     val viaFold = Bpe.segmentWords(words, merges, endOfWord = false)
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val viaExpr = words
-      .select(col("word"), TextAnalysis.bpeTokens(col("word"), ms).as("toks"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    assert(viaFold === viaExpr)
-    assert(viaFold("ababab") === Seq("abab", "ab"))
+    assert(viaFold === Map(
+      "abab"   -> Seq("abab"),
+      "ab"     -> Seq("ab"),
+      "ababab" -> Seq("abab", "ab"),
+      "aab"    -> Seq("a", "ab"),
+      "a"      -> Seq("a")))
+  }
+
+  test("trainer: learns the dominant pair first and is partitioning-deterministic") {
+    import spark.implicits._
+    def trained(docs: org.apache.spark.sql.DataFrame) =
+      Bpe.train(docs, "text", numMerges = 5, endOfWord = false)
+    val docs = Seq.fill(50)("banana band bandana").toDF("text")
+    def table(m: org.apache.spark.sql.DataFrame) =
+      m.orderBy("rank").collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val m1 = trained(docs)
+    assert(table(m1) === table(trained(docs.repartition(7))))
+    // 'an' dominates (2x per 'banana', 1x 'band', 2x 'bandana')
+    assert(table(m1).head === (("a", "n")))
+    // trained merges round-trip through segmentation
+    val toks = Bpe.segmentWords(Seq("banana").toDF("word"), m1, endOfWord = false)
+      .head().getSeq[String](1)
+    assert(toks.mkString === "banana")
   }
 
   test("fertility: per-group tokens-per-word in micro-units, null text/group excluded") {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -10,8 +8,7 @@ import graft.core.Tables
 
 /** Count-min sketch laws: one-sided error (never undercounts), the
   * elementwise merge law (halves sum to the whole — the property every
-  * incremental drain rides on), batch-vs-driver estimate agreement, and
-  * the persisted-store fold.
+  * incremental drain rides on), and batch-vs-driver estimate agreement.
   */
 class CountMinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -76,52 +73,5 @@ class CountMinSpec extends AnyFunSuite {
     val withNull = Seq(Option("x"), None).toDF("tok")
     val nulls = CountMin.estimateCol(withNull, "tok", w, d, counters).collect()
     assert(nulls.exists(r => r.isNullAt(0) && r.isNullAt(1)), "null key must yield null estimate")
-  }
-
-  test("updateStore: two drain folds == one-shot sketch of the union; crash-shape rollback intact") {
-    val toks = tokens().cache()
-    try {
-      val dir = Files.createTempDirectory("cms").toString + "/store"
-      val d1  = CountMin.sketch(toks.filter(col("doc_id") % 2 === 0), "tok", 1024, 4)
-      val d2  = CountMin.sketch(toks.filter(col("doc_id") % 2 =!= 0), "tok", 1024, 4)
-      CountMin.updateStore(spark, dir, d1)
-      CountMin.updateStore(spark, dir, d2)
-      val (_, _, stored) = grid(spark.read.parquet(dir))
-      val (_, _, whole)  = grid(CountMin.sketch(toks, "tok", 1024, 4))
-      assert(stored.toSeq === whole.toSeq, "folded store must equal the one-shot sketch")
-      // shape mismatch is refused loudly (store identity, not a tunable)
-      val bad = CountMin.sketch(toks, "tok", 512, 4)
-      intercept[IllegalArgumentException] { CountMin.updateStore(spark, dir, bad) }
-    } finally toks.unpersist()
-  }
-
-  test("a store parked mid-swap heals: the fold resumes the history instead of restarting it") {
-    val toks = tokens().cache()
-    try {
-      val root = Files.createTempDirectory("cmscrash").toString
-      val dir  = root + "/store"
-      val d1   = CountMin.sketch(toks.filter(col("doc_id") % 2 === 0), "tok", 1024, 4)
-      val d2   = CountMin.sketch(toks.filter(col("doc_id") % 2 =!= 0), "tok", 1024, 4)
-      CountMin.updateStore(spark, dir, d1)
-
-      // simulate a writer killed between its two renames: live store gone,
-      // set-aside copy holds the whole count history
-      val live   = new java.io.File(dir)
-      val parked = new java.io.File(root, ".cms-old-store")
-      assert(live.renameTo(parked), "could not park the store")
-
-      // the read side falls back to the set-aside copy
-      val (_, _, viaFallback) = CountMin.readMerged(spark, dir)
-      val (_, _, wantD1)      = grid(d1)
-      assert(viaFallback.toSeq === wantD1.toSeq, "readMerged must see the parked store")
-
-      // the next fold heals the tree and RESUMES: store == union sketch
-      // (pre-fix it restarted from d2 and deleted the parked history)
-      CountMin.updateStore(spark, dir, d2)
-      val (_, _, stored) = grid(spark.read.parquet(dir))
-      val (_, _, whole)  = grid(CountMin.sketch(toks, "tok", 1024, 4))
-      assert(stored.toSeq === whole.toSeq, "healed fold must equal the one-shot union sketch")
-      assert(!parked.exists(), "completed fold clears the set-aside copy")
-    } finally toks.unpersist()
   }
 }

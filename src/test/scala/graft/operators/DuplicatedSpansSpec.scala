@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
+import graft.core.DirSwap
 
 /** Duplicated-span mining semantics (Corpus.duplicatedSpans /
   * duplicatedSpanCensus / stripDuplicatedSpans): hand-computed fixture
@@ -138,12 +139,13 @@ class DuplicatedSpansSpec extends AnyFunSuite {
     assert(spans(Corpus.duplicatedSpansAgainstCounts(docs, "doc_id", "text", path)) === want)
 
     // a writer killed between its two renames parks the store; the miner
-    // falls back to the set-aside copy and the next fold resumes the
-    // history (no silent restart — the CountMin.updateStore rule)
+    // heals it before reading and the next fold resumes the history (no
+    // silent restart)
     val live   = new java.io.File(path)
-    val parked = new java.io.File(root, ".gramcnt-old-counts")
+    val parked = new java.io.File(DirSwap.parked(path))
     assert(live.renameTo(parked), "could not park the store")
     assert(spans(Corpus.duplicatedSpansAgainstCounts(docs, "doc_id", "text", path)) === want)
+    assert(live.renameTo(parked), "could not park the store again")
     Corpus.updateGramCounts(
       Seq((9L, "w1 w2 w3 w4")).toDF("doc_id", "text"), "doc_id", "text", k = 3, path)
     assert(live.exists() && !parked.exists(), "fold must heal and clear the set-aside")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
-import graft.core.Tables
+import graft.core.{DirSwap, Tables}
 
 /** Persisted IVF index semantics: full-probe search reproduces brute force
   * exactly, and a narrow probe READS only its cells' directories — the
@@ -57,69 +57,6 @@ class IvfIndexSpec extends AnyFunSuite {
       .join(index.select(col("vec_id").as("neighbor_id"), col("cell_id")), "neighbor_id")
       .select(col("cell_id").cast("long")).distinct().collect().map(_.getLong(0)).toSet
     assert(neighborCells === Set(probeCell))
-  }
-
-  test("reindexIvf: drifted merged-in cluster regains low-nprobe recall after re-centroid") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(3)
-    def around(center: Array[Float], eps: Float) =
-      center.map(x => x + eps * rnd.nextGaussian().toFloat)
-    // epoch 1: two well-separated clusters seed the index's centroids
-    val c1   = Array.fill(16)(rnd.nextGaussian().toFloat)
-    val c2   = Array.fill(16)(rnd.nextGaussian().toFloat)
-    val base = (1L to 60L).map(i => (i, around(if (i % 2 == 0) c1 else c2, 0.05f)))
-    val root    = tmp()
-    val baseIdx = s"$root/base"; val driftIdx = s"$root/drift"; val idx = s"$root/index"
-    Similarity.writeIvfIndex(base.toDF("vec_id", "embedding"), baseIdx, ncells = 4)
-
-    // epoch 2: a NEW tight cluster EXACTLY BETWEEN two stored centroids
-    // arrives (unit-normalized sum — equal cosine to both by construction)
-    // and is merged in against the base quantizer, so member noise decides
-    // each row's stale cell and the cluster splits across cells: a 1-probe
-    // search sees only the part sharing its cell
-    val cents = spark.read.parquet(s"$baseIdx.centroids")
-      .select(explode(col("cents")).as("c"))
-      .orderBy(col("c.cell_id"))
-      .select("c.c_emb")
-      .collect().map(_.getSeq[Float](0).toArray)
-    def unit(a: Array[Float]) = {
-      val n = math.sqrt(a.map(x => x * x.toDouble).sum).toFloat; a.map(_ / n)
-    }
-    val c3    = unit(cents(0)).zip(unit(cents(1))).map { case (a, b) => a + b }
-    val drift = (200L until 260L).map(i => (i, around(c3, 0.05f)))
-    Similarity.writeIvfIndex(drift.toDF("vec_id", "embedding"), driftIdx, ncells = 4)
-    Similarity.mergeIvfIndexes(spark, baseIdx, driftIdx, idx)
-
-    val all = (base ++ drift).toDF("vec_id", "embedding")
-    def recallAt(nprobe: Int): Double = {
-      val want = Similarity.bruteForceTopK(all, col("vec_id") >= 200, k = 5)
-        .select("probe_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got = Similarity
-        .searchIvfIndex(spark, idx, all.filter(col("vec_id") >= 200), k = 5, nprobe = nprobe)
-        .select("probe_id", "neighbor_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (want & got).size.toDouble / want.size
-    }
-    // the drift cluster (60 rows, the largest) legitimately splits over 2
-    // of the 4 refined cells, so the demonstrative budget is nprobe=2:
-    // stale centroids scatter the cluster over ALL cells (recall@2 ~0.7);
-    // refined ones confine it to its two (recall@2 = 1.0)
-    val before = recallAt(2)
-    Similarity.reindexIvf(spark, idx, iters = 10)
-    val after = recallAt(2)
-    assert(before <= 0.8, s"fixture failed to degrade: recall@2 $before under stale centroids")
-    assert(after >= 0.99, s"reindex did not restore recall@2: $before -> $after")
-
-    // exactness invariant survives the rewrite: full probe == brute force
-    val full = Similarity
-      .searchIvfIndex(spark, idx, all.filter(col("vec_id") < 10), k = 5, nprobe = 4)
-      .select("probe_id", "rnk", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val brute = Similarity.bruteForceTopK(all, col("vec_id") < 10, k = 5)
-      .select("probe_id", "rnk", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(full === brute && full.nonEmpty)
   }
 
   test("deleteFromIvfIndex: search == brute force over survivors; idempotent; empty-cell removal") {
@@ -173,65 +110,25 @@ class IvfIndexSpec extends AnyFunSuite {
     val before = search()
 
     // simulate a deleter killed between a leaf's two renames: the live
-    // cell dir is gone, only the set-aside copy remains
+    // cell dir is gone, only the parked copy remains
     val victim = spark.read.parquet(path).select(col("cell_id").cast("int")).head().getInt(0)
     val live   = new java.io.File(path, s"cell_id=$victim")
-    val parked = new java.io.File(path, s".ivfdel-old-cell_id=$victim")
+    val parked = new java.io.File(DirSwap.parked(path, s"cell_id=$victim"))
+    parked.getParentFile.mkdirs()
     assert(live.renameTo(parked), s"could not park $live")
 
     // WITHOUT healing this search would silently miss the cell's rows;
-    // with entry-time healIvfLeaves it reproduces the committed index
+    // with the entry-time heal it reproduces the committed index
     assert(search() === before)
     assert(live.exists() && !parked.exists(), "heal must promote the set-aside leaf")
 
-    // same for the whole-tree reindex set-aside: park the centroids dir
-    val centLive   = new java.io.File(path + ".centroids")
-    val centParked = new java.io.File(
-      centLive.getParentFile, s".reindex-old-${centLive.getName}")
-    assert(centLive.renameTo(centParked), s"could not park $centLive")
-    assert(search() === before)
-    assert(centLive.exists() && !centParked.exists())
-
     // and a delete against a parked tree sees the full committed index
-    val parked2 = new java.io.File(path, s".ivfdel-old-cell_id=$victim")
+    val parked2 = new java.io.File(DirSwap.parked(path, s"cell_id=$victim"))
+    parked2.getParentFile.mkdirs()
     assert(new java.io.File(path, s"cell_id=$victim").renameTo(parked2))
     val delIds = emb.filter(col("vec_id") % 11 === 0).select("vec_id")
     assert(Similarity.deleteFromIvfIndex(spark, path, delIds) === delIds.count())
     assert(spark.read.parquet(path).count() === emb.count() - delIds.count())
-  }
-
-  test("reindexIvf heals a parked tree first: no row of a parked leaf is lost by the rebuild") {
-    val emb  = Tables.embeddings(spark, sfDir)
-    val path = tmp() + "/index"
-    Similarity.writeIvfIndex(emb, path, ncells = 8)
-    val total = emb.count()
-
-    // park one leaf the way a deleter killed between renames leaves it:
-    // live dir gone, only the dot-prefixed set-aside remains — which
-    // spark.read.parquet SKIPS, so an unhealed reindex would rebuild
-    // without these rows and then delete the old tree (permanent loss)
-    val victim = spark.read.parquet(path).select(col("cell_id").cast("int")).head().getInt(0)
-    val live   = new java.io.File(path, s"cell_id=$victim")
-    val parked = new java.io.File(path, s".ivfdel-old-cell_id=$victim")
-    assert(live.renameTo(parked), s"could not park $live")
-    // and park the index ROOT the way a dead reindex leaves it, so the
-    // documented recovery path (re-run reindexIvf) is exercised end to end
-    val root       = new java.io.File(path)
-    val rootParked = new java.io.File(root.getParentFile, s".reindex-old-${root.getName}")
-    assert(root.renameTo(rootParked), s"could not park $root")
-
-    Similarity.reindexIvf(spark, path, iters = 5)
-
-    // every row survived the rebuild, and search is still exact
-    assert(spark.read.parquet(path).count() === total)
-    val got = Similarity
-      .searchIvfIndex(spark, path, emb.filter(col("vec_id") < 10), k = 5, nprobe = 8)
-      .select("probe_id", "rnk", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val want = Similarity.bruteForceTopK(emb, col("vec_id") < 10, k = 5)
-      .select("probe_id", "rnk", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got === want && got.nonEmpty)
   }
 
   test("mergeIvfIndexes: an empty/corrupt base quantizer is rejected, never merged against") {

@@ -43,83 +43,6 @@ class LayoutSpec extends AnyFunSuite {
     assert(touchedShuffled === 8, s"random layout should touch all files, got $touchedShuffled")
   }
 
-  test("compact: many small files collapse to the computed count; rows and content survive") {
-    import spark.implicits._
-    val path = tmp() + "/frag"
-    val df   = (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-    df.repartition(50).write.parquet(path) // 50 tiny files
-    val before = Layout.filesTouched(spark.read.parquet(path))
-    assert(before === 50)
-
-    val total = java.nio.file.Files
-      .walk(java.nio.file.Paths.get(path)).toArray.map(_.toString)
-      .filter(p => p.endsWith(".parquet")).map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).sum
-    // target half the table per file -> expect 2 output files
-    val n = Layout.compact(spark, path, targetBytes = (total + 1) / 2)
-    assert(n === 2)
-    val after = spark.read.parquet(path)
-    assert(Layout.filesTouched(after) === 2)
-    assert(after.count() === 1000)
-    assert(after.as[(Long, String)].collect().toSet === df.as[(Long, String)].collect().toSet)
-  }
-
-  test("compact: a leaf parked mid-swap (writer died between renames) heals on re-run") {
-    import spark.implicits._
-    val path = tmp() + "/fragheal"
-    val df   = (1 to 200).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-    df.repartition(8).write.parquet(path)
-
-    // simulate a compactor killed between its two renames: the data dir is
-    // gone, the set-aside copy holds the whole partition
-    val live   = new java.io.File(path)
-    val parked = new java.io.File(live.getParentFile, s".compact-old-${live.getName}")
-    assert(live.renameTo(parked), "could not park the partition")
-
-    // pre-fix this threw FileNotFound on the missing dir with the data one
-    // rename away; now the re-run promotes the set-aside copy and compacts
-    val n = Layout.compact(spark, path, targetBytes = Long.MaxValue)
-    assert(n === 1)
-    assert(!parked.exists(), "completed compact clears the set-aside copy")
-    val after = spark.read.parquet(path)
-    assert(after.count() === 200)
-    assert(after.as[(Long, String)].collect().toSet === df.as[(Long, String)].collect().toSet)
-
-    // parked HIVE LEAF: pre-fix the dot-filter silently SKIPPED it — the
-    // partition read as nonexistent with its data one rename away
-    val hp  = tmp() + "/fraghp"
-    val hdf = (1 to 300).map(i => (i.toLong, s"d${i % 3}", s"row$i")).toDF("id", "date", "s")
-    hdf.repartition(4).write.partitionBy("date").parquet(hp)
-    val leafLive   = new java.io.File(hp, "date=d1")
-    val leafParked = new java.io.File(hp, ".compact-old-date=d1")
-    assert(leafLive.renameTo(leafParked), "could not park the leaf")
-    assert(Layout.compact(spark, hp, targetBytes = Long.MaxValue) === 3)
-    assert(!leafParked.exists() && leafLive.exists(), "walk must promote the parked leaf")
-    assert(spark.read.parquet(hp).count() === 300)
-  }
-
-  test("compact: hive-partitioned table compacts per leaf; pruning and rows survive") {
-    import spark.implicits._
-    val path = tmp() + "/fragp"
-    // i % 3 cycles dates, so every round-robin task holds all 3 values:
-    // 10 tasks x 3 partition dirs = 30 small files
-    val df = (1 to 900).map(i => (i.toLong, s"d${i % 3}", s"row$i")).toDF("id", "date", "s")
-    df.repartition(10).write.partitionBy("date").parquet(path)
-    assert(Layout.filesTouched(spark.read.parquet(path)) === 30)
-
-    val n = Layout.compact(spark, path, targetBytes = Long.MaxValue) // 1 file per leaf
-    assert(n === 3)
-    val after = spark.read.parquet(path)
-    assert(Layout.filesTouched(after) === 3)
-    assert(after.count() === 900)
-    assert(
-      after.select("id", "date", "s").as[(Long, String, String)].collect().toSet ===
-        df.as[(Long, String, String)].collect().toSet)
-    // directory pruning still works: the partition column stayed in the path
-    val one = after.filter(col("date") === "d1")
-    val files = one.select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(_.contains("date=d1")))
-  }
-
   test("writeShuffled: shard->directory mapping is identity and order matches shuffleShards") {
     import spark.implicits._
     val nShards = 7
@@ -206,33 +129,6 @@ class LayoutSpec extends AnyFunSuite {
     Layout.clusterWrite(ev, cpath, "event_id", numFiles = nFiles)
     assert(Layout.filesTouched(onId(cpath)) <= 2)
     assert(Layout.filesTouched(onUser(cpath)) >= nFiles * 3L / 4)
-  }
-
-  test("range index manifest: reads only overlapping files, exact rows, empty beyond the span") {
-    val ev   = Tables.events(spark, sfDir).select("event_id", "user_id", "value")
-    val path = tmp() + "/indexed"
-    Layout.clusterWriteIndexed(ev, path, "event_id", numFiles = 8)
-
-    val (narrow, nFiles) = Layout.readRangeIndexed(spark, path, "event_id", 100L, 199L)
-    val want = ev.filter(col("event_id") >= 100 && col("event_id") <= 199)
-      .select("event_id").collect().map(_.getLong(0)).toSet
-    assert(narrow.select("event_id").collect().map(_.getLong(0)).toSet === want && want.nonEmpty)
-    assert(nFiles <= 2, s"manifest cut should touch <= 2 span files, got $nFiles")
-
-    // beyond every span: zero files, empty result, schema preserved
-    val maxId = ev.agg(max(col("event_id"))).collect()(0).getLong(0)
-    val (empty, zero) = Layout.readRangeIndexed(spark, path, "event_id", maxId + 10, maxId + 20)
-    assert(zero === 0 && empty.count() === 0)
-    assert(empty.columns.toSeq === Seq("event_id", "user_id", "value"))
-  }
-
-  test("clusterWriteIndexed: non-integral cluster column is rejected at write time") {
-    import spark.implicits._
-    // the manifest stores typed long spans; a string/timestamp column would
-    // stringify at write and then mis-parse or mis-order at read
-    val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-    intercept[IllegalArgumentException](
-      Layout.clusterWriteIndexed(df, tmp() + "/badcol", "k", 2))
   }
 
   test("hive partitioning on top: equality predicate prunes to one directory") {

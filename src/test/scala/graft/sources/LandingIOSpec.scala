@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.{Jobs, SparkTestSession}
+import graft.core.DirSwap
 import graft.decode.CanFixture._
 import graft.pipelines.CanPipelines
 
@@ -164,6 +165,28 @@ class LandingIOSpec extends AnyFunSuite {
     invocation()
     assert(eventDocs(kept).size === 2)
     assert(eventDocs(gone) === eventDocs(kept))
+  }
+
+  test("Jobs: infer heals a landing partition a killed parse left parked") {
+    val raw    = Files.createTempDirectory("heal_raw").toString
+    val parked = Files.createTempDirectory("heal_parked").toString
+    val twin   = Files.createTempDirectory("heal_twin").toString
+    CrossFile.writeA(raw)
+    CrossFile.writeB(raw)
+    Seq(parked, twin).foreach(Jobs.parse(spark, raw, _))
+    // a parse killed between a partition's two renames: the hour that holds
+    // the stationary run and the AP edge sits at its parked path
+    val landing = s"$parked/landing"
+    val hours   = DirSwap.leaves(spark, landing, 2)
+    assert(hours.size === 1, s"fixture spans one hour, got $hours")
+    val live = Paths.get(landing, hours.head)
+    val aside = Paths.get(DirSwap.parked(landing, hours.head))
+    Files.createDirectories(aside.getParent)
+    Files.move(live, aside)
+    Seq(parked, twin).foreach(Jobs.infer(spark, _))
+    assert(eventDocs(twin).size === 2)
+    assert(eventDocs(parked) === eventDocs(twin))
+    assert(Files.exists(live) && !Files.exists(aside))
   }
 
   test("Jobs: each invocation of the cross-file fixture runs a fixed job count") {

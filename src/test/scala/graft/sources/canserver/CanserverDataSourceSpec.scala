@@ -67,6 +67,22 @@ class CanserverDataSourceSpec extends AnyFunSuite {
     assert(format.size === 4)
   }
 
+  test("files below the 514-byte buffer floor: format == CanDecode.records") {
+    val dir = Files.createTempDirectory("cansmall").toString
+    Files.write(Paths.get(dir, "header.log"), file())
+    Files.write(
+      Paths.get(dir, "one.log"),
+      file(timesync(1700000000L * 1000000L), frame(1, 599, 0, Array[Byte](0, 0x50, 0x30))))
+    assert(new java.io.File(dir).listFiles().forall(_.length() < 2 * 257))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val format = rows(spark.read.format("canserver").load(dir)
+      .select("frame_id", "bus_id", "length", "payload_long", "frame_time_micros"))
+    val records = rows(CanDecode.records(spark, dir).select(
+      col("frameId"), col("busId"), col("length"), col("payloadLong"), col("frameTimeMicros")))
+    assert(format === records)
+    assert(format.size === 1)
+  }
+
   test("glob paths resolve like binaryFile; no match fails with a clear error") {
     val dir = writeLogs()
     val globbed = spark.read.format("canserver").load(s"$dir/*.log").count()

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
+import graft.core.DirSwap
 
 /** Merge-sink semantics: batch-wins upsert, untouched-partition isolation,
   * crash recovery, the first-write branch for a target without committed
@@ -52,13 +53,12 @@ class MergeSinkSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("ms5")
     val dir  = root.resolve("tgt").toString
     MergeSink.upsert(spark, table((1L, "a", 1), (2L, "b", 2)), dir, Seq("k"), Seq("p"))
-    // simulate the crash window: partition p=1 was renamed aside into the
-    // deterministic trash dir, the new copy never landed, staging remains
-    JFiles.createDirectories(JPaths.get(root.toString, ".graft-old-tgt"))
-    JFiles.move(
-      JPaths.get(dir, "p=1"),
-      JPaths.get(root.toString, ".graft-old-tgt", "p=1"))
-    JFiles.createDirectories(JPaths.get(root.toString, ".graft-tmp-tgt", "p=1"))
+    // simulate the crash window: partition p=1 was parked, the new copy
+    // never landed, staging remains
+    val parked = JPaths.get(DirSwap.parked(dir, "p=1"))
+    JFiles.createDirectories(parked.getParent)
+    JFiles.move(JPaths.get(dir, "p=1"), parked)
+    JFiles.createDirectories(JPaths.get(DirSwap.staging(dir), "p=1"))
     // next upsert must first restore p=1 from trash, then merge normally
     MergeSink.upsert(spark, table((3L, "c", 3)), dir, Seq("k"), Seq("p"))
     assert(readBack(dir) === Set((1L, "a", 1), (2L, "b", 2), (3L, "c", 3)))
