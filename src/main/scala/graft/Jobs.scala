@@ -21,8 +21,8 @@ import graft.streaming.CanStreams
   *   events/Stationary/  day documents of stationary intervals
   *   events/Autopilot/   day documents of autopilot transitions
   *   ckpt/      streaming checkpoints (source offsets + pivot state)
-  *   .graft-tmp-landing/, .graft-old-landing/  transient `DirSwap`
-  *              staging and parked partitions of a landing commit
+  *   `DirSwap.staging`/`DirSwap.parked` of landing/  transient staged and
+  *              parked partitions of a landing commit
   *
   * Each stage does each thing once. `parse` commits each micro-batch in one
   * pass (MergeSink's one partition collect names the hours to re-channelize);
@@ -53,11 +53,11 @@ object Jobs {
     StructField("ap_status", StringType)))
 
   /** Runs after `parse` has returned, so it reads a quiesced sink (see
-    * `MergeSink.upsert` on concurrent readers). It heals the landing first:
-    * a parse killed mid-commit leaves a partition parked outside it.
+    * `MergeSink.upsert` on concurrent readers). It restores the landing
+    * first: a parse killed mid-commit leaves a partition parked outside it.
     */
   def infer(spark: org.apache.spark.sql.SparkSession, workDir: String): Unit = {
-    DirSwap.heal(spark, s"$workDir/landing", 2)
+    DirSwap.restore(spark, s"$workDir/landing", 2)
     val landing = spark.read.schema(InferSchema).parquet(s"$workDir/landing")
     LandingIO.writeStationaryDocs(
       CanPipelines.stationaryIntervals(CanPipelines.speedSeries(landing)),

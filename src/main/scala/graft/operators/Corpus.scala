@@ -1439,8 +1439,8 @@ object Corpus {
     * sequence of folds converges to the one-shot count of the union).
     * Store schema: (k, gh, c) — k is store IDENTITY, not a tunable; a
     * fold with a different k is refused. The store swaps whole through
-    * `DirSwap.commit`, and the fold and the miner heal first, so no crash
-    * state restarts the count history.
+    * `DirSwap.commit`; the fold heals and the miner restores a parked
+    * store first, so no crash state restarts the count history.
     *
     * Ingest posture: one fold per DRAINED wave (the drain-then-fold rule
     * every rank-based stage follows). The fold is additive, NOT
@@ -1488,7 +1488,7 @@ object Corpus {
     * everything ever folded — which is the point at 100 TB (each wave is
     * mined against the full corpus history at delta cost). k comes from
     * the store (it is store identity); a store left mid-swap by a crashed
-    * writer is healed before the read.
+    * writer is restored before the read.
     */
   def duplicatedSpansAgainstCounts(
       docs: DataFrame,
@@ -1497,7 +1497,7 @@ object Corpus {
       countsPath: String,
       minCount: Long = 2L): DataFrame = {
     val spark = docs.sparkSession
-    DirSwap.heal(spark, countsPath, 0)
+    DirSwap.restore(spark, countsPath, 0)
     spansAgainstCounts(docs, idCol, textCol, spark.read.parquet(countsPath), minCount)
   }
 

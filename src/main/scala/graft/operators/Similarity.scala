@@ -484,8 +484,9 @@ object Similarity {
     * cell directories are rescanned (partition-pruned literal IN) and
     * rewritten. Cost ∝ cells touched, never index size. The rewritten
     * cells swap in through `DirSwap.commit`, and every entry point that
-    * reads the index heals first, so no crash state reads as a PARTIAL
-    * index; re-running the delete heals too (deletes are idempotent). A
+    * reads the index restores parked cells first, so no crash state reads
+    * as a PARTIAL index; re-running the delete heals too (deletes are
+    * idempotent). A
     * cell whose every row is deleted ends EMPTY (its directory is removed)
     * — searches simply stop probing into it. Bulk deletes (a constant
     * fraction of the index) should rebuild it with `writeIvfIndex` on the
@@ -558,7 +559,8 @@ object Similarity {
       otherPath: String,
       outPath: String): Unit = {
     import org.apache.spark.sql.SaveMode
-    DirSwap.heal(spark, basePath, 1)
+    DirSwap.restore(spark, basePath, 1)
+    DirSwap.restore(spark, otherPath, 1)
     DirSwap.heal(spark, outPath, 1)
     val cents = spark.read.parquet(s"$basePath.centroids")
     val base = spark.read.parquet(basePath)
@@ -633,7 +635,7 @@ object Similarity {
       probes: DataFrame,
       k: Int,
       nprobe: Int): DataFrame = {
-    DirSwap.heal(spark, path, 1)
+    DirSwap.restore(spark, path, 1)
     val centArr = spark.read.parquet(s"$path.centroids")
     val p = assignCells(
       probes.select(col("vec_id"), col("embedding"), norm2(col("embedding")).as("n2")),

@@ -129,6 +129,19 @@ class IvfIndexSpec extends AnyFunSuite {
     val delIds = emb.filter(col("vec_id") % 11 === 0).select("vec_id")
     assert(Similarity.deleteFromIvfIndex(spark, path, delIds) === delIds.count())
     assert(spark.read.parquet(path).count() === emb.count() - delIds.count())
+
+    // and a merge restores a parked cell of the OTHER index before reading
+    // it: no row of that cell is left out of the merged index
+    val other = tmp() + "/other"
+    val shard = emb.filter(col("vec_id") < 40).withColumn("vec_id", col("vec_id") + 1000000L)
+    Similarity.writeIvfIndex(shard, other, ncells = 2)
+    val otherCell = spark.read.parquet(other).select(col("cell_id").cast("int")).head().getInt(0)
+    val parked3   = new java.io.File(DirSwap.parked(other, s"cell_id=$otherCell"))
+    parked3.getParentFile.mkdirs()
+    assert(new java.io.File(other, s"cell_id=$otherCell").renameTo(parked3))
+    val merged = tmp() + "/merged"
+    Similarity.mergeIvfIndexes(spark, path, other, merged)
+    assert(spark.read.parquet(merged).count() === emb.count() - delIds.count() + shard.count())
   }
 
   test("mergeIvfIndexes: an empty/corrupt base quantizer is rejected, never merged against") {
