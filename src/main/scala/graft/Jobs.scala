@@ -20,7 +20,8 @@ import graft.streaming.CanStreams
   *              contract: an export that no stage reads
   *   events/Stationary/  day documents of stationary intervals
   *   events/Autopilot/   day documents of autopilot transitions
-  *   ckpt/      streaming checkpoints (source offsets + pivot state)
+  *   ckpt/      streaming checkpoints: the parse's source offsets plus its
+  *              watermark carry (ckpt/parse/watermark); no operator state
   *   `DirSwap.staging`/`DirSwap.parked` of landing/  transient staged and
   *              parked partitions of a landing commit
   *

@@ -8,8 +8,8 @@ import graft.operators.{Sessionize, Transitions}
 
 /** The three reference domain computations as pure batch
   * DataFrame -> DataFrame functions (the oracle-testable surface). The
-  * parse stream (`graft.streaming.CanStreams`) runs `pivot` itself under a
-  * watermark and re-channelizes dirty hours with `channelize` into the
+  * parse stream (`graft.streaming.CanStreams`) runs `pivot` on each
+  * micro-batch and re-channelizes dirty hours with `channelize` into the
   * exported JSON documents; `graft.Jobs.infer` runs the stationary and
   * autopilot functions over the whole landing table, whose rows are
   * `pivot`'s, so `speedSeries`/`apSeries` take pivoted rows.
@@ -30,9 +30,11 @@ object CanPipelines {
     * duplicates the reference keeps the LAST frame — a documented divergence.
     *
     * The key is (device, ts, epoch_sec). `ts` and `epoch_sec` are both exact
-    * functions of `frame_time_micros`, so `ts` splits no group; keeping it a
-    * key is what lets the parse stream (`CanStreams.pivotStream`) run this
-    * same pivot under a watermark on `ts`, which evicts its state.
+    * functions of `frame_time_micros`, so `ts` splits no group. Keeping it a
+    * key keeps it on the output row: the parse stream (`CanStreams.runParse`)
+    * drops a pivoted row whose `ts` is at or below its carried watermark,
+    * which drops exactly the late frames, since every frame of a group
+    * shares that `ts`, and derives the row's date/hour partition from it.
     *
     * Input: CanDecode.decodeFiles output. One shuffle on the key; partial
     * aggregation makes the map-side combine absorb the per-file fan-in.

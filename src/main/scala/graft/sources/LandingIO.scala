@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Landing / event JSON document writes — the reference's whole-object S3
   * PUT contract re-expressed (reference
@@ -31,7 +32,8 @@ object LandingIO {
 
   /** Write one named single-object JSON file per row of `docs`: (name, doc).
     *
-    * Overwrites go through FileContext's atomic Rename.OVERWRITE where the
+    * Each document goes through `textWriter`. Overwrites go through
+    * FileContext's atomic Rename.OVERWRITE where the
     * filesystem provides one (posix/HDFS): a crash can then never leave the
     * destination missing — readers see the old document or the new one.
     * Filesystems without an AbstractFileSystem binding (e.g. s3a) fall back
@@ -44,53 +46,50 @@ object LandingIO {
     // Session Hadoop conf (spark.hadoop.* — s3a credentials etc.) serialized
     // into the closure; executor-side `new Configuration()` only sees
     // classpath XML and would break s3a:// targets.
-    val confEntries: Array[(String, String)] = {
-      import scala.jdk.CollectionConverters._
-      docs.sparkSession.sessionState.newHadoopConf()
-        .iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-    }
+    val conf = new SerializableConfiguration(docs.sparkSession.sessionState.newHadoopConf())
     // sweep tmp leftovers of a crashed run (top level + per-device subdirs)
-    {
-      val conf = new Configuration(false)
-      confEntries.foreach { case (k, v) => conf.set(k, v) }
-      val fs = FileSystem.get(new URI(outDir), conf)
-      Seq(".*.json.tmp", "*/.*.json.tmp").foreach { g =>
-        Option(fs.globStatus(new Path(outDir, g))).getOrElse(Array.empty)
-          .foreach(st => fs.delete(st.getPath, false))
-      }
+    val fs = FileSystem.get(new URI(outDir), conf.value)
+    Seq(".*.json.tmp", "*/.*.json.tmp").foreach { g =>
+      Option(fs.globStatus(new Path(outDir, g))).getOrElse(Array.empty)
+        .foreach(st => fs.delete(st.getPath, false))
     }
     docs
       .select(col("name"), col("doc"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         if (rows.nonEmpty) {
-          val conf = new Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val fs = FileSystem.get(new URI(outDir), conf)
-          fs.setWriteChecksum(false) // no .crc sidecars next to documents
-          fs.mkdirs(new Path(outDir))
-          // atomic-overwrite rename where supported; None => fallback path
-          val fc =
-            try Some(org.apache.hadoop.fs.FileContext.getFileContext(new URI(outDir), conf))
-            catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
-          rows.foreach { r =>
-            // write-then-rename: a reader (or a crash) never sees a partial
-            // document — the hidden temp name is invisible to Spark scans
-            val dest = new Path(outDir, r.getString(0) + ".json")
-            val tmp  = new Path(dest.getParent, "." + dest.getName + ".tmp")
-            val out  = fs.create(tmp, true)
-            try out.write((r.getString(1) + "\n").getBytes("UTF-8"))
-            finally out.close()
-            fc match {
-              case Some(c) =>
-                c.rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-              case None =>
-                if (fs.exists(dest)) fs.delete(dest, false)
-                if (!fs.rename(tmp, dest))
-                  sys.error(s"LandingIO: rename $tmp -> $dest failed")
-            }
-          }
+          val write = textWriter(outDir, conf.value)
+          rows.foreach(r => write(new Path(outDir, r.getString(0) + ".json"), r.getString(1) + "\n"))
         }
       }
+  }
+
+  /** The engine's write-then-rename of small text files under `dir` (the
+    * JSON documents, the parse's watermark carry): each write goes to a
+    * hidden temp name, invisible to Spark scans, and is renamed over its
+    * destination, so a reader (or a crash) never sees a partial file.
+    * Creating the temp file creates missing parent directories.
+    */
+  private[graft] def textWriter(dir: String, conf: Configuration): (Path, String) => Unit = {
+    val fs = FileSystem.get(new URI(dir), conf)
+    fs.setWriteChecksum(false) // no .crc sidecars next to documents
+    // atomic-overwrite rename where supported; None => fallback path
+    val fc =
+      try Some(org.apache.hadoop.fs.FileContext.getFileContext(new URI(dir), conf))
+      catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
+    (dest, text) => {
+      val tmp = new Path(dest.getParent, "." + dest.getName + ".tmp")
+      val out = fs.create(tmp, true)
+      try out.write(text.getBytes("UTF-8"))
+      finally out.close()
+      fc match {
+        case Some(c) =>
+          c.rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        case None =>
+          if (fs.exists(dest)) fs.delete(dest, false)
+          if (!fs.rename(tmp, dest))
+            sys.error(s"LandingIO: rename $tmp -> $dest failed")
+      }
+    }
   }
 
   /** Hourly landing documents from CanPipelines.channelize output, laid out

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -13,10 +12,16 @@ import graft.core.DirSwap
   * (reference parse_canserver_filtered_log.py:327-346,
   * infer_stationary_states.py:117-133, infer_autopilot_states.py:108-114).
   *
-  * Strictly stronger semantics than the reference: overlapping batches MERGE
-  * (batch rows win on key collision) instead of being silently dropped
+  * Merge policy, per column: on a key collision a value that has already
+  * landed keeps its value, and the batch only fills the landed row's nulls.
+  * For the parse this is what `first(ignoreNulls)` over every frame of an
+  * epoch gives when the earlier frames come first, so an epoch whose frames
+  * arrive in two micro-batches lands as one row. Strictly stronger than the
+  * reference: overlapping batches MERGE instead of being silently dropped
   * (SURVEY §2.7-4), and re-processing the same input is a no-op — which is
   * what makes checkpoint-recovery replays safe (exactly-once effect).
+  * A key's partition values must be a function of the key (the parse's
+  * date/hour are of `ts`), so colliding rows meet in one dirty partition.
   *
   * One pass per batch: `upsert` collects the batch's distinct partition
   * values once. That collect is the empty check (an empty batch returns no
@@ -54,17 +59,20 @@ object MergeSink {
     * on a quiesced sink (the AvailableNow drain model) or snapshot the
     * table first where overlap is possible.
     *
+    * @param stats aggregates over each partition's batch rows, computed by
+    *        the same collect (by default its row count)
     * @return the batch's distinct `partitionCols` values, the partitions
-    *         this upsert rewrote; empty for an empty batch, which writes
-    *         nothing
+    *         this upsert rewrote, each followed by its `stats`; empty for an
+    *         empty batch, which writes nothing
     */
   def upsert(
       spark: SparkSession,
       batch: DataFrame,
       targetDir: String,
       keyCols: Seq[String],
-      partitionCols: Seq[String]): Seq[Row] = {
-    val dirty = batch.select(partitionCols.map(col): _*).distinct().collect().toSeq
+      partitionCols: Seq[String],
+      stats: Seq[Column] = Seq(count(lit(1)))): Seq[Row] = {
+    val dirty = batch.groupBy(partitionCols.map(col): _*).agg(stats.head, stats.tail: _*).collect().toSeq
     if (dirty.isEmpty) return dirty
 
     val depth = partitionCols.length
@@ -78,18 +86,11 @@ object MergeSink {
     if (!fs.exists(target) || !hasData(fs, target, depth))
       batch.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(targetDir)
     else {
-      val oldDirty = readPartitions(spark, targetDir, batch.schema, partitionCols, dirty)
-        .select(batch.columns.map(col): _*) // align column order
-      // batch rows win on key collision
-      val w = Window
-        .partitionBy(keyCols.map(col): _*)
-        .orderBy(col("__pri"))
-      val merged = batch
-        .withColumn("__pri", lit(0))
-        .unionByName(oldDirty.withColumn("__pri", lit(1)))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__pri", "__rn")
+      val landed = readPartitions(spark, targetDir, batch.schema, partitionCols, dirty)
+      val merged = landed
+        .join(batch, keyCols, "full_outer")
+        .select(batch.columns.toSeq.map(c =>
+          if (keyCols.contains(c)) col(c) else coalesce(landed(c), batch(c)).as(c)): _*)
 
       // the job never deletes data it is still reading: materialize the
       // merge to staging, then swap the dirty partitions in

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestSession
@@ -125,9 +124,8 @@ class CanStreamsSpec extends AnyFunSuite {
     }
     val q = CanStreams.runParse(spark, raw, land, ckpt, json, maxFilesPerTrigger = Some(1))
     q.awaitTermination()
-    // one committed DATA micro-batch per file (one frame each), not one
-    // unbounded batch; the trailing no-data batch that advances the
-    // watermark reads no rows
+    // one committed micro-batch per file (one frame each), not one
+    // unbounded batch
     val inputRows = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
     assert(inputRows === Seq(1L, 1L, 1L), s"expected 1 new file per batch, got $inputRows")
     val nCommits = Files.list(Paths.get(ckpt, "commits")).iterator().asScala
@@ -141,37 +139,25 @@ class CanStreamsSpec extends AnyFunSuite {
   }
 
   test("pivot watermark: events later than 1.2 s behind the max are dropped (MAX_SR parity)") {
-    import spark.implicits._
-    val ms = MemoryStream[(String, Long, Double)](spark)
-    val decodedLike = ms.toDS()
-      .toDF("device", "sec", "speed")
-      .select(
-        col("device"),
-        timestamp_seconds(col("sec")).as("ts"),
-        col("sec").cast("double").as("epoch_sec"),
-        lit(null).cast("double").as("long_acc"),
-        lit(null).cast("double").as("lat_acc"),
-        lit(null).cast("double").as("vert_acc"),
-        lit(null).cast("double").as("yaw_rate"),
-        lit(null).cast("double").as("pitch_rate"),
-        lit(null).cast("double").as("roll_rate"),
-        lit(null).cast("double").as("lat"),
-        lit(null).cast("double").as("long"),
-        col("speed"),
-        lit(null).cast("string").as("ap_status"))
-    val q = CanStreams
-      .pivotStream(decodedLike)
-      .writeStream.format("memory").queryName("wm_out").outputMode("update").start()
-    try {
-      ms.addData(("d", 1000L, 10.0), ("d", 2000L, 20.0)) // watermark -> 1998.8 s
-      q.processAllAvailable()
-      ms.addData(("d", 1500L, 99.0), ("d", 2001L, 30.0)) // 1500 is ~500 s late
-      q.processAllAvailable()
-      val epochs = spark.table("wm_out").select("epoch_sec").collect().map(_.getDouble(0)).sorted
-      // the in-watermark rows all surface; the late 1500 s row never does
-      assert(epochs.contains(1000.0) && epochs.contains(2000.0) && epochs.contains(2001.0))
-      assert(!epochs.contains(1500.0), "late event leaked past the 1.2 s watermark")
-    } finally q.stop()
+    val raw  = Files.createTempDirectory("wmraw").toString
+    val land = Files.createTempDirectory("wmland").toString
+    val json = Files.createTempDirectory("wmjson").toString
+    val ckpt = Files.createTempDirectory("wmckpt").toString
+    // one speed tick at each time, in µs
+    def ticks(name: String, at: (Long, Double)*): Unit =
+      Files.write(Paths.get(raw, name), file(at.map { case (us, v) => timesync(us) ++ frame(0, 599, 0, speedPayload(v)) }: _*))
+    ticks("a.log", (1000000000L, 10.0), (2000000000L, 20.0)) // watermark -> 1998.8 s
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
+    // 1500 s is ~500 s late; 1998.8 s sits on the watermark, 1998.801 s
+    // just above it
+    ticks("b.log", (1500000000L, 99.0), (2001000000L, 30.0), (1998800000L, 40.0), (1998801000L, 50.0))
+    CanStreams.runParse(spark, raw, land, ckpt, json).awaitTermination()
+    val epochs = spark.read.parquet(land).select("epoch_sec").collect().map(_.getDouble(0)).sorted
+    // the in-watermark rows all surface; the late 1500 s row never does
+    assert(epochs.contains(1000.0) && epochs.contains(2000.0) && epochs.contains(2001.0))
+    assert(!epochs.contains(1500.0), "late event leaked past the 1.2 s watermark")
+    assert(!epochs.contains(1998800000L / 1e6), "a tick on the watermark landed")
+    assert(epochs.contains(1998801000L / 1e6), "a tick just above the watermark was dropped")
   }
 
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.core.DirSwap
 
-/** Merge-sink semantics: batch-wins upsert, untouched-partition isolation,
+/** Merge-sink semantics: the per-column upsert (a landed value stays, the
+  * batch fills nulls), untouched-partition isolation,
   * crash recovery, the first-write branch for a target without committed
   * data, and the dirty-partition set `upsert` returns.
   */
@@ -23,11 +24,15 @@ class MergeSinkSpec extends AnyFunSuite {
     spark.read.parquet(dir).select("k", "v", "p").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
 
-  test("upsert: batch rows win on collision; untouched partitions survive") {
+  test("upsert merges per column; untouched partitions survive") {
     val dir = Files.createTempDirectory("ms").toString
-    MergeSink.upsert(spark, table((1L, "a", 1), (2L, "b", 2)), dir, Seq("k"), Seq("p"))
-    MergeSink.upsert(spark, table((1L, "A", 1)), dir, Seq("k"), Seq("p"))
-    assert(readBack(dir) === Set((1L, "A", 1), (2L, "b", 2)))
+    def wide(rows: (Long, Option[String], Option[String], Int)*) = rows.toDF("k", "v", "w", "p")
+    MergeSink.upsert(spark, wide((1L, Some("a"), None, 1), (2L, Some("b"), None, 2)), dir, Seq("k"), Seq("p"))
+    // k=1 collides: its landed v is kept, its null w is filled by the batch
+    MergeSink.upsert(spark, wide((1L, Some("A"), Some("x"), 1)), dir, Seq("k"), Seq("p"))
+    val back = spark.read.parquet(dir).select("k", "v", "w", "p").as[(Long, Option[String], Option[String], Int)]
+      .collect().toSet
+    assert(back === Set((1L, Some("a"), Some("x"), 1), (2L, Some("b"), None, 2)))
   }
 
   test("re-applying the same batch is a no-op (idempotent)") {
@@ -45,7 +50,7 @@ class MergeSinkSpec extends AnyFunSuite {
     val parent = new java.io.File(dir).getParentFile
     val leftovers = parent.listFiles().map(_.getName).filter(n => n.contains("graft-tmp") || n.contains("graft-old"))
     assert(leftovers.isEmpty, s"leftover commit dirs: ${leftovers.mkString(",")}")
-    assert(readBack(dir) === Set((1L, "A", 1), (2L, "b", 2), (3L, "c", 3)))
+    assert(readBack(dir) === Set((1L, "a", 1), (2L, "b", 2), (3L, "c", 3)))
   }
 
   test("recover: a crash between the two swap renames is healed by the next upsert") {
@@ -88,7 +93,7 @@ class MergeSinkSpec extends AnyFunSuite {
     // the merge branch returns the batch's partitions, not the target's
     val second = MergeSink.upsert(spark, table((4L, "d", 3), (5L, "e", 3), (2L, "B", 2)), dir, Seq("k"), Seq("p"))
     assert(second.map(_.getInt(0)).sorted === Seq(2, 3))
-    assert(readBack(dir) === Set((1L, "a", 1), (2L, "B", 2), (3L, "c", 2), (4L, "d", 3), (5L, "e", 3)))
+    assert(readBack(dir) === Set((1L, "a", 1), (2L, "b", 2), (3L, "c", 2), (4L, "d", 3), (5L, "e", 3)))
   }
 
   test("an empty batch returns nothing and writes nothing") {
