@@ -20,9 +20,11 @@ import org.apache.spark.sql.SparkSession
   *    Janino and the JIT would compile the same classes again. The engine
   *    adds no session artifacts, so nothing needs isolating.
   *  - `spark.sql.codegen.cache.maxEntries=1000`: one CAN invocation cycles
-  *    through about 130 distinct classes and a `contract_iterative` pass
-  *    about 210; Spark's default of 100 (LRU) would evict each class before
-  *    its next use.
+  *    through about 130 distinct classes and a cold `contract_iterative`
+  *    pass about 130 as well (about 210 compiles: in local mode a class
+  *    compiles once under the driver thread's class loader and once under
+  *    the executor task thread's); Spark's default of 100 (LRU) would evict
+  *    each class before its next use.
   */
 object GraftSession {
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
@@ -544,22 +544,19 @@ object Dedup {
     *
     * Each round is a few aggregations + joins, shuffle ~ |edges|,
     * checkpointed flat; the fixpoint test is an edge checksum (count, sum of
-    * a per-edge hash), one aggregate job per round. A mined near-dup graph
-    * is usually tiny relative to its corpus (edges ∝ duplicate pairs, not
-    * documents), so below `smallGraphThreshold` the rounds are skipped for
-    * a driver union-find (`driverUnionFind`) that yields the identical
-    * labels.
+    * a per-edge hash), one aggregate job per round.
+    *
+    * Size gate (`SmallGraph`, shared with `LinkGraph`'s loops): a mined
+    * near-dup graph is usually tiny relative to its corpus (edges ∝
+    * duplicate pairs, not documents). When the DISTINCT (idA, idB) rows
+    * after the cast, self-pairs included, number at most
+    * `SmallGraph.MaxEdges` (2^17), the gate's one job collects them and a
+    * driver union-find (`driverUnionFind`) yields the identical labels with
+    * no per-round job; above it the rounds run.
     *
     * Id contract: `idA` and `idB` must be integral (Byte/Short/Int/Long);
     * both are cast to long, so labels are always long. Any other type
     * raises IllegalArgumentException before a Spark job runs.
-    *
-    * `smallGraphThreshold` is compared with the number of DISTINCT
-    * (idA, idB) rows after the cast, self-pairs included — exactly the rows
-    * the driver fallback collects. The gate is one aggregate job, and its
-    * result doubles as the distributed rounds' first fixpoint checksum, so
-    * neither side runs a separate count(); 0 forces the distributed rounds
-    * on any non-empty graph.
     *
     * Output: (id, label) for every node appearing in `pairs`, label = the
     * component's minimum id. Throws IllegalStateException if the rounds do
@@ -569,8 +566,23 @@ object Dedup {
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIters: Int = 25,
-      smallGraphThreshold: Long = 1L << 17): DataFrame = {
+      maxIters: Int = 25): DataFrame =
+    componentsWith(pairs, idA, idB, maxIters, SmallGraph.collect)
+
+  /** `connectedComponents`' distributed rounds at any graph size. */
+  private[operators] def connectedComponentsDistributed(
+      pairs: DataFrame,
+      idA: String = "id_a",
+      idB: String = "id_b",
+      maxIters: Int = 25): DataFrame =
+    componentsWith(pairs, idA, idB, maxIters, SmallGraph.never)
+
+  private def componentsWith(
+      pairs: DataFrame,
+      idA: String,
+      idB: String,
+      maxIters: Int,
+      gate: SmallGraph.Gate): DataFrame = {
     Seq(idA, idB).foreach { c =>
       val t = pairs.select(col(c)).schema.head.dataType
       require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
@@ -583,6 +595,13 @@ object Dedup {
       .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
       .distinct()
       .localCheckpoint(true)
+    gate(raw) match {
+      case Some(rows) => SmallGraph.frame(pairs, Seq("id", "label"), driverUnionFind(rows))
+      case None       => componentRounds(raw, maxIters)
+    }
+  }
+
+  private def componentRounds(raw: DataFrame, maxIters: Int): DataFrame = {
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val mins = sym
@@ -616,13 +635,7 @@ object Dedup {
         coalesce(sum(pmod(xxhash64(col("u"), col("v")), lit(P))), lit(0L)).as("h")).head()
       (r.getLong(0), r.getLong(1))
     }
-    var last = sig(raw)
-    if (last._1 <= smallGraphThreshold) {
-      val es = raw.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val ss = pairs.sparkSession
-      import ss.implicits._
-      return driverUnionFind(es).toDF("id", "label")
-    }
+    var last      = sig(raw)
     var edges     = raw
     var iter      = 0
     var converged = false
@@ -646,25 +659,35 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 
-  /** Driver-side union-find (path compression, min-id roots) over a
-    * collected edge list — `connectedComponents`' size-gated small-graph
-    * fallback. Returns (id -> component min) for every endpoint id
-    * appearing in `es`.
+  /** Driver-side union-find (path compression, min-id roots) over the
+    * collected (u, v) rows — `connectedComponents`' side of the size gate.
+    * Returns (id, component min) for every endpoint id, with
+    * `componentRounds`' null semantics: a pair with a null end joins
+    * nothing, and a null endpoint is one (null, null) row.
     */
-  private def driverUnionFind(es: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x0: Long): Long = {
+  private def driverUnionFind(rows: Array[Row]): Seq[Row] = {
+    val nodes  = new SmallGraph.Nodes
+    val us     = rows.map(nodes(_, 0))
+    val vs     = rows.map(nodes(_, 1))
+    val parent = Array.tabulate(nodes.size)(identity)
+    def find(x0: Int): Int = {
       var x = x0
-      while (parent.getOrElse(x, x) != x) x = parent.getOrElse(x, x)
+      while (parent(x) != x) x = parent(x)
       var y = x0
-      while (parent.getOrElse(y, y) != y) { val n = parent(y); parent(y) = x; y = n }
+      while (parent(y) != x) { val n = parent(y); parent(y) = x; y = n }
       x
     }
-    es.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    us.indices.foreach { k =>
+      if (us(k) >= 0 && vs(k) >= 0) {
+        val ra = find(us(k)); val rb = find(vs(k))
+        if (ra != rb) {
+          if (nodes.id(ra) < nodes.id(rb)) parent(rb) = ra else parent(ra) = rb
+        }
+      }
     }
-    es.flatMap { case (a, b) => Seq(a, b) }.distinct.map(id => (id, find(id))).toSeq
+    val hasNull = us.contains(-1) || vs.contains(-1)
+    (0 until nodes.size).map(i => Row(nodes.id(i), nodes.id(find(i)))) ++
+      (if (hasNull) Seq(Row(null, null)) else Nil)
   }
 
   /** Near-dedup with the CONNECTED-COMPONENTS survivor policy: one survivor

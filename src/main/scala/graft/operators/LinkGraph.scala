@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Link-graph score propagation (PageRank family) for corpus curation:
@@ -38,8 +40,17 @@ import org.apache.spark.sql.functions._
   * loop end (`lazyRounds`). The former per-round eager checkpoint cost one
   * driver job barrier + block materialization per round and bought nothing
   * at any scale (measured: the barrier latency, not the compute, dominated
-  * the iterative family's bench cells). Node count never materializes on
-  * the driver.
+  * the iterative family's bench cells).
+  *
+  * Size gate (`SmallGraph`, shared with `Dedup.connectedComponents`):
+  * `propagate`, `hits` and `labelPropagation` checkpoint their edge frame,
+  * and when it has at most `SmallGraph.MaxEdges` (2^17) rows the gate's
+  * one job collects it and the same integer recurrence runs in plain Scala
+  * on the driver, with no per-round job, returning a local DataFrame with
+  * the distributed path's columns, types and rows (nulls included; under
+  * ANSI a long overflow raises SparkArithmeticException on both sides).
+  * Above the gate the distributed rounds below run, and the node count
+  * never materializes on the driver.
   */
 object LinkGraph {
 
@@ -68,7 +79,29 @@ object LinkGraph {
       iters: Int,
       dampingPct: Int = 85,
       scale: Long = 1000000000L,
-      seed: Option[Column] = None): DataFrame = {
+      seed: Option[Column] = None): DataFrame =
+    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, SmallGraph.collect)
+
+  /** `propagate`'s distributed rounds at any graph size. */
+  private[operators] def propagateDistributed(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      dampingPct: Int = 85,
+      scale: Long = 1000000000L,
+      seed: Option[Column] = None): DataFrame =
+    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, SmallGraph.never)
+
+  private def propagateWith(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      dampingPct: Int,
+      scale: Long,
+      seed: Option[Column],
+      gate: SmallGraph.Gate): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
@@ -77,6 +110,30 @@ object LinkGraph {
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .localCheckpoint(true) // reused every round: materialize once
+    val base = (100L - dampingPct) * scale / 100L
+    // the driver side needs the seed predicate on each endpoint: the gate
+    // evaluates it in the same job that collects the edges
+    val tagged = seed.fold(e) { p =>
+      e.withColumn("id", col("src")).withColumn("__sp", p)
+        .withColumn("id", col("dst")).withColumn("__dp", p)
+        .select("src", "dst", "__sp", "__dp")
+    }
+    gate(tagged) match {
+      case Some(rows) =>
+        SmallGraph.frame(edges, Seq("id", "score"),
+          propagateLocal(rows, iters, dampingPct, scale, base, seed.isDefined, SmallGraph.longs(edges)))
+      case None =>
+        propagateRounds(e, iters, dampingPct, scale, base, seed)
+    }
+  }
+
+  private def propagateRounds(
+      e: DataFrame,
+      iters: Int,
+      dampingPct: Int,
+      scale: Long,
+      base: Long,
+      seed: Option[Column]): DataFrame = {
     val deg0 = e.groupBy("src").agg(count(lit(1)).as("__deg"))
     // r15 optimization: fold the loop-INVARIANT degree onto the edge frame
     // ONCE (one co-partitioned/hash-keyed join at setup) instead of
@@ -88,7 +145,6 @@ object LinkGraph {
     val eDeg = e.join(deg0, Seq("src"))
       .select(col("src"), col("dst"), col("__deg"))
       .localCheckpoint(true)
-    val base = (100L - dampingPct) * scale / 100L
     // per-node restart mass / initial charge: uniform, or seed-gated
     val baseCol  = seed.map(p => when(p, lit(base)).otherwise(lit(0L))).getOrElse(lit(base))
     val scoreCol = seed.map(p => when(p, lit(scale)).otherwise(lit(0L))).getOrElse(lit(scale))
@@ -115,6 +171,52 @@ object LinkGraph {
     }
   }
 
+  /** `propagateRounds` on collected (src, dst[, src seed, dst seed]) rows,
+    * with Spark's null semantics: a null src sends nothing (the src join
+    * drops it), a null dst receives nothing (the node join never matches
+    * it), and a null endpoint is one node with a null id. `longs` overflows
+    * as Spark's `sum` and `*` do.
+    */
+  private def propagateLocal(
+      rows: Array[Row],
+      iters: Int,
+      dampingPct: Int,
+      scale: Long,
+      base: Long,
+      seeded: Boolean,
+      longs: SmallGraph.Longs): Seq[Row] = {
+    val nodes = new SmallGraph.Nodes
+    val src   = rows.map(nodes(_, 0))
+    val dst   = rows.map(nodes(_, 1))
+    val n     = nodes.size
+    // a predicate's null counts as false, as in `when(p, ..)`; slot n is
+    // the null node
+    val isSeed = new Array[Boolean](n + 1)
+    if (seeded) rows.indices.foreach { k =>
+      def tag(i: Int) = !rows(k).isNullAt(i) && rows(k).getBoolean(i)
+      isSeed(if (src(k) < 0) n else src(k)) = tag(2)
+      isSeed(if (dst(k) < 0) n else dst(k)) = tag(3)
+    }
+    def charged(i: Int, v: Long) = if (!seeded || isSeed(i)) v else 0L
+    val deg = new Array[Long](n)
+    src.foreach(s => if (s >= 0) deg(s) += 1)
+    var score = Array.tabulate(n + 1)(charged(_, scale))
+    (1 to iters).foreach { _ =>
+      val mass = new Array[Long](n)
+      rows.indices.foreach { k =>
+        val s = src(k); val d = dst(k)
+        if (s >= 0 && d >= 0) mass(d) = longs.add(mass(d), score(s) / deg(s))
+      }
+      score = Array.tabulate(n + 1) { i =>
+        val m = if (i < n) mass(i) else 0L
+        longs.add(charged(i, base), longs.mul(dampingPct.toLong, m) / 100L)
+      }
+    }
+    val hasNull = src.contains(-1) || dst.contains(-1)
+    (0 until n).map(i => Row(nodes.id(i), score(i))) ++
+      (if (hasNull) Seq(Row(null, score(n))) else Nil)
+  }
+
   /** HITS hub/authority scores (Kleinberg) — the bipartite companion to
     * `propagate`: an AUTHORITY is pointed at by good hubs, a HUB points at
     * good authorities, the two reinforcing mutually. For corpus curation
@@ -139,12 +241,39 @@ object LinkGraph {
       srcCol: String,
       dstCol: String,
       iters: Int,
-      scale: Long = 1000000L): DataFrame = {
+      scale: Long = 1000000L): DataFrame =
+    hitsWith(edges, srcCol, dstCol, iters, scale, SmallGraph.collect)
+
+  /** `hits`' distributed rounds at any graph size. */
+  private[operators] def hitsDistributed(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      scale: Long = 1000000L): DataFrame =
+    hitsWith(edges, srcCol, dstCol, iters, scale, SmallGraph.never)
+
+  private def hitsWith(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      scale: Long,
+      gate: SmallGraph.Gate): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1, s"scale must be positive, got $scale")
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .localCheckpoint(true)
+    gate(e) match {
+      case Some(rows) =>
+        SmallGraph.frame(edges, Seq("id", "hub", "auth"),
+          hitsLocal(rows, iters, scale, SmallGraph.longs(edges)))
+      case None       => hitsRounds(e, iters, scale)
+    }
+  }
+
+  private def hitsRounds(e: DataFrame, iters: Int, scale: Long): DataFrame = {
     val nodes = e
       .select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
@@ -187,6 +316,41 @@ object LinkGraph {
       iter += 1
     }
     nodes.join(hub, Seq("id")).join(auth, Seq("id"))
+  }
+
+  /** `hitsRounds` on collected (src, dst) rows, with Spark's null
+    * semantics: an edge with a null end still sums into the null group,
+    * whose total counts toward the max that normalizes the half-round (the
+    * aggregate is checkpointed whole), and the final id joins drop a null
+    * node. `longs` overflows as Spark's `sum` and `*` do.
+    */
+  private def hitsLocal(rows: Array[Row], iters: Int, scale: Long, longs: SmallGraph.Longs): Seq[Row] = {
+    val nodes = new SmallGraph.Nodes
+    val src   = rows.map(nodes(_, 0))
+    val dst   = rows.map(nodes(_, 1))
+    val n     = nodes.size
+    // one half-round: `from` scores flow along each edge whose `from` end
+    // is a node into its `to` end (slot n: the null group)
+    def half(from: Array[Int], to: Array[Int], score: Array[Long]): Array[Long] = {
+      val sums  = new Array[Long](n + 1)
+      val group = new Array[Boolean](n + 1)
+      rows.indices.foreach { k =>
+        if (from(k) >= 0) {
+          val t = if (to(k) < 0) n else to(k)
+          sums(t) = longs.add(sums(t), score(from(k)))
+          group(t) = true
+        }
+      }
+      val mx = (0 to n).filter(group).map(sums).foldLeft(1L)(math.max)
+      Array.tabulate(n)(i => longs.mul(sums(i), scale) / mx)
+    }
+    var hub  = Array.fill(n)(scale)
+    var auth = Array.fill(n)(scale)
+    (1 to iters).foreach { _ =>
+      auth = half(src, dst, hub)
+      hub = half(dst, src, auth)
+    }
+    (0 until n).map(i => Row(nodes.id(i), hub(i), auth(i)))
   }
 
   /** Per-node triangle count + local clustering coefficient — the standard
@@ -343,13 +507,37 @@ object LinkGraph {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame =
+    labelPropagationWith(edges, srcCol, dstCol, iters, SmallGraph.collect)
+
+  /** `labelPropagation`'s distributed rounds at any graph size. */
+  private[operators] def labelPropagationDistributed(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int): DataFrame =
+    labelPropagationWith(edges, srcCol, dstCol, iters, SmallGraph.never)
+
+  private def labelPropagationWith(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      iters: Int,
+      gate: SmallGraph.Gate): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    // `=!=` is null on a null endpoint, so the filter drops those edges too
     val dir = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    val e = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true) // reused every round
+    gate(dir) match {
+      case Some(rows) => SmallGraph.frame(edges, Seq("id", "label"), labelPropagationLocal(rows, iters))
+      case None       => labelPropagationRounds(dir, iters)
+    }
+  }
+
+  private def labelPropagationRounds(dir: DataFrame, iters: Int): DataFrame = {
+    val e = dir.union(dir.select(col("dst").as("src"), col("src").as("dst")))
     // after symmetrization every node appears as a src. r16: each round
     // references the previous round's frame exactly once (the e-join), so
     // rounds compose lazily (`lazyRounds`, the `propagate` posture — the
@@ -364,6 +552,36 @@ object LinkGraph {
         .agg(min(struct((-col("__v")).as("nv"), col("label").as("l"))).as("__w"))
         .select(col("id"), col("__w.l").as("label"))
     }
+  }
+
+  /** `labelPropagationRounds` on the collected self-loop-free, null-free
+    * directed edge rows: each node hears every neighbor's label once per
+    * edge between them, in either direction. */
+  private def labelPropagationLocal(rows: Array[Row], iters: Int): Seq[Row] = {
+    val nodes = new SmallGraph.Nodes
+    val src   = rows.map(nodes(_, 0))
+    val dst   = rows.map(nodes(_, 1))
+    val n     = nodes.size
+    val heard = Array.fill(n)(ArrayBuffer.empty[Int])
+    rows.indices.foreach { k => heard(dst(k)) += src(k); heard(src(k)) += dst(k) }
+    var label = Array.tabulate(n)(nodes.id)
+    (1 to iters).foreach { _ =>
+      label = Array.tabulate(n) { v =>
+        // most votes wins, ties to the smallest label: scan the sorted
+        // labels and keep a run only when it is strictly longer
+        val ls = heard(v).iterator.map(label).toArray
+        java.util.Arrays.sort(ls)
+        var best = ls(0); var bestN = 0; var i = 0
+        while (i < ls.length) {
+          var j = i
+          while (j < ls.length && ls(j) == ls(i)) j += 1
+          if (j - i > bestN) { best = ls(i); bestN = j - i }
+          i = j
+        }
+        best
+      }
+    }
+    (0 until n).map(i => Row(nodes.id(i), label(i)))
   }
 
   /** Rounds between lineage cuts in `lazyRounds`. */

@@ -192,10 +192,10 @@ class DedupSpec extends AnyFunSuite {
   test("connectedComponents collapses a 64-chain within log rounds; distributed == driver fallback") {
     import spark.implicits._
     // a 64-node PATH: diameter 63 — star contraction collapses it in
-    // ~log2(64) rounds (smallGraphThreshold = 0 forces the DISTRIBUTED
+    // ~log2(64) rounds (the distributed entry forces the DISTRIBUTED
     // rounds — the convergence claim is about them, not the driver fallback)
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(chain, maxIters = 10, smallGraphThreshold = 0)
+    val got = Dedup.connectedComponentsDistributed(chain, maxIters = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (1L to 64L).map(_ -> 1L).toMap)
 
@@ -205,7 +205,7 @@ class DedupSpec extends AnyFunSuite {
     val edges = (1 to 120).map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter { case (a, b) => a != b } :+ ((99L, 99L))
     val df   = edges.toDF("id_a", "id_b")
-    val dist = Dedup.connectedComponents(df, smallGraphThreshold = 0)
+    val dist = Dedup.connectedComponentsDistributed(df)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val drv  = Dedup.connectedComponents(df)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -218,11 +218,11 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val longs = Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val ints  = longs.select(col("id_a").cast("int"), col("id_b").cast("int"))
-    def labels(df: org.apache.spark.sql.DataFrame, threshold: Long) =
-      Dedup.connectedComponents(df, smallGraphThreshold = threshold)
+    def labels(df: org.apache.spark.sql.DataFrame, distributed: Boolean) =
+      (if (distributed) Dedup.connectedComponentsDistributed(df) else Dedup.connectedComponents(df))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Seq(0L, 1L << 17).foreach { t =>
-      assert(labels(ints, t) === labels(longs, t), s"smallGraphThreshold=$t")
+    Seq(true, false).foreach { d =>
+      assert(labels(ints, d) === labels(longs, d), s"distributed=$d")
     }
     // rows that fail if ever computed: the type check must fire before
     // any Spark job runs
@@ -230,6 +230,17 @@ class DedupSpec extends AnyFunSuite {
       lit("a").as("id_a"), raise_error(lit("pairs were evaluated")).cast("string").as("id_b"))
     val e = intercept[IllegalArgumentException](Dedup.connectedComponents(strs))
     assert(e.getMessage.contains("'id_a'") && e.getMessage.contains("StringType"), e.getMessage)
+  }
+
+  test("connectedComponents: an id wider than long is refused alike on both sides of the gate") {
+    // components do no arithmetic on ids, so the id contract is where a
+    // value beyond long range stops: before the cast and before any job
+    val wide = spark.sql(
+      "SELECT CAST('10000000000000000000' AS DECIMAL(20,0)) AS id_a, CAST(1 AS DECIMAL(20,0)) AS id_b")
+    val a = intercept[IllegalArgumentException](Dedup.connectedComponents(wide))
+    val b = intercept[IllegalArgumentException](Dedup.connectedComponentsDistributed(wide))
+    assert(a.getClass === b.getClass && a.getMessage === b.getMessage)
+    assert(a.getMessage.contains("DecimalType(20,0)"), a.getMessage)
   }
 
   test("simHashWidePairs: 62-bit pigeonhole mining == brute force; buckets finer than 16-bit") {

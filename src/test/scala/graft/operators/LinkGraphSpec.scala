@@ -3,14 +3,11 @@ package graft.operators
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.GraftSession
-
-class LinkGraphSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local()
-  import spark.implicits._
+/** The imperative references, shared with `GraphGateProps`. */
+object LinkGraphSpec {
 
   /** The recurrence re-spelled imperatively — the test's independent truth. */
-  private def reference(
+  def reference(
       edges: Seq[(Long, Long)],
       iters: Int,
       d: Long = 85,
@@ -31,7 +28,7 @@ class LinkGraphSpec extends AnyFunSuite {
 
   /** Deterministic LPA re-spelled imperatively: symmetrized self-loop-free
     * edge list, synchronous rounds, most votes wins, ties to the min label. */
-  private def lpaReference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+  def lpaReference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val dir = edges.filter { case (a, b) => a != b }
     val sym = dir ++ dir.map(_.swap)
     var label = sym.map(_._1).distinct.map(n => n -> n).toMap
@@ -43,6 +40,12 @@ class LinkGraphSpec extends AnyFunSuite {
     }
     label
   }
+}
+
+class LinkGraphSpec extends AnyFunSuite {
+  import LinkGraphSpec._
+  private lazy val spark = graft.SparkTestSession.spark
+  import spark.implicits._
 
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
     LinkGraph.propagate(edges.toDF("src", "dst"), "src", "dst", iters)
@@ -226,5 +229,75 @@ class LinkGraphSpec extends AnyFunSuite {
     val t = LinkGraph.labelPropagation(tie, "src", "dst", iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(t(2L) === 1L)
+  }
+
+  /** Spark jobs `body` starts, counted after the listener bus drained. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc, 60000L)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener { override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet() }
+    sc.addSparkListener(l)
+    try { body; ListenerBridge.drain(sc, 60000L) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("size gate: one job on either side; the driver side runs no per-round job") {
+    // edge frames over 8 partitions, one just under and one just over the gate
+    def edges(n: Long) = spark.range(n).select(col("id").as("src"), (col("id") + 1).as("dst"))
+      .repartition(8).localCheckpoint(true)
+    val (under, over) = (edges(SmallGraph.MaxEdges.toLong), edges(SmallGraph.MaxEdges + 1L))
+    var got: Option[Array[org.apache.spark.sql.Row]] = None
+    assert(jobsOf { got = SmallGraph.collect(under) } === 1)
+    assert(got.map(_.length) === Some(SmallGraph.MaxEdges))
+    assert(jobsOf { got = SmallGraph.collect(over) } === 1)
+    assert(got === None)
+    // the whole driver-side call: the edge checkpoint and the gate, for any
+    // number of rounds
+    val small = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    Seq(1, 9).foreach { iters =>
+      assert(jobsOf(LinkGraph.propagate(small, "src", "dst", iters)) === 2, s"iters=$iters")
+      assert(jobsOf(LinkGraph.labelPropagation(small, "src", "dst", iters)) === 2, s"iters=$iters")
+      assert(jobsOf(LinkGraph.hits(small, "src", "dst", iters)) === 2, s"iters=$iters")
+    }
+  }
+
+  test("a long overflow raises the same exception class on both sides of the gate") {
+    import org.apache.spark.SparkThrowable
+    def same(driver: => org.apache.spark.sql.DataFrame, distributed: => org.apache.spark.sql.DataFrame) = {
+      val a = intercept[ArithmeticException](driver.collect())
+      val b = intercept[ArithmeticException](distributed.collect())
+      assert(a.getClass === b.getClass)
+      assert(a.getClass.getName === "org.apache.spark.SparkArithmeticException")
+      assert(a.asInstanceOf[SparkThrowable].getCondition === b.asInstanceOf[SparkThrowable].getCondition)
+    }
+    // propagate: five in-edges each carrying a whole 2^61 score overflow
+    // the in-mass sum
+    val star = (1L to 5L).map(i => (i, 0L)).toDF("src", "dst")
+    val big  = Long.MaxValue / 4
+    same(LinkGraph.propagate(star, "src", "dst", 1, scale = big),
+      LinkGraph.propagateDistributed(star, "src", "dst", 1, scale = big))
+    // hits: the sum 3 * 2^40 fits, the normalizing product with 2^40 does not
+    same(LinkGraph.hits(star.limit(3), "src", "dst", 1, scale = 1L << 40),
+      LinkGraph.hitsDistributed(star.limit(3), "src", "dst", 1, scale = 1L << 40))
+    // labelPropagation does no long arithmetic (labels are ids, votes are
+    // counts): its overflow is the endpoint cast to long, shared by both sides
+    val wide = spark.sql(
+      "SELECT CAST('10000000000000000000' AS DECIMAL(20,0)) AS src, CAST(1 AS DECIMAL(20,0)) AS dst")
+    same(LinkGraph.labelPropagation(wide, "src", "dst", 1),
+      LinkGraph.labelPropagationDistributed(wide, "src", "dst", 1))
+    // with ANSI off a long wraps on both sides, to the same rows
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      assert(rows(LinkGraph.propagate(star, "src", "dst", 1, scale = big)) ===
+        rows(LinkGraph.propagateDistributed(star, "src", "dst", 1, scale = big)))
+      assert(rows(LinkGraph.hits(star.limit(3), "src", "dst", 1, scale = 1L << 40)) ===
+        rows(LinkGraph.hitsDistributed(star.limit(3), "src", "dst", 1, scale = 1L << 40)))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 }

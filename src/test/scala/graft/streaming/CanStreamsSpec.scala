@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -117,10 +118,12 @@ class CanStreamsSpec extends AnyFunSuite {
     val land = Files.createTempDirectory("paceland").toString
     val json = Files.createTempDirectory("pacejson").toString
     val ckpt = Files.createTempDirectory("paceckpt").toString
+    // distinct mtimes, one second apart in log order: the file source
+    // admits oldest first, so the listing order cannot reorder the batches
     (0 until 3).foreach { i =>
-      Files.write(
-        Paths.get(raw, s"f$i.log"),
-        file(timesync(t0), frame(1000 * i, 599, 0, speedPayload(8.0 * i))))
+      val p = Paths.get(raw, s"f$i.log")
+      Files.write(p, file(timesync(t0), frame(1000 * i, 599, 0, speedPayload(8.0 * i))))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(System.currentTimeMillis() - 10000L + i * 1000L))
     }
     val q = CanStreams.runParse(spark, raw, land, ckpt, json, maxFilesPerTrigger = Some(1))
     q.awaitTermination()
