@@ -552,7 +552,9 @@ object Dedup {
     * after the cast, self-pairs included, number at most
     * `SmallGraph.MaxEdges` (2^17), the gate's one job collects them and a
     * driver union-find (`driverUnionFind`) yields the identical labels with
-    * no per-round job; above it the rounds run.
+    * no per-round job, all of it done when this is called; above it the
+    * rounds run, one job more than the gate-free loop (the gate's collect,
+    * before the first round's checksum).
     *
     * Id contract: `idA` and `idB` must be integral (Byte/Short/Int/Long);
     * both are cast to long, so labels are always long. Any other type

@@ -49,8 +49,13 @@ import org.apache.spark.sql.functions._
   * on the driver, with no per-round job, returning a local DataFrame with
   * the distributed path's columns, types and rows (nulls included; under
   * ANSI a long overflow raises SparkArithmeticException on both sides).
-  * Above the gate the distributed rounds below run, and the node count
-  * never materializes on the driver.
+  * The driver side does all its work when the operator is called, so its
+  * overflow raises at the call; the distributed side raises at the call
+  * too when the overflow is in a checkpointed round, but `hits` leaves its
+  * last normalization lazy, so an overflow there waits for the action.
+  * Both sides read `spark.sql.ansi.enabled` at the call. Above the gate
+  * the distributed rounds below run, and the node count never
+  * materializes on the driver.
   */
 object LinkGraph {
 

@@ -304,30 +304,34 @@ class AdversarialSpec extends AnyFunSuite {
       (4L, 5L),                     // 5 dangles: no out-edges
       (6L, 6L)).toDF("src", "dst")
 
-    // PageRank: every node present, scores non-negative; the 2-cycle pair
-    // symmetric; self-loops legitimately retain their own mass
-    val pr = LinkGraph.propagate(edges, "src", "dst", iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pr.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L))
-    assert(pr.values.forall(_ >= 0L))
-    assert(pr(1L) === pr(6L)) // identical sole-self-loop structure
+    // the loops run on both sides of the `SmallGraph` size gate: the public
+    // entry (the driver recurrence on a graph this small) and the
+    // distributed rounds
+    LinkGraphSpec.sides.foreach { side =>
+      // PageRank: every node present, scores non-negative; the 2-cycle pair
+      // symmetric; self-loops legitimately retain their own mass
+      val pr = side.propagate(edges, iters = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(pr.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L), side.name)
+      assert(pr.values.forall(_ >= 0L), side.name)
+      assert(pr(1L) === pr(6L), side.name) // identical sole-self-loop structure
 
-    // personalized: restart mass gated on a seed none of the self-loopers
-    // satisfy — their score must drain to 0
-    val ppr = LinkGraph.propagate(edges, "src", "dst", iters = 5,
-      seed = Some(col("id") === 3L))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ppr(1L) === 0L && ppr(2L) === 0L && ppr(6L) === 0L)
-    assert(ppr(3L) > 0L && ppr(4L) > 0L && ppr(5L) > 0L) // flow reaches the dangler
+      // personalized: restart mass gated on a seed none of the self-loopers
+      // satisfy — their score must drain to 0
+      val ppr = side.propagate(edges, iters = 5, seed = Some(col("id") === 3L))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(ppr(1L) === 0L && ppr(2L) === 0L && ppr(6L) === 0L, side.name)
+      assert(ppr(3L) > 0L && ppr(4L) > 0L && ppr(5L) > 0L, side.name) // flow reaches the dangler
 
-    // HITS: converges, max-normalized to scale, no node missing; the pure
-    // dangler (5) is auth-only, never a hub
-    val h = LinkGraph.hits(edges, "src", "dst", iters = 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(h.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L))
-    assert(h.values.forall { case (hub, auth) =>
-      hub >= 0L && hub <= 1000000L && auth >= 0L && auth <= 1000000L })
-    assert(h(5L)._1 === 0L) // no out-edges -> zero hub
+      // HITS: converges, max-normalized to scale, no node missing; the pure
+      // dangler (5) is auth-only, never a hub
+      val h = side.hits(edges, iters = 3)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(h.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L), side.name)
+      assert(h.values.forall { case (hub, auth) =>
+        hub >= 0L && hub <= 1000000L && auth >= 0L && auth <= 1000000L }, side.name)
+      assert(h(5L)._1 === 0L, side.name) // no out-edges -> zero hub
+    }
 
     // triangles: self-loops and multi-edges drop; this graph has none
     val t = LinkGraph.triangles(edges, "src", "dst")

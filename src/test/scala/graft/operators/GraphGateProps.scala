@@ -12,7 +12,8 @@ import org.scalacheck.Prop.{forAllNoShrink => forAll, propBoolean}
   * multi-edges, self-loops, dangling nodes and null endpoints; null-free
   * seedless cases are also checked against `LinkGraphSpec`'s imperative
   * references. Few cases (each distributed side is a set of Spark jobs),
-  * wide generators; rounds reach past `lazyRounds`' lineage cut at 8.
+  * wide generators; `propagate` and `labelPropagation` rounds reach past
+  * both of `lazyRounds`' lineage cuts at 8 and 16.
   */
 object GraphGateProps extends Properties("GraphGate") {
 
@@ -67,7 +68,7 @@ object GraphGateProps extends Properties("GraphGate") {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   property("propagate: driver == distributed (seeded or not); == reference") =
-    forAll(graphGen, Gen.choose(0, 10), Gen.choose(0, 100), Gen.oneOf(1000000000L, 977L), seedGen) {
+    forAll(graphGen, Gen.choose(0, 17), Gen.choose(0, 100), Gen.oneOf(1000000000L, 977L), seedGen) {
       (es, iters, d, scale, seed) =>
         val df  = frame(es)
         val drv = LinkGraph.propagate(df, "src", "dst", iters, d, scale, seed)
@@ -78,15 +79,20 @@ object GraphGateProps extends Properties("GraphGate") {
           (ref :| "driver != LinkGraphSpec.reference")
     }
 
-  property("hits: driver == distributed") =
+  property("hits: driver == distributed; == reference") =
     forAll(graphGen, Gen.choose(1, 4), Gen.oneOf(1000000L, 13L)) { (es, iters, scale) =>
-      val df = frame(es)
-      agree(LinkGraph.hits(df, "src", "dst", iters, scale),
-        LinkGraph.hitsDistributed(df, "src", "dst", iters, scale))
+      val df  = frame(es)
+      val drv = LinkGraph.hits(df, "src", "dst", iters, scale)
+      val ref = nullFree(es).forall { plain =>
+        drv.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap ==
+          LinkGraphSpec.hitsReference(plain, iters, scale)
+      }
+      agree(drv, LinkGraph.hitsDistributed(df, "src", "dst", iters, scale)) &&
+        (ref :| "driver != LinkGraphSpec.hitsReference")
     }
 
   property("labelPropagation: driver == distributed; == reference") =
-    forAll(graphGen, Gen.choose(1, 10)) { (es, iters) =>
+    forAll(graphGen, Gen.choose(1, 17)) { (es, iters) =>
       val df  = frame(es)
       val drv = LinkGraph.labelPropagation(df, "src", "dst", iters)
       val ref = nullFree(es).forall(plain => longMap(drv) == LinkGraphSpec.lpaReference(plain, iters))

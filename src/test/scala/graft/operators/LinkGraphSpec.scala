@@ -1,10 +1,41 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The imperative references, shared with `GraphGateProps`. */
+/** The imperative references, shared with `GraphGateProps`, and the two
+  * sides of the `SmallGraph` size gate the hand-checked cases run on. */
 object LinkGraphSpec {
+
+  /** One side of the size gate: the graph loops over a (src, dst) frame. */
+  sealed abstract class Side(val name: String) {
+    def propagate(e: DataFrame, iters: Int, dampingPct: Int = 85,
+        seed: Option[Column] = None): DataFrame
+    def hits(e: DataFrame, iters: Int): DataFrame
+    def labelPropagation(e: DataFrame, iters: Int): DataFrame
+  }
+
+  /** The public entries: on these specs' graphs (far under the gate) the
+    * driver recurrence. */
+  object Driver extends Side("driver") {
+    def propagate(e: DataFrame, iters: Int, dampingPct: Int, seed: Option[Column]) =
+      LinkGraph.propagate(e, "src", "dst", iters, dampingPct, seed = seed)
+    def hits(e: DataFrame, iters: Int) = LinkGraph.hits(e, "src", "dst", iters)
+    def labelPropagation(e: DataFrame, iters: Int) =
+      LinkGraph.labelPropagation(e, "src", "dst", iters)
+  }
+
+  /** The package-private distributed rounds, at any size. */
+  object Distributed extends Side("distributed") {
+    def propagate(e: DataFrame, iters: Int, dampingPct: Int, seed: Option[Column]) =
+      LinkGraph.propagateDistributed(e, "src", "dst", iters, dampingPct, seed = seed)
+    def hits(e: DataFrame, iters: Int) = LinkGraph.hitsDistributed(e, "src", "dst", iters)
+    def labelPropagation(e: DataFrame, iters: Int) =
+      LinkGraph.labelPropagationDistributed(e, "src", "dst", iters)
+  }
+
+  val sides: Seq[Side] = Seq(Driver, Distributed)
 
   /** The recurrence re-spelled imperatively — the test's independent truth. */
   def reference(
@@ -24,6 +55,27 @@ object LinkGraphSpec {
       score = nodes.map(n => n -> (base + d * in.getOrElse(n, 0L) / 100)).toMap
     }
     score
+  }
+
+  /** HITS re-spelled imperatively: each half-round sums the counterpart
+    * score over edges (multi-edges count multiply), then max-normalizes
+    * back to `scale` with the max clamped at 1. Returns (hub, auth). */
+  def hitsReference(
+      edges: Seq[(Long, Long)],
+      iters: Int,
+      scale: Long = 1000000L): Map[Long, (Long, Long)] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    def norm(sums: Map[Long, Long]): Map[Long, Long] = {
+      val mx = (sums.values ++ Seq(1L)).max
+      nodes.map(n => n -> sums.getOrElse(n, 0L) * scale / mx).toMap
+    }
+    var hub  = nodes.map(_ -> scale).toMap
+    var auth = nodes.map(_ -> scale).toMap
+    (1 to iters).foreach { _ =>
+      auth = norm(edges.groupBy(_._2).view.mapValues(_.map(e => hub(e._1)).sum).toMap)
+      hub  = norm(edges.groupBy(_._1).view.mapValues(_.map(e => auth(e._2)).sum).toMap)
+    }
+    nodes.map(n => n -> ((hub(n), auth(n)))).toMap
   }
 
   /** Deterministic LPA re-spelled imperatively: symmetrized self-loop-free
@@ -47,49 +99,55 @@ class LinkGraphSpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
   import spark.implicits._
 
-  private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
-    LinkGraph.propagate(edges.toDF("src", "dst"), "src", "dst", iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def longMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def run(side: Side, edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
+    longMap(side.propagate(edges.toDF("src", "dst"), iters))
+
+  // every case below runs on both sides of the size gate: the public entry
+  // (the driver recurrence on these small graphs) and the distributed rounds
 
   test("matches the imperative recurrence on a cyclic graph with a hub and a dangler") {
     // triangle 1->2->3->1, hub 4 -> {1,2,3}, dangler 5 (in-edges only),
     // multi-edge 4->1 twice (must count twice)
     val edges = Seq[(Long, Long)](
       (1, 2), (2, 3), (3, 1), (4, 1), (4, 2), (4, 3), (4, 1), (1, 5))
-    (0 to 4).foreach { iters =>
-      assert(run(edges, iters) === reference(edges, iters), s"iters=$iters")
-    }
+    for (side <- sides; iters <- 0 to 4)
+      assert(run(side, edges, iters) === reference(edges, iters), s"${side.name} iters=$iters")
   }
 
   test("deterministic across partitioning; zero iters is the uniform base") {
     val edges = (1L to 200L).map(i => (i, i * 7 % 97 + 1))
     val df    = edges.toDF("src", "dst")
-    val a = LinkGraph.propagate(df, "src", "dst", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = LinkGraph.propagate(df.repartition(13), "src", "dst", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a === b)
-    assert(run(edges, 0).values.toSet === Set(1000000000L))
+    sides.foreach { side =>
+      val a = side.propagate(df, 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val b = side.propagate(df.repartition(13), 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(a === b, side.name)
+      assert(run(side, edges, 0).values.toSet === Set(1000000000L), side.name)
+    }
   }
 
   test("rounds across the fixed checkpoint cadence match the imperative references (propagate + LPA)") {
-    // rounds compose lazily with a lineage cut every 8 rounds; 8, 9 and 17
-    // rounds end on, just past and two cuts past that boundary
+    // the distributed rounds compose lazily with a lineage cut every 8
+    // rounds; 8, 9 and 17 rounds end on, just past and two cuts past that
+    // boundary (the driver side has no cut: the same counts must agree)
     val edges = (1L to 200L).map(i => (i, i * 7 % 97 + 1))
-    Seq(8, 9, 17).foreach { iters =>
-      assert(run(edges, iters) === reference(edges, iters), s"iters=$iters")
+    for (side <- sides; iters <- Seq(8, 9, 17)) {
+      assert(run(side, edges, iters) === reference(edges, iters), s"${side.name} iters=$iters")
+      assert(longMap(side.labelPropagation(edges.toDF("src", "dst"), iters)) ===
+        lpaReference(edges, iters), s"${side.name} lpa iters=$iters")
     }
-    val lpa = LinkGraph.labelPropagation(edges.toDF("src", "dst"), "src", "dst", 9)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lpa === lpaReference(edges, 9))
   }
 
   test("damping=100 on a 2-cycle conserves each node's mass exactly") {
-    val scores = LinkGraph
-      .propagate(Seq[(Long, Long)]((1, 2), (2, 1)).toDF("src", "dst"),
-        "src", "dst", 5, dampingPct = 100)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(scores === Map(1L -> 1000000000L, 2L -> 1000000000L))
+    sides.foreach { side =>
+      val scores = longMap(side.propagate(
+        Seq[(Long, Long)]((1, 2), (2, 1)).toDF("src", "dst"), 5, dampingPct = 100))
+      assert(scores === Map(1L -> 1000000000L, 2L -> 1000000000L), side.name)
+    }
   }
 
   test("hits: hand-computed 2-round hub/authority scores; pure roles score 0 on the other axis") {
@@ -99,14 +157,17 @@ class LinkGraphSpec extends AnyFunSuite {
     // Round 2: ar 10=1.5e6, 11=12=1e6 -> auth=(1e6, 666666, 666666);
     // hr 1=2333332, 2=1e6 -> hub=(1e6, 1e12//2333332=428571).
     val edges = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L)).toDF("src", "dst")
-    val got = LinkGraph
-      .hits(edges, "src", "dst", iters = 2)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(got(1L) === ((1000000L, 0L)), "the broad hub is the max hub; it has no in-links")
-    assert(got(2L) === ((428571L, 0L)))
-    assert(got(10L) === ((0L, 1000000L)), "the doubly-cited authority is the max authority")
-    assert(got(11L) === ((0L, 666666L)))
-    assert(got(12L) === ((0L, 666666L)))
+    sides.foreach { side =>
+      val got = side.hits(edges, iters = 2)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got(1L) === ((1000000L, 0L)),
+        s"${side.name}: the broad hub is the max hub; it has no in-links")
+      assert(got(2L) === ((428571L, 0L)), side.name)
+      assert(got(10L) === ((0L, 1000000L)),
+        s"${side.name}: the doubly-cited authority is the max authority")
+      assert(got(11L) === ((0L, 666666L)), side.name)
+      assert(got(12L) === ((0L, 666666L)), side.name)
+    }
   }
 
   test("personalized propagate: restart mass lands only on seeds; flow reaches the chain") {
@@ -115,11 +176,11 @@ class LinkGraphSpec extends AnyFunSuite {
     // iter1: s(1)=base=1.5e8, s(2)=85%*1e9=8.5e8, s(3)=0;
     // iter2: s(1)=1.5e8, s(2)=85%*1.5e8=1.275e8, s(3)=85%*8.5e8=7.225e8.
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val got = LinkGraph
-      .propagate(edges, "src", "dst", iters = 2, seed = Some(col("id") === 1))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(
-      1L -> 150000000L, 2L -> 127500000L, 3L -> 722500000L))
+    sides.foreach { side =>
+      val got = longMap(side.propagate(edges, iters = 2, seed = Some(col("id") === 1)))
+      assert(got === Map(
+        1L -> 150000000L, 2L -> 127500000L, 3L -> 722500000L), side.name)
+    }
   }
 
   test("triangles: hand-computed counts; multi-edges collapse, self-loops drop") {
@@ -210,9 +271,10 @@ class LinkGraphSpec extends AnyFunSuite {
       (1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (3L, 10L)).toDF("src", "dst")
-    val got = LinkGraph.labelPropagation(edges, "src", "dst", iters = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 3L, 11L -> 3L, 12L -> 3L))
+    sides.foreach { side =>
+      val got = longMap(side.labelPropagation(edges, iters = 3))
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 3L, 11L -> 3L, 12L -> 3L), side.name)
+    }
   }
 
   test("labelPropagation: multi-edges vote multiply, ties break to min label, self-loops dropped") {
@@ -220,15 +282,15 @@ class LinkGraphSpec extends AnyFunSuite {
     // node 2 hears label 1 twice (duplicated edge) vs label 3 once -> 1;
     // node 1 hears {2} only; node 3 hears {2} only; 5's self-loop vanishes
     val edges = Seq((1L, 2L), (1L, 2L), (3L, 2L), (5L, 5L)).toDF("src", "dst")
-    val got = LinkGraph.labelPropagation(edges, "src", "dst", iters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 2L, 2L -> 1L, 3L -> 2L))
-    assert(!got.contains(5L))
-    // tie case: node 2 hears 1 and 3 once each -> min label 1
-    val tie = Seq((1L, 2L), (3L, 2L)).toDF("src", "dst")
-    val t = LinkGraph.labelPropagation(tie, "src", "dst", iters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(t(2L) === 1L)
+    val tie   = Seq((1L, 2L), (3L, 2L)).toDF("src", "dst")
+    sides.foreach { side =>
+      val got = longMap(side.labelPropagation(edges, iters = 1))
+      assert(got === Map(1L -> 2L, 2L -> 1L, 3L -> 2L), side.name)
+      assert(!got.contains(5L), side.name)
+      // tie case: node 2 hears 1 and 3 once each -> min label 1
+      val t = longMap(side.labelPropagation(tie, iters = 1))
+      assert(t(2L) === 1L, side.name)
+    }
   }
 
   /** Spark jobs `body` starts, counted after the listener bus drained. */
@@ -299,5 +361,28 @@ class LinkGraphSpec extends AnyFunSuite {
       assert(rows(LinkGraph.hits(star.limit(3), "src", "dst", 1, scale = 1L << 40)) ===
         rows(LinkGraph.hitsDistributed(star.limit(3), "src", "dst", 1, scale = 1L << 40)))
     } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
+
+  test("when the overflow raises: the driver side at the call, the distributed side by its last lazy round") {
+    // propagate: the distributed rounds end on an eager checkpoint, so both
+    // sides raise at the call
+    val star = (1L to 5L).map(i => (i, 0L)).toDF("src", "dst")
+    val big  = Long.MaxValue / 4
+    intercept[ArithmeticException](LinkGraph.propagate(star, "src", "dst", 1, scale = big))
+    intercept[ArithmeticException](LinkGraph.propagateDistributed(star, "src", "dst", 1, scale = big))
+    // hits on 1 -> {2, 3} at scale 2^31: every sum fits and the authority
+    // products are 2^62, but the last hub product 2^32 * 2^31 overflows.
+    // The distributed rounds checkpoint each half-round's sums and leave
+    // the last normalization lazy, so only the action meets it; the driver
+    // side has run every round before it returns.
+    val fan = Seq((1L, 2L), (1L, 3L)).toDF("src", "dst")
+    intercept[ArithmeticException](LinkGraph.hits(fan, "src", "dst", 1, scale = 1L << 31))
+    val pending = LinkGraph.hitsDistributed(fan, "src", "dst", 1, scale = 1L << 31)
+    // both sides read ANSI at the call: turning it off before the action
+    // does not make the pending product wrap
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try intercept[ArithmeticException](pending.collect())
+    finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 }
