@@ -89,23 +89,22 @@ object Bpe {
     * that occur once memorizes the corpus tail instead of learning
     * subword structure).
     *
-    * Two execution paths, one algorithm:
+    * Two execution paths, one algorithm, chosen by the `DriverGate` size
+    * gate (shared with the graph loops) over the checkpointed dictionary:
     *
-    *  - **Collected-dictionary fast path** (default when the dictionary
-    *    is at most `collectDictThreshold` distinct words): the corpus is
-    *    still touched exactly once (the one partial-agg shuffle to
-    *    (word, count)), but the merge LOOP runs driver-side over the
-    *    collected dictionary — the posture every published BPE trainer
+    *  - **Collected dictionary** (at most `DriverGate.MaxRows`, 2^17,
+    *    distinct words): the corpus is still touched exactly once (the
+    *    one partial-agg shuffle to (word, count)), and the gate's one job
+    *    collects the dictionary; the merge LOOP then runs driver-side
+    *    with no per-merge job — the posture every published BPE trainer
     *    actually uses, because a production 32k-merge vocab as 32k
-    *    sequential Spark jobs is hours of pure scheduler latency while
-    *    the dictionary it iterates is a few million strings. Character
-    *    splitting is by CODE POINT (matching UTF8String.substring
-    *    semantics on the distributed path), and the pair count / argmax /
-    *    greedy-leftmost apply are line-for-line the same rules, so the
-    *    two paths are certifiably bit-equal (BpeSpec law
-    *    `fastPath == distributed`).
-    *  - **Distributed loop** (dictionary above the threshold, or
-    *    `collectDictThreshold = 0` to force it): one vocab-frame Spark
+    *    sequential Spark jobs is hours of pure scheduler latency.
+    *    Character splitting is by CODE POINT (matching
+    *    UTF8String.substring semantics on the distributed path), and the
+    *    pair count / argmax / greedy-leftmost apply are line-for-line the
+    *    same rules, so the two paths are certifiably bit-equal (BpeSpec
+    *    law `train == trainDistributed`).
+    *  - **Distributed loop** (a larger dictionary): one vocab-frame Spark
     *    job per merge, per-step localCheckpoint so lineage stays one
     *    merge deep. Unbounded in dictionary size; pays `numMerges`
     *    scheduler round-trips.
@@ -121,21 +120,36 @@ object Bpe {
       textCol: String,
       numMerges: Int,
       minPairCount: Long = 2L,
-      endOfWord: Boolean = true,
-      collectDictThreshold: Long = 4000000L): DataFrame = {
+      endOfWord: Boolean = true): DataFrame =
+    trainWith(docs, textCol, numMerges, minPairCount, endOfWord, DriverGate.collect)
+
+  /** `train`'s distributed merge loop at any dictionary size. */
+  private[operators] def trainDistributed(
+      docs: DataFrame,
+      textCol: String,
+      numMerges: Int,
+      minPairCount: Long = 2L,
+      endOfWord: Boolean = true): DataFrame =
+    trainWith(docs, textCol, numMerges, minPairCount, endOfWord, DriverGate.never)
+
+  private def trainWith(
+      docs: DataFrame,
+      textCol: String,
+      numMerges: Int,
+      minPairCount: Long,
+      endOfWord: Boolean,
+      gate: DriverGate.Gate): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(minPairCount >= 1L, s"minPairCount must be >= 1, got $minPairCount")
     val spark = docs.sparkSession
     import spark.implicits._
 
     val wc = wordCounts(docs, textCol).localCheckpoint(true)
-    val merges =
-      if (collectDictThreshold > 0L && wc.count() <= collectDictThreshold)
-        trainDictionary(
-          wc.collect().map(r => (r.getString(0), r.getLong(1))),
-          numMerges, minPairCount, endOfWord)
-      else
-        trainDistributed(wc, numMerges, minPairCount, endOfWord)
+    val merges = gate(wc) match {
+      case Some(rows) =>
+        trainDictionary(rows.map(r => (r.getString(0), r.getLong(1))), numMerges, minPairCount, endOfWord)
+      case None => mergeRounds(wc, numMerges, minPairCount, endOfWord)
+    }
     merges.toDF("rank", "left", "right", "merged", "pair_count")
   }
 
@@ -143,7 +157,7 @@ object Bpe {
     * job + localCheckpoint per merge. Dictionary-size-unbounded; the
     * scale escape hatch when the vocabulary itself won't collect.
     */
-  private def trainDistributed(
+  private def mergeRounds(
       wc: DataFrame,
       numMerges: Int,
       minPairCount: Long,

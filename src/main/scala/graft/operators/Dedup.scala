@@ -546,45 +546,51 @@ object Dedup {
     * checkpointed flat; the fixpoint test is an edge checksum (count, sum of
     * a per-edge hash), one aggregate job per round.
     *
-    * Size gate (`SmallGraph`, shared with `LinkGraph`'s loops): a mined
-    * near-dup graph is usually tiny relative to its corpus (edges ∝
-    * duplicate pairs, not documents). When the DISTINCT (idA, idB) rows
-    * after the cast, self-pairs included, number at most
-    * `SmallGraph.MaxEdges` (2^17), the gate's one job collects them and a
+    * Size gate (`DriverGate`, shared with `LinkGraph`'s loops and
+    * `Bpe.train`): a mined near-dup graph is usually tiny relative to its
+    * corpus (edges ∝ duplicate pairs, not documents). When the DISTINCT
+    * (idA, idB) rows after the cast, self-pairs included, number at most
+    * `DriverGate.MaxRows` (2^17), the gate's one job collects them and a
     * driver union-find (`driverUnionFind`) yields the identical labels with
     * no per-round job, all of it done when this is called; above it the
     * rounds run, one job more than the gate-free loop (the gate's collect,
     * before the first round's checksum).
+    *
+    * Failure contract: below the gate the answer is exact and never
+    * raises for a valid input (union-find has no round bound). Above it
+    * the rounds raise IllegalStateException when they have not reached
+    * the fixpoint after `MaxRounds` (25) rounds (~log2(n) are needed).
     *
     * Id contract: `idA` and `idB` must be integral (Byte/Short/Int/Long);
     * both are cast to long, so labels are always long. Any other type
     * raises IllegalArgumentException before a Spark job runs.
     *
     * Output: (id, label) for every node appearing in `pairs`, label = the
-    * component's minimum id. Throws IllegalStateException if the rounds do
-    * not reach the fixpoint within `maxIters` (~log2(n) are needed).
+    * component's minimum id.
     */
   def connectedComponents(
       pairs: DataFrame,
       idA: String = "id_a",
-      idB: String = "id_b",
-      maxIters: Int = 25): DataFrame =
-    componentsWith(pairs, idA, idB, maxIters, SmallGraph.collect)
+      idB: String = "id_b"): DataFrame =
+    componentsWith(pairs, idA, idB, MaxRounds, DriverGate.collect)
+
+  /** The distributed rounds' bound in `connectedComponents`. */
+  private val MaxRounds = 25
 
   /** `connectedComponents`' distributed rounds at any graph size. */
   private[operators] def connectedComponentsDistributed(
       pairs: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIters: Int = 25): DataFrame =
-    componentsWith(pairs, idA, idB, maxIters, SmallGraph.never)
+      maxIters: Int = MaxRounds): DataFrame =
+    componentsWith(pairs, idA, idB, maxIters, DriverGate.never)
 
   private def componentsWith(
       pairs: DataFrame,
       idA: String,
       idB: String,
       maxIters: Int,
-      gate: SmallGraph.Gate): DataFrame = {
+      gate: DriverGate.Gate): DataFrame = {
     Seq(idA, idB).foreach { c =>
       val t = pairs.select(col(c)).schema.head.dataType
       require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
@@ -598,7 +604,7 @@ object Dedup {
       .distinct()
       .localCheckpoint(true)
     gate(raw) match {
-      case Some(rows) => SmallGraph.frame(pairs, Seq("id", "label"), driverUnionFind(rows))
+      case Some(rows) => DriverGate.frame(pairs, Seq("id", "label"), driverUnionFind(rows))
       case None       => componentRounds(raw, maxIters)
     }
   }
@@ -668,7 +674,7 @@ object Dedup {
     * nothing, and a null endpoint is one (null, null) row.
     */
   private def driverUnionFind(rows: Array[Row]): Seq[Row] = {
-    val nodes  = new SmallGraph.Nodes
+    val nodes  = new DriverGate.Nodes
     val us     = rows.map(nodes(_, 0))
     val vs     = rows.map(nodes(_, 1))
     val parent = Array.tabulate(nodes.size)(identity)
@@ -1178,7 +1184,7 @@ object Dedup {
       maxBucket = maxBucket)
 
   /** Wide (up to 62-bit) SimHash fingerprint as a PER-ROW projection:
-    * distinct token hashes via the native one-pass `shingle_hashes(text, 1)`
+    * distinct token hashes via the native one-pass `shingleHashes(text, 1)`
     * and the fingerprint via the native `SimHashExpr` permuted-parity fold —
     * zero shuffle at any corpus size (simHash16 below shuffles the exploded
     * token table). Wider fingerprints keep pigeonhole buckets small at

@@ -6,46 +6,47 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.MathUtils
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** The one size gate in front of every graph loop (`LinkGraph.propagate`,
-  * `LinkGraph.hits`, `LinkGraph.labelPropagation`,
-  * `Dedup.connectedComponents`). A graph of at most `MaxEdges` edge rows
+/** The one size gate in front of every iterative loop: the graph loops
+  * (`LinkGraph.propagate`, `LinkGraph.hits`, `LinkGraph.labelPropagation`,
+  * `Dedup.connectedComponents`) over their edge rows, and `Bpe.train`'s
+  * merge loop over its word-count rows. Input of at most `MaxRows` rows
   * fits one core ("Scalability! But at what COST?", McSherry et al.,
-  * HotOS 2015): the operator collects its edge list once and runs its
-  * exact integer recurrence in plain Scala on the driver, with no
-  * per-round job, then returns a local DataFrame with the distributed
-  * path's columns, types and rows. Above the gate the distributed rounds
-  * run. The rows counted are those of the operator's checkpointed edge
-  * frame. The driver side does its work when the operator is called, not
-  * when the returned frame is used.
+  * HotOS 2015): the operator collects it once and runs its exact
+  * recurrence in plain Scala on the driver, with no per-round job, then
+  * returns a local DataFrame with the distributed path's columns, types
+  * and rows. Above the gate the distributed rounds run. The rows counted
+  * are those of the operator's checkpointed input frame. The driver side
+  * does its work when the operator is called, not when the returned frame
+  * is used.
   *
-  * Why 2^17 is a memory bound, not a time crossover: the driver side was
-  * faster at every size measured, 4-6x in wall time up to 2^20 edges
-  * (local[2] on a 4-core host; the sf0.1 chain graph's 293,924 edges:
-  * propagate 0.28 s against 1.36 s, hits 0.30 against 2.19, LPA 0.54
-  * against 2.61, CC 0.63 against 3.47). The collected rows cost ~100
+  * Why 2^17 is a memory bound, not a time crossover: the graph loops'
+  * driver side was faster at every size measured, 4-6x in wall time up to
+  * 2^20 edges (local[2] on a 4-core host; the sf0.1 chain graph's 293,924
+  * edges: propagate 0.28 s against 1.36 s, hits 0.30 against 2.19, LPA
+  * 0.54 against 2.61, CC 0.63 against 3.47). The collected rows cost ~100
   * bytes each on the driver (13 MB at 2^17, 105 MB at 2^20), and 2^17 is
   * the bound CC's driver fallback already held. It also keeps the sf0.1
   * chain graph on the distributed rounds, which the sf0.1 oracle cells
   * certify end to end. Above the gate its job costs about a `count()` of
-  * the edges (0.12 s against 0.10 s at sf0.1).
+  * the rows (0.12 s against 0.10 s at sf0.1).
   */
-private[operators] object SmallGraph {
+private[operators] object DriverGate {
 
-  /** Edge rows at or below which a graph loop runs on the driver. */
-  val MaxEdges: Int = 1 << 17
+  /** Input rows at or below which a loop runs on the driver. */
+  val MaxRows: Int = 1 << 17
 
-  /** What a graph loop asks of the gate: the edge rows to iterate on the
+  /** What a loop asks of the gate: the input rows to iterate on the
     * driver, or None for the distributed rounds. */
   type Gate = DataFrame => Option[Array[Row]]
 
-  /** `edges`' rows when there are at most `MaxEdges` of them, else None.
+  /** `input`'s rows when there are at most `MaxRows` of them, else None.
     * One Spark job either way: a single task reads the partitions in turn
-    * and stops after `MaxEdges + 1` rows, so a large graph ships no more
+    * and stops after `MaxRows + 1` rows, so a large input ships no more
     * than that to the driver.
     */
-  val collect: Gate = { edges =>
-    val rows = edges.coalesce(1).limit(MaxEdges + 1).collect()
-    if (rows.length <= MaxEdges) Some(rows) else None
+  val collect: Gate = { input =>
+    val rows = input.coalesce(1).limit(MaxRows + 1).collect()
+    if (rows.length <= MaxRows) Some(rows) else None
   }
 
   /** The gate that always answers None: the distributed rounds at any size

@@ -42,9 +42,10 @@ import org.apache.spark.sql.functions._
   * at any scale (measured: the barrier latency, not the compute, dominated
   * the iterative family's bench cells).
   *
-  * Size gate (`SmallGraph`, shared with `Dedup.connectedComponents`):
+  * Size gate (`DriverGate`, shared with `Dedup.connectedComponents` and
+  * `Bpe.train`):
   * `propagate`, `hits` and `labelPropagation` checkpoint their edge frame,
-  * and when it has at most `SmallGraph.MaxEdges` (2^17) rows the gate's
+  * and when it has at most `DriverGate.MaxRows` (2^17) rows the gate's
   * one job collects it and the same integer recurrence runs in plain Scala
   * on the driver, with no per-round job, returning a local DataFrame with
   * the distributed path's columns, types and rows (nulls included; under
@@ -85,7 +86,7 @@ object LinkGraph {
       dampingPct: Int = 85,
       scale: Long = 1000000000L,
       seed: Option[Column] = None): DataFrame =
-    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, SmallGraph.collect)
+    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, DriverGate.collect)
 
   /** `propagate`'s distributed rounds at any graph size. */
   private[operators] def propagateDistributed(
@@ -96,7 +97,7 @@ object LinkGraph {
       dampingPct: Int = 85,
       scale: Long = 1000000000L,
       seed: Option[Column] = None): DataFrame =
-    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, SmallGraph.never)
+    propagateWith(edges, srcCol, dstCol, iters, dampingPct, scale, seed, DriverGate.never)
 
   private def propagateWith(
       edges: DataFrame,
@@ -106,7 +107,7 @@ object LinkGraph {
       dampingPct: Int,
       scale: Long,
       seed: Option[Column],
-      gate: SmallGraph.Gate): DataFrame = {
+      gate: DriverGate.Gate): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct must be in [0,100], got $dampingPct")
@@ -125,8 +126,8 @@ object LinkGraph {
     }
     gate(tagged) match {
       case Some(rows) =>
-        SmallGraph.frame(edges, Seq("id", "score"),
-          propagateLocal(rows, iters, dampingPct, scale, base, seed.isDefined, SmallGraph.longs(edges)))
+        DriverGate.frame(edges, Seq("id", "score"),
+          propagateLocal(rows, iters, dampingPct, scale, base, seed.isDefined, DriverGate.longs(edges)))
       case None =>
         propagateRounds(e, iters, dampingPct, scale, base, seed)
     }
@@ -189,8 +190,8 @@ object LinkGraph {
       scale: Long,
       base: Long,
       seeded: Boolean,
-      longs: SmallGraph.Longs): Seq[Row] = {
-    val nodes = new SmallGraph.Nodes
+      longs: DriverGate.Longs): Seq[Row] = {
+    val nodes = new DriverGate.Nodes
     val src   = rows.map(nodes(_, 0))
     val dst   = rows.map(nodes(_, 1))
     val n     = nodes.size
@@ -247,7 +248,7 @@ object LinkGraph {
       dstCol: String,
       iters: Int,
       scale: Long = 1000000L): DataFrame =
-    hitsWith(edges, srcCol, dstCol, iters, scale, SmallGraph.collect)
+    hitsWith(edges, srcCol, dstCol, iters, scale, DriverGate.collect)
 
   /** `hits`' distributed rounds at any graph size. */
   private[operators] def hitsDistributed(
@@ -256,7 +257,7 @@ object LinkGraph {
       dstCol: String,
       iters: Int,
       scale: Long = 1000000L): DataFrame =
-    hitsWith(edges, srcCol, dstCol, iters, scale, SmallGraph.never)
+    hitsWith(edges, srcCol, dstCol, iters, scale, DriverGate.never)
 
   private def hitsWith(
       edges: DataFrame,
@@ -264,7 +265,7 @@ object LinkGraph {
       dstCol: String,
       iters: Int,
       scale: Long,
-      gate: SmallGraph.Gate): DataFrame = {
+      gate: DriverGate.Gate): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1, s"scale must be positive, got $scale")
     val e = edges
@@ -272,8 +273,8 @@ object LinkGraph {
       .localCheckpoint(true)
     gate(e) match {
       case Some(rows) =>
-        SmallGraph.frame(edges, Seq("id", "hub", "auth"),
-          hitsLocal(rows, iters, scale, SmallGraph.longs(edges)))
+        DriverGate.frame(edges, Seq("id", "hub", "auth"),
+          hitsLocal(rows, iters, scale, DriverGate.longs(edges)))
       case None       => hitsRounds(e, iters, scale)
     }
   }
@@ -329,8 +330,8 @@ object LinkGraph {
     * aggregate is checkpointed whole), and the final id joins drop a null
     * node. `longs` overflows as Spark's `sum` and `*` do.
     */
-  private def hitsLocal(rows: Array[Row], iters: Int, scale: Long, longs: SmallGraph.Longs): Seq[Row] = {
-    val nodes = new SmallGraph.Nodes
+  private def hitsLocal(rows: Array[Row], iters: Int, scale: Long, longs: DriverGate.Longs): Seq[Row] = {
+    val nodes = new DriverGate.Nodes
     val src   = rows.map(nodes(_, 0))
     val dst   = rows.map(nodes(_, 1))
     val n     = nodes.size
@@ -513,7 +514,7 @@ object LinkGraph {
       srcCol: String,
       dstCol: String,
       iters: Int): DataFrame =
-    labelPropagationWith(edges, srcCol, dstCol, iters, SmallGraph.collect)
+    labelPropagationWith(edges, srcCol, dstCol, iters, DriverGate.collect)
 
   /** `labelPropagation`'s distributed rounds at any graph size. */
   private[operators] def labelPropagationDistributed(
@@ -521,14 +522,14 @@ object LinkGraph {
       srcCol: String,
       dstCol: String,
       iters: Int): DataFrame =
-    labelPropagationWith(edges, srcCol, dstCol, iters, SmallGraph.never)
+    labelPropagationWith(edges, srcCol, dstCol, iters, DriverGate.never)
 
   private def labelPropagationWith(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      gate: SmallGraph.Gate): DataFrame = {
+      gate: DriverGate.Gate): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // `=!=` is null on a null endpoint, so the filter drops those edges too
     val dir = edges
@@ -536,7 +537,7 @@ object LinkGraph {
       .filter(col("src") =!= col("dst"))
       .localCheckpoint(true) // reused every round
     gate(dir) match {
-      case Some(rows) => SmallGraph.frame(edges, Seq("id", "label"), labelPropagationLocal(rows, iters))
+      case Some(rows) => DriverGate.frame(edges, Seq("id", "label"), labelPropagationLocal(rows, iters))
       case None       => labelPropagationRounds(dir, iters)
     }
   }
@@ -563,7 +564,7 @@ object LinkGraph {
     * directed edge rows: each node hears every neighbor's label once per
     * edge between them, in either direction. */
   private def labelPropagationLocal(rows: Array[Row], iters: Int): Seq[Row] = {
-    val nodes = new SmallGraph.Nodes
+    val nodes = new DriverGate.Nodes
     val src   = rows.map(nodes(_, 0))
     val dst   = rows.map(nodes(_, 1))
     val n     = nodes.size

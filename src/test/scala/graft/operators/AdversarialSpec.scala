@@ -304,7 +304,7 @@ class AdversarialSpec extends AnyFunSuite {
       (4L, 5L),                     // 5 dangles: no out-edges
       (6L, 6L)).toDF("src", "dst")
 
-    // the loops run on both sides of the `SmallGraph` size gate: the public
+    // the loops run on both sides of the `DriverGate` size gate: the public
     // entry (the driver recurrence on a graph this small) and the
     // distributed rounds
     LinkGraphSpec.sides.foreach { side =>

@@ -153,39 +153,42 @@ class BpeSpec extends AnyFunSuite {
       Seq.fill(5)("lower") ++ Seq.fill(4)("lowest") ++ Seq.fill(3)("newer") ++
         Seq.fill(2)("wider") ++ Seq.fill(6)("low") ++ Seq.fill(2)("newest") ++
         Seq.fill(2)("a𝄞a𝄞") ++ Seq("singleton")).toDF("text")
-    def table(threshold: Long, minPair: Long = 2L) =
-      Bpe.train(docs, "text", numMerges = 8, minPairCount = minPair,
-          endOfWord = true, collectDictThreshold = threshold)
+    def table(distributed: Boolean, minPair: Long = 2L) =
+      (if (distributed) Bpe.trainDistributed(docs, "text", numMerges = 8, minPairCount = minPair)
+       else Bpe.train(docs, "text", numMerges = 8, minPairCount = minPair))
         .orderBy("rank").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
         .toSeq
-    val fast = table(Long.MaxValue) // dictionary far under: fast path
-    val dist = table(0L)            // 0 forces the distributed loop
+    val fast = table(distributed = false) // dictionary far under the gate: fast path
+    val dist = table(distributed = true)
     assert(fast === dist)
     assert(fast.size === 8) // this corpus sustains all 8 merges
-    // the routing cut is the dictionary row count (8 distinct words):
-    // both sides of the threshold produce the same table
-    assert(table(8L) === fast && table(7L) === fast)
     // early stop agrees across paths too: floor 6 cuts the table short at
     // the same rank with the same merges (steps with pair_count < 6 gone)
-    val fastStop = table(Long.MaxValue, minPair = 6L)
-    assert(fastStop === table(0L, minPair = 6L))
+    val fastStop = table(distributed = false, minPair = 6L)
+    assert(fastStop === table(distributed = true, minPair = 6L))
     assert(fastStop.nonEmpty && fastStop.size < 8)
     assert(fastStop === fast.take(fastStop.size))
   }
 
   test("train: fast path reproduces every hand-computed table (default threshold routes small dicts driver-side)") {
     import spark.implicits._
-    // fixtureDocs ran the fast path in the tests above (default
-    // threshold); force the distributed loop once to pin the equality on
-    // the ORIGINAL hand-computed fixture too.
-    val dist = Bpe.train(fixtureDocs, "text", numMerges = 10, minPairCount = 2,
-        endOfWord = true, collectDictThreshold = 0L)
+    // fixtureDocs ran the fast path in the tests above (far under the
+    // gate); run the distributed loop once to pin the equality on the
+    // ORIGINAL hand-computed fixture too.
+    val dist = Bpe.trainDistributed(fixtureDocs, "text", numMerges = 10, minPairCount = 2)
       .orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
     assert(dist === Seq(
       (1L, "a", "b</w>", "ab</w>", 5L),
       (2L, "a", "b", "ab", 3L),
       (3L, "ab", "ab</w>", "abab</w>", 3L)))
+  }
+
+  test("train under the size gate: the same Spark jobs at 1 merge and at 8") {
+    import spark.implicits._
+    val docs = (Seq.fill(5)("lower") ++ Seq.fill(4)("lowest") ++ Seq.fill(3)("newer")).toDF("text")
+    val jobs = Seq(1, 8).map(m => LinkGraphSpec.jobsOf(Bpe.train(docs, "text", numMerges = m)))
+    assert(jobs.head === jobs.last, s"jobs at 1 and 8 merges: $jobs")
   }
 }

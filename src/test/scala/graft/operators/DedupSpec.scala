@@ -57,12 +57,11 @@ class DedupSpec extends AnyFunSuite {
       .select(Dedup.minHashSigCol(Dedup.shingleHashes(col("text"), 3), 8))
       .head()
     assert(empty.isNullAt(0))
-    // registered as a SQL function via SparkSessionExtensions
-    val sql = spark
-      .sql("SELECT minhash_sig(shingle_hashes('a b c d e', 3), 4) AS s")
+    val sig4 = spark.range(1)
+      .select(Dedup.minHashSigCol(Dedup.shingleHashes(lit("a b c d e"), 3), 4).as("s"))
       .head()
       .getAs[scala.collection.Seq[Long]]("s")
-    assert(sql.length === 4)
+    assert(sig4.length === 4)
   }
 
   test("jaccardPairs finds identical and near-identical docs, not disjoint ones") {
@@ -214,6 +213,16 @@ class DedupSpec extends AnyFunSuite {
     assert(dist.keySet === edges.flatMap { case (a, b) => Seq(a, b) }.toSet)
   }
 
+  test("connectedComponents failure contract: past its round bound the distributed side raises; " +
+    "under the gate the public entry answers") {
+    import spark.implicits._
+    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](Dedup.connectedComponentsDistributed(chain, maxIters = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+    val got = Dedup.connectedComponents(chain).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (1L to 64L).map(_ -> 1L).toMap)
+  }
+
   test("connectedComponents id contract: int ids label like long ids; string ids are rejected") {
     import spark.implicits._
     val longs = Seq((1L, 3L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
@@ -284,13 +293,15 @@ class DedupSpec extends AnyFunSuite {
     val nearHam = java.lang.Long.bitCount(sig(1L) ^ sig(3L))
     val farHam  = java.lang.Long.bitCount(sig(1L) ^ sig(4L))
     assert(nearHam < farHam, s"near=$nearHam far=$farHam")
-    // registered as a SQL function via SparkSessionExtensions
-    val viaSql = spark
-      .sql("SELECT simhash_bits(shingle_hashes('a b c', 1), 62) AS s")
+    // the expression over a literal == the operator over a one-row frame
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val viaExpr = spark.range(1)
+      .select(ColumnBridge.column(graft.functions.SimHashExpr(
+        ColumnBridge.expression(Dedup.shingleHashes(lit("a b c"), 1)), 62)))
       .head().getLong(0)
     val viaOp = Dedup.simHashWide(Seq((9L, "a b c")).toDF("doc_id", "text"), "doc_id", "text", 62)
       .head().getLong(1)
-    assert(viaSql === viaOp)
+    assert(viaExpr === viaOp)
   }
 
   test("simHash16 native per-row == composed explode/groupBy formulation") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAllNoShrink => forAll, propBoolean}
 
-/** Both sides of the graph-loop size gate (`SmallGraph`) agree: on random
+/** Both sides of the graph-loop size gate (`DriverGate`) agree: on random
   * graphs under the gate, each operator's public entry (the driver
   * recurrence) returns the same columns, types and rows as its
   * package-private distributed entry (the Spark rounds). The graphs carry

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The imperative references, shared with `GraphGateProps`, and the two
-  * sides of the `SmallGraph` size gate the hand-checked cases run on. */
+/** The imperative references, shared with `GraphGateProps`, the two
+  * sides of the `DriverGate` size gate the hand-checked cases run on, and
+  * the Spark job counter `BpeSpec` shares. */
 object LinkGraphSpec {
 
   /** One side of the size gate: the graph loops over a (src, dst) frame. */
@@ -36,6 +37,20 @@ object LinkGraphSpec {
   }
 
   val sides: Seq[Side] = Seq(Driver, Distributed)
+
+  /** Spark jobs `body` starts, counted after the listener bus drained. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.ListenerBridge
+    val sc = graft.SparkTestSession.spark.sparkContext
+    ListenerBridge.drain(sc, 60000L)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener { override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet() }
+    sc.addSparkListener(l)
+    try { body; ListenerBridge.drain(sc, 60000L) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 
   /** The recurrence re-spelled imperatively — the test's independent truth. */
   def reference(
@@ -293,29 +308,15 @@ class LinkGraphSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `body` starts, counted after the listener bus drained. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graftbridge.ListenerBridge
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc, 60000L)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener { override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet() }
-    sc.addSparkListener(l)
-    try { body; ListenerBridge.drain(sc, 60000L) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
-
   test("size gate: one job on either side; the driver side runs no per-round job") {
     // edge frames over 8 partitions, one just under and one just over the gate
     def edges(n: Long) = spark.range(n).select(col("id").as("src"), (col("id") + 1).as("dst"))
       .repartition(8).localCheckpoint(true)
-    val (under, over) = (edges(SmallGraph.MaxEdges.toLong), edges(SmallGraph.MaxEdges + 1L))
+    val (under, over) = (edges(DriverGate.MaxRows.toLong), edges(DriverGate.MaxRows + 1L))
     var got: Option[Array[org.apache.spark.sql.Row]] = None
-    assert(jobsOf { got = SmallGraph.collect(under) } === 1)
-    assert(got.map(_.length) === Some(SmallGraph.MaxEdges))
-    assert(jobsOf { got = SmallGraph.collect(over) } === 1)
+    assert(jobsOf { got = DriverGate.collect(under) } === 1)
+    assert(got.map(_.length) === Some(DriverGate.MaxRows))
+    assert(jobsOf { got = DriverGate.collect(over) } === 1)
     assert(got === None)
     // the whole driver-side call: the edge checkpoint and the gate, for any
     // number of rounds

@@ -14,18 +14,22 @@ import graft.operators.Dedup
   * let-binding for single-reference / Filter / Aggregate shapes) without
   * changing any RESULT, must leave throwing expressions alone, must stay
   * STABLE against CollapseProject/PushDownPredicates in the shared
-  * fixpoint batch, and must honor its kill switch.
+  * fixpoint batch, and must be switched off by Spark's own
+  * `spark.sql.optimizer.excludedRules`.
   */
 class HoistLambdaInvariantsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  private val Excluded = "spark.sql.optimizer.excludedRules"
+
+  /** `f` with the rule in the optimizer (`on`) or excluded from it. */
   private def withRule[A](on: Boolean)(f: => A): A = {
-    val prev = spark.conf.getOption(HoistLambdaInvariants.Conf)
-    spark.conf.set(HoistLambdaInvariants.Conf, on.toString)
+    val prev = spark.conf.getOption(Excluded)
+    if (on) spark.conf.unset(Excluded) else spark.conf.set(Excluded, HoistLambdaInvariants.ruleName)
     try f
     finally prev match {
-      case Some(v) => spark.conf.set(HoistLambdaInvariants.Conf, v)
-      case None    => spark.conf.unset(HoistLambdaInvariants.Conf)
+      case Some(v) => spark.conf.set(Excluded, v)
+      case None    => spark.conf.unset(Excluded)
     }
   }
 
@@ -79,7 +83,7 @@ class HoistLambdaInvariantsSpec extends AnyFunSuite {
     }
   }
 
-  test("kill switch restores the spliced plan") {
+  test("spark.sql.optimizer.excludedRules restores the spliced plan") {
     withRule(on = false) {
       assert(splitInsideLambda(composed), "disabled rule must leave the lambda as written")
     }
